@@ -209,11 +209,13 @@ class GraftTable(val spark: SparkSession, val root: String) {
     def statBound(f: StructField, c: Column): Column = f.dataType match {
       case TimestampType => unix_micros(c).cast(StringType)
       case TimestampNTZType =>
-        // micros-as-if-UTC without a session-timezone round trip (casting
-        // NTZ→TIMESTAMP would shift by the session offset and make
-        // pruning compare skewed bounds): NTZ minus the NTZ epoch is a
-        // day-time interval, whose BIGINT cast is exactly micros.
-        (c - expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'")).cast(LongType).cast(StringType)
+        // micros-as-if-UTC, the value NTZ literals carry: the cast to
+        // TIMESTAMP pins its zone to UTC, so the session time zone can't
+        // shift the bounds
+        unix_micros(org.apache.spark.sql.GraftBridge.column(
+          org.apache.spark.sql.catalyst.expressions.Cast(
+            org.apache.spark.sql.GraftBridge.expression(c), TimestampType, Some("UTC"))))
+          .cast(StringType)
       case DateType => unix_date(c).cast(StringType) // epoch-days (DATE→INT cast is illegal under ANSI)
       case dt if isAtomic(dt) => c.cast(StringType)
       case _ => lit(null).cast(StringType)
@@ -246,7 +248,7 @@ class GraftTable(val spark: SparkSession, val root: String) {
           Option(r.getAs[String](s"max__${f.name}")),
           r.getAs[Long](s"nulls__${f.name}"))
       }.toMap
-      FileEntry(rel, size, r.getAs[Long]("__numRecords"), stats)
+      FileEntry(rel, size, r.getAs[Long]("__numRecords"), stats, statsVersion = StatsVersion)
     }
   }
 

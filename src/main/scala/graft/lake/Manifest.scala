@@ -34,7 +34,15 @@ object Manifest {
       // OPTIMIZE ... BLOOM BY; advisory (absent = no bloom for that
       // column). Rewritten files never inherit blooms — only entries
       // carried over byte-identical keep theirs.
-      blooms: Map[String, String] = Map.empty)
+      blooms: Map[String, String] = Map.empty,
+      // how `stats` was written: entries without the field are version 1,
+      // whose TIMESTAMP_NTZ bounds are in seconds, not micros — pruning
+      // ignores those bounds (Pruning.mayMatch). Carried with the entry,
+      // so an untouched file inherited into a new version keeps its own.
+      statsVersion: Int = 1)
+
+  /** The stats layout `GraftTable.collectStats` writes today. */
+  val StatsVersion = 2
 
   case class TableManifest(
       version: Long,
@@ -83,7 +91,8 @@ object Manifest {
         else f.blooms.toSeq.sortBy(_._1)
           .map { case (c, p) => s"${jstr(c)}:${jstr(p)}" }
           .mkString(""","blooms":{""", ",", "}")
-      s"""{"path":${jstr(f.path)},"size":${f.size},"numRecords":${f.numRecords},"stats":$stats$blooms}"""
+      val statsVersion = if (f.statsVersion == 1) "" else s""","statsVersion":${f.statsVersion}"""
+      s"""{"path":${jstr(f.path)},"size":${f.size},"numRecords":${f.numRecords},"stats":$stats$blooms$statsVersion}"""
     }.mkString("[", ",", "]")
     val dropped =
       if (m.droppedColumns.isEmpty) ""
@@ -187,7 +196,8 @@ object Manifest {
         case Some(bo: O) => bo.m.map { case (c, pv) => c -> str(pv) }
         case _ => Map.empty[String, String]
       }
-      FileEntry(str(f("path")), lng(f("size")), lng(f("numRecords")), stats, blooms)
+      FileEntry(str(f("path")), lng(f("size")), lng(f("numRecords")), stats, blooms,
+        f.get("statsVersion").map(lng(_).toInt).getOrElse(1))
     }
     val dropped = o.get("droppedColumns") match {
       case Some(a: A) => a.xs.map(str)

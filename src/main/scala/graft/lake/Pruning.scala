@@ -86,6 +86,9 @@ object Pruning {
     def bounds(name: String): Option[(Option[Any], Option[Any], Long)] =
       for {
         field <- schema.fields.find(_.name.equalsIgnoreCase(name))
+        // stats version 1 wrote TIMESTAMP_NTZ bounds in seconds, while
+        // literals compare in micros: no bounds rather than wrong ones
+        if !(field.dataType == TimestampNTZType && file.statsVersion < 2)
         st <- file.stats.get(field.name)
       } yield (st.min.flatMap(parseBound(_, field.dataType)),
         st.max.flatMap(parseBound(_, field.dataType)), st.nullCount)

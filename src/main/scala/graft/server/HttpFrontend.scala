@@ -5,6 +5,8 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.sql.GraftContext
 import org.apache.spark.sql.DataFrame
@@ -57,7 +59,7 @@ class HttpFrontend(ctx: GraftContext, port: Int,
                    // chunked stream)
                    statementTimeoutMs: Long = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = HttpFrontend.createServer(new InetSocketAddress(port))
   private val handlerPool = java.util.concurrent.Executors.newFixedThreadPool(8)
   server.setExecutor(handlerPool)
 
@@ -111,14 +113,14 @@ class HttpFrontend(ctx: GraftContext, port: Int,
     })
     val sweep = math.max(syncMaxAgeMs / 2, 100L)
     flusher.scheduleWithFixedDelay(
-      () => try syncBuffer.flushAged() catch { case _: Throwable => () },
+      () => try syncBuffer.flushAged() catch { case NonFatal(e) => ServerLog.failure("sync age flush", e) },
       sweep, sweep, java.util.concurrent.TimeUnit.MILLISECONDS)
     if (gcIntervalMs > 0)
       // OWN scheduler thread: a long sweep (listings + deletes over
       // every table) must never delay the CDC age-flush sweep — GC
       // latency and sync durability are unrelated bounds
       gc.scheduleWithFixedDelay(
-        () => try ctx.gcSweep(gcGraceMs) catch { case _: Throwable => () },
+        () => try ctx.gcSweep(gcGraceMs) catch { case NonFatal(e) => ServerLog.failure("gc sweep", e) },
         gcIntervalMs, gcIntervalMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     server.start()
   }
@@ -130,7 +132,7 @@ class HttpFrontend(ctx: GraftContext, port: Int,
     // final flush — a sync batch accepted after flushAll would be
     // acknowledged and then dropped on JVM exit
     server.stop(1)
-    try syncBuffer.flushAll() catch { case _: Throwable => () }
+    try syncBuffer.flushAll() catch { case NonFatal(e) => ServerLog.failure("final sync flush", e) }
     handlerPool.shutdown()
   }
 
@@ -543,13 +545,33 @@ class HttpFrontend(ctx: GraftContext, port: Int,
         respond(ex, 400, s"parse error: ${e.getMessage}\n")
       case e: org.apache.spark.sql.AnalysisException =>
         respond(ex, 400, s"analysis error: ${e.getMessage}\n")
-      case e: Throwable => respond(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}\n")
+      case NonFatal(e) => respond(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}\n")
     }
+}
+
+object HttpFrontend {
+
+  /** The JDK server writes a response's headers and its body as separate
+    * socket writes. With Nagle's algorithm on, the body then waits for the
+    * client's delayed ACK of the headers: ~40 ms on every response that
+    * has one. The server reads this property once per JVM
+    * (`sun.net.httpserver.ServerConfig`), when the first server is
+    * created, so every JDK HttpServer in the process — the tests' fakes
+    * included — must be created through [[createServer]] or after
+    * [[disableNagle]]. */
+  def disableNagle(): Unit = System.setProperty("sun.net.httpserver.nodelay", "true"): Unit
+
+  /** `HttpServer.create` with Nagle's algorithm off (see [[disableNagle]]). */
+  def createServer(addr: InetSocketAddress): HttpServer = {
+    disableNagle()
+    HttpServer.create(addr, 0)
+  }
 }
 
 /** Server main: scripts/run.sh graft.server.ServerMain <dataDir> [port]. */
 object ServerMain {
   def main(args: Array[String]): Unit = {
+    HttpFrontend.disableNagle() // before anything in the JVM starts an HttpServer
     val dataDir = args.headOption.getOrElse("/tmp/graft-data")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val spark = org.apache.spark.sql.SparkSession.builder()

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   */
 object JsonLines {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-    .withZone(ZoneOffset.UTC)
+  private val ntzFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+  private val tsFmt = ntzFmt.withZone(ZoneOffset.UTC)
 
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
@@ -30,6 +30,8 @@ object JsonLines {
     case (null, _) => "null"
     case (x: java.sql.Timestamp, _) => "\"" + tsFmt.format(x.toInstant) + "\""
     case (x: java.time.Instant, _) => "\"" + tsFmt.format(x) + "\""
+    // TIMESTAMP_NTZ: the same layout, without a zone to convert from
+    case (x: java.time.LocalDateTime, _) => "\"" + ntzFmt.format(x) + "\""
     case (x: java.sql.Date, _) => "\"" + x.toString + "\""
     case (x: java.time.LocalDate, _) => "\"" + x.toString + "\""
     case (x: String, _) => "\"" + esc(x) + "\""

@@ -4,6 +4,8 @@ import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 import graft.sql.GraftContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
@@ -97,10 +99,13 @@ class PgFrontend(ctx: GraftContext, port: Int,
                   d.writeByte(0)
                 }
                 out.flush()
-              } catch { case _: Throwable => () }
-              try sock.close() catch { case _: Throwable => () }
+              } catch { case _: java.io.IOException => () } // refused client already gone
+              try sock.close() catch { case _: java.io.IOException => () }
           }
-        } catch { case _: Throwable if !running => () case _: Throwable => () }
+        } catch {
+          case NonFatal(_) if !running => () // stop() closed the socket under accept
+          case NonFatal(e) => ServerLog.failure("pg accept", e)
+        }
       }
     }, "graft-pg-accept")
     acceptor.setDaemon(true)
@@ -338,8 +343,11 @@ class PgFrontend(ctx: GraftContext, port: Int,
             failed = true
         }
       }
-    } catch { case _: Throwable => () }
-    finally {
+    } catch {
+      // the client went away mid-message: nobody is left to answer
+      case _: java.io.IOException => ()
+      case NonFatal(e) => ServerLog.failure(s"pg connection $pid", e)
+    } finally {
       backends.remove(pid)
       sock.close()
     }

@@ -5,7 +5,7 @@ import java.time.Instant
 import graft.catalog.Catalog
 import graft.lake.{GraftTable, LakeIO, Manifest}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessions, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -317,68 +317,84 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   private val readSessions =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), SparkSession]
 
-  // staging external tables: name -> (format, resolved location, options).
-  // Temp views are per-session, so the recipe (not the view) is the source
-  // of truth — snapshots rebuild the reader from it.
-  private val stagingTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String, Map[String, String])]
+  /** A staging external table's recipe: format, resolved location,
+    * options, and the schema resolved once at CREATE (the reference's
+    * ListingTable fixes its schema the same way). Temp views are
+    * per-session, so the recipe (not the view) is the source of truth —
+    * snapshots rebuild the reader from it without re-inferring. */
+  private case class Staging(format: String, location: String,
+                             options: Map[String, String], schema: StructType)
 
+  private val stagingTables = scala.collection.concurrent.TrieMap.empty[String, Staging]
+
+  /** Reader for an external location. With `schema` (the one resolved at
+    * CREATE), file formats skip schema inference — for parquet and CSV
+    * that is a Spark job per read; the files are still listed afresh. */
   private[sql] def readExternal(s: SparkSession, fmt: String, loc: String,
-                                options: Map[String, String]): DataFrame = fmt match {
-    case "PARQUET" => s.read.parquet(loc)
-    case "ICEBERG" =>
-      // read-only iceberg scan via the spec's JSON+Avro metadata layer
-      // (reference src/catalog/metastore.rs:237-246). OPTIONS
-      // ('as_of' '<ISO instant|epoch ms>') pins the read to the latest
-      // snapshot at or before the timestamp (static-snapshot registration,
-      // reference src/context/iceberg.rs).
-      val asOf = options.get("as_of").map { v =>
-        scala.util.Try(java.time.Instant.parse(v).toEpochMilli)
-          .getOrElse(v.trim.toLong)
-      }
-      graft.sources.IcebergScan.read(s, loc, asOf)
-    case "DELTA" | "DELTATABLE" =>
-      // read-only interop scan of a real Delta Lake (_delta_log) table —
-      // what the reference's delta-rs storage layer itself writes
-      // (reference src/catalog/metastore.rs:176-207)
-      graft.sources.DeltaScan.read(s, loc)
-    case "CSV" => s.read.option("header", "true").option("inferSchema", "true").csv(loc)
-    case "JSON" | "NDJSON" => s.read.json(loc)
-    case "JDBC" =>
-      // remote tables (reference datafusion_remote_tables): a live
-      // federated scan through Spark's JDBC source, which pushes
-      // column pruning, filters, and LIMIT to the remote database
-      s.read.format("jdbc").option("url", loc).options(options).load()
-    case other => throw new IllegalArgumentException(s"unsupported external format $other")
+                                options: Map[String, String],
+                                schema: Option[StructType] = None): DataFrame = {
+    def file = schema.fold(s.read)(s.read.schema)
+    fmt match {
+      case "PARQUET" => file.parquet(loc)
+      case "ICEBERG" =>
+        // read-only iceberg scan via the spec's JSON+Avro metadata layer
+        // (reference src/catalog/metastore.rs:237-246). OPTIONS
+        // ('as_of' '<ISO instant|epoch ms>') pins the read to the latest
+        // snapshot at or before the timestamp (static-snapshot registration,
+        // reference src/context/iceberg.rs).
+        val asOf = options.get("as_of").map { v =>
+          scala.util.Try(java.time.Instant.parse(v).toEpochMilli)
+            .getOrElse(v.trim.toLong)
+        }
+        graft.sources.IcebergScan.read(s, loc, asOf)
+      case "DELTA" | "DELTATABLE" =>
+        // read-only interop scan of a real Delta Lake (_delta_log) table —
+        // what the reference's delta-rs storage layer itself writes
+        // (reference src/catalog/metastore.rs:176-207)
+        graft.sources.DeltaScan.read(s, loc)
+      case "CSV" => file.option("header", "true").option("inferSchema", "true").csv(loc)
+      case "JSON" | "NDJSON" => file.json(loc)
+      case "JDBC" =>
+        // remote tables (reference datafusion_remote_tables): a live
+        // federated scan through Spark's JDBC source, which pushes
+        // column pruning, filters, and LIMIT to the remote database
+        s.read.format("jdbc").option("url", loc).options(options).load()
+      case other => throw new IllegalArgumentException(s"unsupported external format $other")
+    }
   }
 
+  /** Register `db`'s tables into `s` as views, each pinned to the latest
+    * manifest resolved here, and return the pins. A cataloged table with
+    * NO manifest can only have been dropped + collected by another process
+    * after our catalog load (creates are publish-last, see
+    * createPublishLast) — it is skipped, so this registration serializes
+    * after that drop instead of failing on a table the query may never
+    * touch. readLatestOpt (not an exists-probe + read): the manifest can
+    * also vanish between a probe and the read — resolving it once and
+    * pinning the view to it closes that window. */
+  private def registerDataViews(s: SparkSession, db: String): Seq[SystemTables.Pinned] =
+    catalog.listTables(db).flatMap { case (sch, name, uuid) =>
+      val root = catalog.tableRoot(uuid)
+      Manifest.readLatestOpt(root).map { m =>
+        val p = SystemTables.Pinned(sch, name, uuid, m)
+        GraftSessions.replaceTempView(new GraftTable(s, root).read(Some(m.version)), p.view)
+        p
+      }
+    }
+
   private def buildSnapshot(db: String): SparkSession = {
-    val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    val s = GraftSessions.cloneSession(spark)
     // the clone inherits the parent's temp views; it must expose exactly
     // `db`'s tables (a leaked view from another database would serve that
     // database's data — the cross-contamination the spec hammers on)
-    org.apache.spark.sql.GraftSessions.clearTempViews(s)
-    catalog.listTables(db).foreach { case (sch, name, uuid) =>
-      val view = if (sch == "public") name else s"${sch}__$name"
-      val t = new GraftTable(s, catalog.tableRoot(uuid))
-      // creates are publish-last (createPublishLast), so a cataloged
-      // table with NO manifest can only mean it was dropped + collected
-      // by another process after our catalog load — skip it (this
-      // snapshot serializes after that drop) instead of failing the
-      // whole rebuild on a table the query may never touch.
-      // readLatestOpt (not an exists-probe + read): the manifest can
-      // ALSO vanish between a probe and the read — the same drop+gc race,
-      // just a narrower window; resolving the manifest once and pinning
-      // the view to it closes the window entirely
-      graft.lake.Manifest.readLatestOpt(catalog.tableRoot(uuid)).foreach { m =>
-        t.read(Some(m.version)).createOrReplaceTempView(view)
-      }
-    }
+    GraftSessions.clearTempViews(s)
+    val pinned = registerDataViews(s, db)
     // staging external tables are session-global (transient, not per-db)
-    stagingTables.foreach { case (name, (fmt, loc, opts)) =>
-      readExternal(s, fmt, loc, opts).createOrReplaceTempView(s"staging__$name")
+    stagingTables.foreach { case (name, st) =>
+      GraftSessions.replaceTempView(
+        readExternal(s, st.format, st.location, st.options, Some(st.schema)), s"staging__$name")
     }
-    SystemTables.registerInto(this, s, db)
+    SystemTables.registerInto(this, s, db, pinned)
     Functions.registerInto(this, s)
     s
   }
@@ -459,19 +475,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * Skipped entirely when nothing changed since the last registration. */
   private def registerAll(): Unit = {
     if (!catalogDirty) return
-    val fresh = catalog.listTables(currentDb).flatMap { case (sch, name, uuid) =>
-      val view = if (sch == "public") name else s"${sch}__$name"
-      // same tolerance as buildSnapshot: a manifestless catalog row can
-      // only be a concurrent cross-process drop+collect (creates are
-      // publish-last) — skip rather than fail the unrelated statement
-      if (graft.lake.Manifest.latestVersion(catalog.tableRoot(uuid)).isDefined) {
-        new GraftTable(spark, catalog.tableRoot(uuid)).read().createOrReplaceTempView(view)
-        Some(view)
-      } else None
-    }.toSet
+    val pinned = registerDataViews(spark, currentDb)
+    val fresh = pinned.map(_.view).toSet
     (registeredViews -- fresh).foreach(spark.catalog.dropTempView(_): Unit)
     registeredViews = fresh
-    SystemTables.registerAll(this)
+    SystemTables.registerInto(this, spark, currentDb, pinned)
     catalogDirty = false
   }
 
@@ -708,7 +716,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
           "expected hive-style key=value directories for exactly the declared columns")
       }
       df.createOrReplaceTempView(s"staging__$name")
-      stagingTables(name) = (fmtUp, resolvedLoc, options)
+      stagingTables(name) = Staging(fmtUp, resolvedLoc, options, df.schema)
       emptyResult
     case reClone(dst, src, ver) =>
       // beyond-reference lake op: ZERO-COPY table clone (O(manifest) —

@@ -292,8 +292,8 @@ class ContextSpec extends SparkSpec {
   test("HTTP(S) external tables download to tmp and register in staging") {
     val c = ctx()
     // local HTTP fixture server serving a CSV document
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.server.HttpFrontend.createServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     val csv = "id,name\n1,ann\n2,bo\n3,cy\n"
     server.createContext("/data.csv", (ex: com.sun.net.httpserver.HttpExchange) => {
       val b = csv.getBytes("UTF-8")
@@ -954,5 +954,82 @@ class ContextSpec extends SparkSpec {
     // ...and the gone table itself fails loudly as unknown, not half-read
     val e = intercept[Exception](c.executeRead("SELECT * FROM doomed_t").collect())
     assert(e.getMessage.toLowerCase.contains("doomed_t"))
+  }
+
+  /** Jobs started on this thread while `f` runs (the listener bus is
+    * asynchronous: a marker job on the same thread drains it). */
+  private def jobsStartedBy(f: => Unit): Int = {
+    val group = s"jobs-${System.nanoTime()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => started.incrementAndGet()
+          case g if g == group + "-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a read snapshot after a write starts no Spark job, staging tables included") {
+    val c = ctx()
+    import spark.implicits._
+    val dir = tmpDir("graft-snapjobs")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/pq")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/t.csv"), "id,v\n1,x\n2,y\n3,z\n")
+    c.execute(s"CREATE EXTERNAL TABLE spq STORED AS PARQUET LOCATION '$dir/pq'")
+    c.execute(s"CREATE EXTERNAL TABLE scsv STORED AS CSV LOCATION '$dir/t.csv'")
+    c.execute("CREATE TABLE t (id BIGINT)")
+    c.execute("INSERT INTO t VALUES (1)")
+    assert(c.executeRead("SELECT count(*) FROM t").collect()(0).getLong(0) === 1L)
+    c.execute("INSERT INTO t VALUES (2)")
+    // the next read builds a fresh snapshot: data views, staging views
+    // (schemas fixed at CREATE, so no inference job) and system views
+    // (rows computed only when scanned)
+    val jobs = jobsStartedBy { c.executeRead("SELECT id FROM t") }
+    assert(jobs === 0, s"snapshot build started $jobs Spark jobs")
+    // the staging views in that snapshot still read their files, with
+    // the types inferred at CREATE
+    val csv = c.executeRead("SELECT id, v FROM staging.scsv ORDER BY id")
+    assert(csv.schema("id").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(csv.collect().map(r => (r.getInt(0), r.getString(1))).toSeq ===
+      Seq((1, "x"), (2, "y"), (3, "z")))
+    assert(c.executeRead("SELECT sum(id) FROM staging.spq").collect()(0).getLong(0) === 3L)
+  }
+
+  test("system.table_versions answers from its snapshot's pinned versions") {
+    val s0 = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    s0.conf.set("graft.catalog.pollMs", "0") // the commit below must stay unseen
+    val c = new GraftContext(s0, tmpDir("graft-pinned-sys"))
+    c.execute("CREATE TABLE tv (id BIGINT)")
+    c.execute("INSERT INTO tv VALUES (1)")
+    val data = c.executeRead("SELECT count(*) AS n FROM tv")
+    val Seq((_, pinned)) = c.versionFingerprint(data)
+    // another writer commits after the snapshot was built: neither the
+    // snapshot's data views nor its system views may see it
+    val root = c.catalog.tableRoot(c.catalog.getTable("default", "public", "tv").get)
+    new graft.lake.GraftTable(spark, root).append(spark.range(5).toDF("id"))
+    assert(graft.lake.Manifest.latestVersion(root).contains(pinned + 1))
+    val versions = c.executeRead(
+      "SELECT version FROM system.table_versions WHERE table_name = 'tv' ORDER BY version")
+    assert(versions.sparkSession eq data.sparkSession, "both reads must share one snapshot")
+    assert(versions.collect().map(_.getLong(0)).toSeq === (0L to pinned))
+    assert(data.collect()(0).getLong(0) === 1L)
+    // the next generation sees the commit in both
+    c.markDirty()
+    assert(c.executeRead("SELECT max(version) FROM system.table_versions WHERE table_name = 'tv'")
+      .collect()(0).getLong(0) === pinned + 1)
+    assert(c.executeRead("SELECT count(*) FROM tv").collect()(0).getLong(0) === 6L)
   }
 }

@@ -144,8 +144,8 @@ class DeltaSpec extends SparkSpec {
       s"""{"add":{"path":"$f1","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
     writeLines(s"$root/_delta_log/00000000000000000001.json", Seq(
       s"""{"add":{"path":"$f2","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true}}"""))
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.server.HttpFrontend.createServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val p = Paths.get(root, ex.getRequestURI.getPath.stripPrefix("/"))
       if (!Files.exists(p) || Files.isDirectory(p)) {

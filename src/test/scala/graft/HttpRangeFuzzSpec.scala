@@ -39,7 +39,7 @@ class HttpRangeFuzzSpec extends AnyFunSuite {
     * 3 = declare full length then drop mid-body. */
   private def serve(faultOf: Int => Int): (HttpServer, AtomicInteger) = {
     val gets = new AtomicInteger(0)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.server.HttpFrontend.createServer(new InetSocketAddress("127.0.0.1", 0))
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
     server.createContext("/obj", (ex: HttpExchange) => {
       try {

@@ -20,7 +20,7 @@ class HttpRangeSpec extends SparkSpec {
   /** Serve `bytes` honoring Range (or ignoring it when `honorRange` is
     * false, like a minimal static server). */
   private def serve(bytes: Array[Byte], honorRange: Boolean): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.server.HttpFrontend.createServer(new InetSocketAddress("127.0.0.1", 0))
     server.createContext("/data.parquet", (ex: HttpExchange) => {
       val range = Option(ex.getRequestHeaders.getFirst("Range"))
       if (ex.getRequestMethod == "HEAD") {

@@ -749,4 +749,53 @@ class HttpSpec extends SparkSpec {
     val rb = post("/q", bad, auth)
     assert(rb.statusCode() === 400 && rb.body().contains("unknown store"), rb.body())
   }
+
+  test("small responses on one keep-alive connection don't stall on Nagle") {
+    base // starts the server
+    // one raw socket, so every request rides the same connection
+    val sock = new java.net.Socket("127.0.0.1", fe.boundPort)
+    try {
+      sock.setSoTimeout(5000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def line(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n' && c >= 0) { if (c != '\r') b += c.toChar; c = in.read() }
+        b.result()
+      }
+      def roundTrip(): Double = {
+        val t0 = System.nanoTime()
+        out.write("GET /healthz HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes(UTF_8))
+        out.flush()
+        assert(line().startsWith("HTTP/1.1 200"))
+        var length = 0
+        var h = line()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:")) length = h.drop(15).trim.toInt
+          h = line()
+        }
+        assert(new String(in.readNBytes(length), UTF_8) === "ok\n")
+        (System.nanoTime() - t0) / 1e6
+      }
+      val ms = (1 to 25).map(_ => roundTrip()).sorted
+      // with Nagle on, each body waits for the client's delayed ACK of
+      // the headers: ~40 ms a response
+      assert(ms(ms.size / 2) < 20.0, s"median round trip ${ms(ms.size / 2)} ms: ${ms.mkString(", ")}")
+    } finally sock.close()
+  }
+
+  test("TIMESTAMP_NTZ values are JSON strings on GET /q") {
+    assert(post("/q",
+      """CREATE TABLE ntz AS SELECT * FROM VALUES
+        |  (1, TIMESTAMP_NTZ '2021-03-04 05:06:07.123456'),
+        |  (2, TIMESTAMP_NTZ '1997-05-01 00:00:00'),
+        |  (3, CAST(NULL AS TIMESTAMP_NTZ)) AS v(id, ts)""".stripMargin, auth).statusCode() === 200)
+    val r = get("/q/" + java.net.URLEncoder.encode("SELECT id, ts FROM ntz ORDER BY id", UTF_8))
+    assert(r.statusCode() === 200, r.body())
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ts = r.body().split("\n").toSeq.map(l => mapper.readTree(l).get("ts"))
+    assert(ts.map(v => if (v.isNull) null else v.asText()) ===
+      Seq("2021-03-04T05:06:07.123456", "1997-05-01T00:00:00.000000", null))
+  }
 }

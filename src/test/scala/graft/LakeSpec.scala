@@ -608,4 +608,78 @@ class LakeSpec extends SparkSpec {
       }
     }
   }
+
+  test("TIMESTAMP_NTZ stats are micros: lake counts match plain parquet for every comparison") {
+    val base = tmpDir("graft-ntz")
+    val start = java.time.LocalDateTime.of(1997, 1, 1, 0, 0)
+    // LocalDateTime encodes as TIMESTAMP_NTZ; one row a week, 5 rows a file
+    val src = (0 until 40).map(i => (i.toLong, start.plusDays(7L * i))).toDF("id", "ts")
+    assert(src.schema("ts").dataType === TimestampNTZType)
+    src.coalesce(1).write.parquet(s"$base/plain")
+    val t = GraftTable.create(spark, s"$base/lake",
+      StructType(Seq(StructField("id", LongType), StructField("ts", TimestampNTZType))))
+    t.append(src.coalesce(1).sortWithinPartitions("id"), 5)
+    val files = t.latestManifest.files
+    assert(files.size === 8)
+    // 1997-01-01T00:00 as micros since the epoch, read as if UTC
+    assert(files.map(_.stats("ts").min.get.toLong).min === 852076800L * 1000000L)
+    val plain = spark.read.parquet(s"$base/plain")
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val probes = Seq(0, 4, 5, 17, 39).map(i => start.plusDays(7L * i)).flatMap(d =>
+      Seq(d, d.plusHours(1), d.minusSeconds(1))) :+ java.time.LocalDateTime.of(1997, 5, 1, 0, 0)
+    def check(lake: org.apache.spark.sql.DataFrame): Unit =
+      for (op <- Seq(">=", ">", "<=", "<", "="); p <- probes) {
+        val pred = s"ts $op TIMESTAMP_NTZ '${fmt.format(p)}'"
+        assert(lake.filter(pred).count() === plain.filter(pred).count(), pred)
+      }
+    check(t.read())
+    // stats in bounds now prune: an equality probe scans one file
+    val eq = t.read().filter(s"ts = TIMESTAMP_NTZ '${fmt.format(start.plusDays(7L * 17))}'")
+    val scanned = eq.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.head
+    assert(scanned.relation.location.listFiles(Nil, scanned.dataFilters).head.files.size === 1)
+    // a manifest written before the fix (no stats version, NTZ bounds in
+    // seconds) must keep every file rather than prune on those bounds
+    val m = t.latestManifest
+    val legacy = m.copy(version = m.version + 1, files = m.files.map { f =>
+      val st = f.stats("ts")
+      def secs(o: Option[String]) = o.map(x => (x.toLong / 1000000L).toString)
+      f.copy(statsVersion = 1,
+        stats = f.stats.updated("ts", st.copy(min = secs(st.min), max = secs(st.max))))
+    })
+    val json = Manifest.toJson(legacy)
+    assert(!json.contains("statsVersion"), "version-1 entries serialize as before the field existed")
+    assert(Manifest.fromJson(json).files.forall(_.statsVersion == 1))
+    assert(Manifest.fromJson(Manifest.toJson(m)).files.forall(_.statsVersion == Manifest.StatsVersion))
+    Manifest.commit(t.root, legacy)
+    check(t.read())
+  }
+
+  test("a read snapshot reads no manifest but each table's latest") {
+    import graft.lake.LakeIO
+    val s0 = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    s0.conf.set("graft.catalog.pollMs", "0") // keep the trigger poll out of the count
+    val c = new graft.sql.GraftContext(s0, tmpDir("graft-snapreads"))
+    val tables = Seq("ha", "hb")
+    tables.foreach { n =>
+      c.execute(s"CREATE TABLE $n (id BIGINT)")
+      (1 to 20).foreach(i => c.execute(s"INSERT INTO $n VALUES ($i)"))
+    }
+    // a history this process has not parsed yet (as after a restart, or
+    // once it outgrows the manifest cache)
+    val roots = tables.map(n => c.catalog.tableRoot(c.catalog.getTable("default", "public", n).get))
+    roots.foreach(r => Manifest.listVersions(r).foreach(Manifest.evict(r, _)))
+    c.markDirty()
+    LakeIO.fileReads.set(0)
+    assert(c.executeRead("SELECT count(*) FROM ha").collect()(0).getLong(0) === 20L)
+    val reads = LakeIO.fileReads.get
+    // per table: its latest-version hint and its latest manifest; plus
+    // one catalog load each for the database check, the snapshot's table
+    // list, its functions and the query rewrite's table list
+    assert(reads <= 2 * tables.size + 4, s"snapshot build read $reads files")
+    // the version history is still there when a query asks for it
+    assert(c.executeRead("SELECT count(*) FROM system.table_versions").collect()(0).getLong(0) ===
+      2L * 21)
+  }
 }

@@ -284,9 +284,9 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
         }
       }
     }
-    // two readers on the SERVED path (full snapshot rebuild incl. system
-    // tables) + one hammering the racing enumeration directly for a much
-    // tighter list-then-read window
+    // two readers: the main session's view registration, and the
+    // lock-free snapshot path (a rebuild per generation). The version
+    // enumeration runs when the query scans system.table_versions.
     val served = loop("served") {
       val n = ctx.execute(
         "SELECT count(*) AS n FROM system.table_versions").collect().head.getLong(0)
@@ -294,8 +294,9 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
       reads.incrementAndGet(); ()
     }
     val direct = loop("direct") {
-      val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
-      graft.sql.SystemTables.registerInto(ctx, s, "default")
+      val n = ctx.executeRead(
+        "SELECT count(*) AS n FROM system.table_versions").collect().head.getLong(0)
+      assert(n >= nTables)
       reads.incrementAndGet(); ()
     }
     val threads = Seq(writer, gc, served, direct)
