@@ -14,71 +14,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width is DATA-DERIVED, capped by the thread count: every
-    // task in this environment carries a measured ~40-70 ms fixed cost
-    // (launch + deserialize + shuffle bookkeeping), so tiny shuffles must
-    // not be cut into per-core slivers. The width is
-    // max(4, ceil(inputBytes / 8 MiB)) capped at cpus/2 — at sf0.1
-    // (17.5 MB → ceil = 3) the max(4,·) FLOOR is what yields 4, the
-    // measured knee of the width sweep (126 s at 16 → 85 s at 4, reps=2
-    // control; 2 partitions regresses the compute-bound tail — q46
-    // 1.2→2.0 s); at sf1 the byte term takes over (→ 16 at 32 threads,
-    // unchanged from the round-17 tuning). The cpus/2 cap keeps the
-    // driver's low-core scaling legs meaningful — benches are expected
-    // to run with SPARK_GRAFT_CPUS >= 8 (the default 4 would cap the
-    // width at 2, below the knee). A cluster deployment sizes the cap to
-    // cluster width; it is a session config, not a plan property
-    // (SPARK_GRAFT_BENCH_CONF overrides). File sizes sum RECURSIVELY so
-    // a directory-per-table parquet corpus is not undercounted.
-    def dirBytes(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-      else f.length
-    val inputBytes = dirBytes(new java.io.File(sfDir))
-    val widthCap = math.max(1, cpus.toInt / 2)
-    val width = math.min(widthCap.toLong,
-      math.max(4L, (inputBytes + (8L << 20) - 1) / (8L << 20))).toInt
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", width)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // AQE OFF at bench scale: adaptive re-planning materializes every
-      // stage as its own job with stats collection — overhead that sub-GB
-      // shuffles never earn back (measured: 72.2 → 62.4 s across the
-      // 174-query suite at sf0.1, results identical). A 100 TB deployment
-      // flips it back ON for skew joins + runtime coalescing — it is a
-      // session config, not a plan property, exactly like the
-      // shuffle-partition count above (SPARK_GRAFT_BENCH_CONF overrides
-      // for experiments).
-      .config("spark.sql.adaptive.enabled", "false")
-      // honor the advisory size when coalescing post-shuffle partitions
-      // whenever AQE is re-enabled: tiny shuffles (500-row documents/
-      // embeddings stages) collapse to a few tasks instead of 32, big
-      // ones keep full parallelism
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (8L << 20).toString)
-      // NOTE (measured, round 18): splitting the ~10 MB single-row-group
-      // bench files into one-file-per-task scans (maxPartitionBytes 16 MB)
-      // made the heavy queries 1.6-2.3x SLOWER at sf1 — more map tasks
-      // multiply partial-agg group duplication into the shuffle on the
-      // high-cardinality groupBys. The 128 MB default stays.
-      // 57 queries x several codegen'd stages each overflow the default
-      // 100-entry generated-class cache, so every rep re-pays Janino
-      // compilation for every query; size the cache to the workload
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-    // dev knob: "k=v;k=v" config overrides for config experiments
-    val builder = sys.env.get("SPARK_GRAFT_BENCH_CONF").toSeq
-      .flatMap(_.split(';').toSeq).map(_.trim).filter(_.contains('='))
-      .foldLeft(spark0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    // the batch session (Sessions.Batch): AQE off, width derived from sfDir
+    val spark = Sessions.build(Sessions.Batch, Some(sfDir))
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sql.GraftContext
-import org.apache.spark.sql.SparkSession
 
 /** CLI frontend (the analog of the reference's `src/cli/`): one-off SQL
   * execution, or an interactive REPL when no SQL argument is given.
@@ -119,16 +118,7 @@ object Shell {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Shell <dataDir> [sql]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-shell")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
     val ctx = new GraftContext(spark, args(0))
     // same runaway-statement bound the server frontends honor
     val stmtTimeout = sys.env.get("GRAFT_STATEMENT_TIMEOUT_MS").map(_.trim.toLong).getOrElse(0L)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional local-iteration filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 57 queries overflow the default 100-entry generated-class cache
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Sessions.tune(spark)
-    // dev knob: SPARK_GRAFT_RANK_SMALL=0 forces DistributedRank's scale
-    // path so the oracle compare exercises the distributed ranks too
-    sys.env.get("SPARK_GRAFT_RANK_SMALL")
-      .foreach(v => spark.conf.set("graft.rank.smallBytes", v))
+    // the bench's session, so the oracle checks the plans Bench times
+    // (SPARK_GRAFT_CONF=graft.rank.smallBytes=0 forces DistributedRank's
+    // scale path so the compare exercises the distributed ranks too)
+    val spark = Sessions.build(Sessions.Batch, Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -22,17 +22,7 @@ import org.apache.hadoop.fs.{Path => HPath}
   */
 class Catalog(val dataDir: String) {
 
-  case class TableEntry(uuid: String)
-  case class FunctionEntry(name: String, detailsJson: String)
-  case class DroppedTable(schema: String, name: String, uuid: String, dropTimeMs: Long)
-
-  case class State(
-      // db -> schema -> table name -> entry
-      dbs: Map[String, Map[String, Map[String, TableEntry]]],
-      functions: Map[String, FunctionEntry],
-      dropped: Seq[DroppedTable],
-      // CDC origin -> highest applied sequence number (durable watermark)
-      syncSeq: Map[String, Long] = Map.empty)
+  import Catalog._
 
   // Catalog state is VERSIONED like table manifests (`_catalog/v<N>.json`,
   // fail-if-exists commits, latest wins on load) rather than overwritten in
@@ -248,12 +238,9 @@ class Catalog(val dataDir: String) {
     load().dbs.getOrElse(db, Map.empty).keys.toSeq.sorted
 
   def getTable(db: String, schema: String, name: String): Option[String] =
-    load().dbs.get(db).flatMap(_.get(schema)).flatMap(_.get(name)).map(_.uuid)
+    load().table(db, schema, name)
 
-  def listTables(db: String): Seq[(String, String, String)] =
-    load().dbs.getOrElse(db, Map.empty).toSeq.sortBy(_._1).flatMap { case (sch, ts) =>
-      ts.toSeq.sortBy(_._1).map { case (n, e) => (sch, n, e.uuid) }
-    }
+  def listTables(db: String): Seq[(String, String, String)] = load().tables(db)
 
   def dropTable(db: String, schema: String, name: String): String = mutate { s =>
     // A missing database or schema surfaces as the same "unknown table"
@@ -302,7 +289,7 @@ class Catalog(val dataDir: String) {
     } else (s.copy(functions = s.functions - name), ())
   }
 
-  def functions: Map[String, String] = load().functions.map { case (n, f) => n -> f.detailsJson }
+  def functions: Map[String, String] = load().functionDetails
 
   // --- CDC sequence durability (reference src/sync/writer.rs origin
   // watermarks: a sync batch is acknowledged with the durable sequence;
@@ -330,5 +317,35 @@ class Catalog(val dataDir: String) {
       LakeIO.delete(new HPath(tableRoot(d.uuid)), recursive = true)
     }
     (s.copy(dropped = Seq.empty), s.dropped.map(_.uuid))
+  }
+}
+
+object Catalog {
+  case class TableEntry(uuid: String)
+  case class FunctionEntry(name: String, detailsJson: String)
+  case class DroppedTable(schema: String, name: String, uuid: String, dropTimeMs: Long)
+
+  /** One loaded catalog version. A read snapshot resolves everything —
+    * data views, functions, system views, name rewrites — against the
+    * one State it was built from. */
+  case class State(
+      // db -> schema -> table name -> entry
+      dbs: Map[String, Map[String, Map[String, TableEntry]]],
+      functions: Map[String, FunctionEntry],
+      dropped: Seq[DroppedTable],
+      // CDC origin -> highest applied sequence number (durable watermark)
+      syncSeq: Map[String, Long] = Map.empty) {
+
+    def table(db: String, schema: String, name: String): Option[String] =
+      dbs.get(db).flatMap(_.get(schema)).flatMap(_.get(name)).map(_.uuid)
+
+    /** (schema, table, uuid) of every table of `db`, sorted. */
+    def tables(db: String): Seq[(String, String, String)] =
+      dbs.getOrElse(db, Map.empty).toSeq.sortBy(_._1).flatMap { case (sch, ts) =>
+        ts.toSeq.sortBy(_._1).map { case (n, e) => (sch, n, e.uuid) }
+      }
+
+    /** name -> details JSON of every persisted function. */
+    def functionDetails: Map[String, String] = functions.map { case (n, f) => n -> f.detailsJson }
   }
 }

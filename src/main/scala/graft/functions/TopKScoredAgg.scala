@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   * banded-LSH case, where a pair surfaced by several bands repeats with
   * an identical pair-deterministic score. This replaces a corpus-scale
   * `.distinct()` (a full extra shuffle + hash whose spill-merge is the
-  * first thing to die on a starved heap — ProbeSpill round 17) with a
+  * first thing to die on a starved heap — BASELINE.md round 17) with a
   * zero-cost check inside the already-k-bounded buffer: equal twins are
   * adjacent under the total order, so the check is one compare at the
   * insertion point. Off by default: with it on, duplicate (id, score)

@@ -356,14 +356,4 @@ object VectorFunctions {
         (g, fs.map { case (id, v) => (id, v.toIndexedSeq, v.map(x => x * x).sum) }.toIndexedSeq)
       },
       wCoarse))
-
-  /** Register `dot_q` + every engine text function for SQL use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_q", exprs => DotProductLong(exprs(0), exprs(1)), "scala_udf")
-    (TextExprs.sqlBuilders ++ BloomFunctions.sqlBuilders ++ KllFunctions.sqlBuilders).foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
-    }
-  }
 }

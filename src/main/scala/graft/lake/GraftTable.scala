@@ -760,9 +760,11 @@ class GraftTable(val spark: SparkSession, val root: String) {
       LakeIO.delete(Manifest.versionPath(root, v))
       Manifest.evict(root, v)
     }
-    // drop now-empty batch dirs
+    // drop now-empty batch dirs, age-guarded like the files: an in-flight
+    // writer creates its batch dir before the first file lands in it
     LakeIO.listStatus(new HPath(root))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("data-"))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("data-") &&
+        (minUnrefFileAgeMs <= 0L || s.getModificationTime <= ageCutoff))
       .foreach { s => if (LakeIO.listStatus(s.getPath).isEmpty) LakeIO.delete(s.getPath) }
     (toDelete.size, oldVersions.size)
   }

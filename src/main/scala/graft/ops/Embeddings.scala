@@ -163,7 +163,7 @@ object Embeddings {
     // multi-band hits rank once: cos is pair-deterministic, so the exact
     // (id, cos) twin is skipped INSIDE the k-bounded aggregate — no
     // corpus-scale .distinct() shuffle/hash between join and ranking
-    // (its spill-merge was the first OOM on a starved heap, ProbeSpill)
+    // (its spill-merge was the first OOM on a starved heap, BASELINE.md r17)
     rankTopK(cands, k, dedup = true)
       .select(col("query_id").as("node_id"), col("neighbor_id"), col("cos"), col("rnk"))
   }

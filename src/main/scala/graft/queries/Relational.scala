@@ -83,7 +83,7 @@ object Relational {
       // Quantization spelling (here and throughout the money/value
       // projections): floor(x·scale + 0.5), NOT round() — Spark's Round
       // on DoubleType allocates a BigDecimal through Double.toString PER
-      // ROW (~25% of a scan-agg pass, ProbeRound), while floor is one
+      // ROW (~25% of a scan-agg pass, OPTIMIZATION_r18.md), while floor is one
       // codegen'd Math.floor. Equal by construction on this data: every
       // quantized column is a nonnegative k-decimal decimal stored as
       // double, so x·10^k is an integer ± float error and never lands on

@@ -574,24 +574,7 @@ object ServerMain {
     HttpFrontend.disableNagle() // before anything in the JVM starts an HttpServer
     val dataDir = args.headOption.getOrElse("/tmp/graft-data")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // a serving workload compiles many distinct plans; the default
-      // 100-entry generated-class cache thrashes under variety
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // FAIR root scheduler + Statements' per-statement pools: one heavy
-      // analytical scan must not queue every floor query behind it
-      // (FIFO would). Must be set before SparkContext start.
-      .config("spark.scheduler.mode", sys.env.getOrElse("GRAFT_SCHEDULER_MODE", "FAIR"))
-      .config("spark.scheduler.allocation.file", Statements.writeFairPoolsFile())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
     val ctx = new GraftContext(spark, dataDir)
     // deployment knobs (all optional; defaults match the reference):
     //   GRAFT_STATEMENT_TIMEOUT_MS  cancel any statement running longer (0 = off)

@@ -42,18 +42,22 @@ object Functions {
     require(d.returnType.nonEmpty, "function details need a return_type")
     require(orReplace || !ctx.catalog.functions.contains(name),
       s"function $name already exists")
-    // register FIRST: a module that fails to parse/validate must not be
-    // persisted, or every later statement would trip over it on re-register
-    register(ctx.spark, name, d)
+    // validate FIRST, on a throwaway clone of the main session (so a body
+    // may call engine functions): a module that fails to parse/validate
+    // must not be persisted, or every later statement would trip over it.
+    // The main session and read snapshots pick it up from the catalog.
+    registerInto(org.apache.spark.sql.GraftSessions.cloneSession(ctx.spark),
+      Map(name -> detailsJson), drop = Seq(name))
     ctx.catalog.createFunction(name, detailsJson, orReplace)
   }
 
-  def registerAll(ctx: GraftContext): Unit = registerInto(ctx, ctx.spark)
-
-  /** Register every persisted function into an arbitrary session (the
-    * concurrent read path registers per catalog snapshot). */
-  def registerInto(ctx: GraftContext, s: org.apache.spark.sql.SparkSession): Unit =
-    ctx.catalog.functions.foreach { case (n, j) => register(s, n, parse(j)) }
+  /** Make `s`'s persisted functions match the catalog: drop the `drop`
+    * names, then register `fns` (name -> details JSON). */
+  def registerInto(s: org.apache.spark.sql.SparkSession, fns: Map[String, String],
+                   drop: Iterable[String]): Unit = {
+    drop.foreach(org.apache.spark.sql.GraftSessions.dropFunction(s, _))
+    fns.foreach { case (n, j) => register(s, n, parse(j)) }
+  }
 
   private def sqlTypeName(t: String): String = t.toUpperCase match {
     case "INT" | "INTEGER" | "INT4" => "INT"

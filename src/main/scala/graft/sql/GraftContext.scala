@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftSessions, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The engine's session/statement layer: what Seafowl hand-builds around
   * DataFusion, re-built around Spark SQL (reference
@@ -34,10 +35,10 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * request by a URL prefix or switched with USE — src/context/mod.rs:45-63). */
   @volatile var currentDb: String = "default"
   LakeIO.mkdirs(new HPath(dataDir))
-  // engine-native function extensions available to every SQL surface
-  graft.functions.VectorFunctions.register(spark)
-  // DataFusion-dialect function-name aliases (reference-compat)
-  org.apache.spark.sql.GraftCompatFunctions.register(spark)
+  // engine functions + DataFusion-name aliases on every SQL surface; a
+  // no-op on a session that already has them (the extension, or another
+  // GraftContext over the same session)
+  graft.GraftExtensions.ensure(spark)
 
   /** Serialize WRITE statement processing on the context: currentDb,
     * catalogDirty, and the main session's registered-view set are shared,
@@ -315,7 +316,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   // contend: readers resolve against an immutable snapshot, the writer
   // bumps the generation and the NEXT read builds a fresh one.
   private val readSessions =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), SparkSession]
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), GraftContext.Snapshot]
 
   /** A staging external table's recipe: format, resolved location,
     * options, and the schema resolved once at CREATE (the reference's
@@ -372,8 +373,9 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * touch. readLatestOpt (not an exists-probe + read): the manifest can
     * also vanish between a probe and the read — resolving it once and
     * pinning the view to it closes that window. */
-  private def registerDataViews(s: SparkSession, db: String): Seq[SystemTables.Pinned] =
-    catalog.listTables(db).flatMap { case (sch, name, uuid) =>
+  private def registerDataViews(s: SparkSession, db: String,
+                                state: Catalog.State): Seq[SystemTables.Pinned] =
+    state.tables(db).flatMap { case (sch, name, uuid) =>
       val root = catalog.tableRoot(uuid)
       Manifest.readLatestOpt(root).map { m =>
         val p = SystemTables.Pinned(sch, name, uuid, m)
@@ -382,30 +384,37 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       }
     }
 
-  private def buildSnapshot(db: String): SparkSession = {
+  /** One catalog load serves the whole snapshot: the database check,
+    * data views, functions, system views and every later name rewrite of
+    * a read on it. */
+  private def buildSnapshot(db: String): GraftContext.Snapshot = {
+    val state = catalog.load()
+    require(state.dbs.contains(db), s"unknown database $db")
     val s = GraftSessions.cloneSession(spark)
     // the clone inherits the parent's temp views; it must expose exactly
     // `db`'s tables (a leaked view from another database would serve that
     // database's data — the cross-contamination the spec hammers on)
     GraftSessions.clearTempViews(s)
-    val pinned = registerDataViews(s, db)
+    val pinned = registerDataViews(s, db, state)
     // staging external tables are session-global (transient, not per-db)
     stagingTables.foreach { case (name, st) =>
       GraftSessions.replaceTempView(
         readExternal(s, st.format, st.location, st.options, Some(st.schema)), s"staging__$name")
     }
-    SystemTables.registerInto(this, s, db, pinned)
-    Functions.registerInto(this, s)
-    s
+    SystemTables.registerInto(this, s, db, state, pinned)
+    // the clone also inherits the parent's persisted functions, which
+    // may be newer or older than `state`'s
+    Functions.registerInto(s, state.functionDetails, drop = knownFunctions.asScala)
+    GraftContext.Snapshot(s, state)
   }
 
   /** The current read snapshot for `db`: built at most once per (db,
     * generation) — concurrent readers share it lock-free. Stale
     * generations are evicted from the cache; in-flight queries keep
-    * their session object alive regardless. */
-  private def snapshotSession(db: String): SparkSession = {
+    * their session object alive regardless. A cached snapshot proves
+    * `db` existed at its generation, so a warm read loads no catalog. */
+  private def snapshotSession(db: String): GraftContext.Snapshot = {
     pollPeerCommits() // cross-process visibility, TTL-bounded
-    require(catalog.listDatabases.contains(db), s"unknown database $db")
     val gen = generation.get()
     val s = readSessions.computeIfAbsent((db, gen), _ => buildSnapshot(db))
     readSessions.keySet.removeIf(_._2 < gen)
@@ -418,8 +427,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * computed plan-based without executing), jobs run when consumed. */
   def executeRead(sql: String, db: Option[String] = None): DataFrame = {
     val d = db.getOrElse(currentDb)
-    val s = snapshotSession(d)
-    s.sql(rewriteQuery(sql, s, d))
+    val snap = snapshotSession(d)
+    snap.session.sql(rewriteQuery(sql, snap.session, d, snap.state))
   }
 
   /** Inline-metastore read (Arrow Flight SQL parity where gRPC can't go —
@@ -469,26 +478,45 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   // disappear from the catalog (or the session switches database), so a
   // stale view can't serve another database's data
   private var registeredViews: Set[String] = Set.empty
+  // the catalog state the main session's views and functions match
+  @volatile private var mainState: Catalog.State = _
+  // persisted functions registered on the main session (name -> details)
+  private var mainFunctions: Map[String, String] = Map.empty
+  // every persisted function name ever registered on the main session —
+  // grow-only, and added BEFORE the registration, so a snapshot reading
+  // it after cloning the main session sees every name the clone carries
+  private val knownFunctions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Make every catalog table visible to spark.sql: public tables under
-    * their bare name; others via `sch__tbl` flat names (rewritten in).
-    * Skipped entirely when nothing changed since the last registration. */
+  /** Make the main session match the catalog: every table visible to
+    * spark.sql (public tables under their bare name; others via `sch__tbl`
+    * flat names, rewritten in) and exactly the catalog's persisted
+    * functions. Skipped entirely when nothing changed since the last
+    * registration. */
   private def registerAll(): Unit = {
     if (!catalogDirty) return
-    val pinned = registerDataViews(spark, currentDb)
+    val state = catalog.load()
+    val pinned = registerDataViews(spark, currentDb, state)
     val fresh = pinned.map(_.view).toSet
     (registeredViews -- fresh).foreach(spark.catalog.dropTempView(_): Unit)
     registeredViews = fresh
-    SystemTables.registerInto(this, spark, currentDb, pinned)
+    SystemTables.registerInto(this, spark, currentDb, state, pinned)
+    val fns = state.functionDetails
+    val changed = fns.filter { case (n, j) => !mainFunctions.get(n).contains(j) }
+    knownFunctions.addAll(fns.keySet.asJava)
+    Functions.registerInto(spark, changed, drop = (mainFunctions.keySet -- fns.keySet) ++ changed.keySet)
+    mainFunctions = fns
+    mainState = state
     catalogDirty = false
   }
 
   /** Backtick-quote qualified names of known non-public tables + rewrite
-    * time travel `t('<ts>')` to a version-pinned registered view. */
+    * time travel `t('<ts>')` to a version-pinned registered view, against
+    * the state of the main session's last [[registerAll]]. */
   private[sql] def rewriteQuery(sql0: String): String =
-    rewriteQuery(sql0, spark, currentDb)
+    rewriteQuery(sql0, spark, currentDb, mainState)
 
-  private[sql] def rewriteQuery(sql0: String, session: SparkSession, db: String): String = {
+  private[sql] def rewriteQuery(sql0: String, session: SparkSession, db: String,
+                                state: Catalog.State): String = {
     var sql = sql0
     // change data feed: table_changes('<table>', <from>[, <to>]) — the
     // version-diff table function (GraftTable.changes). Rewritten to a
@@ -496,7 +524,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     val tc = """(?i)\btable_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
     sql = tc.replaceAllIn(sql, m => {
       val (sch, name) = splitName(m.group(1))
-      val uuid = catalog.getTable(db, sch, name).getOrElse(
+      val uuid = state.table(db, sch, name).getOrElse(
         throw new IllegalArgumentException(s"table_changes: unknown table ${m.group(1)}"))
       val root = catalog.tableRoot(uuid)
       val from = m.group(2).toLong
@@ -515,7 +543,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // otherwise a builtin call like date('2020-01-01') whose name
       // collides with a table would be hijacked and fail
       val instant = scala.util.Try(Instant.parse(m.group(2))).toOption
-      (catalog.getTable(db, sch, name), instant) match {
+      (state.table(db, sch, name), instant) match {
         case (Some(uuid), Some(ts)) =>
           val tsMs = ts.toEpochMilli
           val root = catalog.tableRoot(uuid)
@@ -531,7 +559,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     // qualified non-public names -> backticked flat view names. Applied
     // OUTSIDE string literals only: a literal mentioning
     // 'system.table_versions' is content, not a table reference.
-    val nonPublic = catalog.listTables(db).filter(_._1 != "public") ++
+    val nonPublic = state.tables(db).filter(_._1 != "public") ++
       Seq(("system", "table_versions", ""), ("system", "dropped_tables", ""),
         ("information_schema", "tables", ""), ("information_schema", "columns", ""),
         ("information_schema", "routines", ""), ("information_schema", "df_settings", ""),
@@ -937,6 +965,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       }
       emptyResult
     case reCreateFn(orReplace, name, json) =>
+      registerAll() // a body may call a function created just before
       Functions.create(this, clean(name), json, orReplace != null); emptyResult
     case reDropFn(ifExists, names) =>
       names.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty)
@@ -964,7 +993,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // src/context/mod.rs query path). Here: run the query to completion
       // (discarding rows), then emit one row per (operator, metric) from
       // the EXECUTED plan — rows seen, spills, shuffle sizes, etc.
-      Functions.registerAll(this)
       val df = sparkSql(q)
       val qe = df.queryExecution
       qe.executedPlan.execute().foreach(_ => ()) // metrics accumulate here
@@ -982,9 +1010,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       walk(qe.executedPlan)
       import spark.implicits._
       out.toSeq.toDF("operator", "metric", "value")
-    case other =>
-      Functions.registerAll(this)
-      sparkSql(other)
+    case other => sparkSql(other)
   }
 
   /** Multi-statement execution (all run sequentially; results of the last
@@ -1109,6 +1135,9 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
 /** Inline-metastore request model (reference `clade/proto/schema.proto`:
   * SchemaObject / TableObject / StorageLocation). */
 object GraftContext {
+  /** A read snapshot: a session clone and the catalog state it was built from. */
+  private[sql] case class Snapshot(session: SparkSession, state: Catalog.State)
+
   /** Unreferenced-storage dirs younger than this survive the GC sweep —
     * sized so the slowest realistic CTAS build (a large query writing
     * into its reserved dir) finishes well inside the window. */

@@ -2,6 +2,7 @@ package graft.sql
 
 import java.util.OptionalLong
 
+import graft.catalog.Catalog
 import graft.lake.Manifest
 import org.apache.spark.sql.{GraftBridge, GraftSessions, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -38,14 +39,13 @@ object SystemTables {
       StructField(n, t, nullable = !(t == LongType || t == IntegerType))
     })
 
-  /** Register the system views of `db` into `spark` over the given pins. */
+  /** Register the system views of `db` into `spark` over the catalog
+    * `state` and the data views' pins. */
   def registerInto(ctx: GraftContext, spark: SparkSession, db: String,
-                   pinned: Seq[Pinned]): Unit = {
+                   state: Catalog.State, pinned: Seq[Pinned]): Unit = {
     def view(name: String, schema: StructType)(rows: => Seq[Row]): Unit =
       GraftSessions.replaceTempView(GraftBridge.ofRows(spark,
         DataSourceV2Relation.create(new LazyView(name, schema, () => rows), None, None)), name)
-    // one catalog read, shared by the views that need it, on first scan
-    lazy val state = ctx.catalog.load()
     def functions: Seq[(String, String)] =
       state.functions.toSeq.map { case (n, f) => n -> f.detailsJson }.sortBy(_._1)
 

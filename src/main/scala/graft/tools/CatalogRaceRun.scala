@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** One writer of the cross-process CATALOG concurrency differential
@@ -46,13 +44,7 @@ object CatalogRaceRun {
   def main(args: Array[String]): Unit = {
     val Array(shared, role, seqFile) = args.take(3)
     require(role == "a" || role == "b", s"role must be a|b, got $role")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
     val barrier = Paths.get(shared, "barrier")
     Files.createDirectories(barrier)
     def mark(name: String) = barrier.resolve(name)

@@ -4,8 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** CDC-vs-DML differential runner (scripts/gen_cdc_fuzz.py): each
@@ -28,13 +26,7 @@ import scala.jdk.CollectionConverters._
 object CdcFuzzRun {
   def main(args: Array[String]): Unit = {
     val Array(seqFile) = args.take(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
     val dataDir = Files.createTempDirectory("graft-cdcfuzz").toString
     val ctx = new graft.sql.GraftContext(spark, dataDir)
     val token = "cdcfuzz"

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** One writer of the CONCURRENT DML-sequence differential test
@@ -52,13 +50,7 @@ object ConcDmlRun {
   def main(args: Array[String]): Unit = {
     val Array(shared, role, seqFile) = args.take(3)
     require(role == "a" || role == "b", s"role must be a|b, got $role")
-    val spark = SparkSession.builder().master("local[12]")
-      .config("spark.sql.shuffle.partitions", "12")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
     val dataDir = s"$shared/data"
     val barrier = Paths.get(shared, "barrier")
     Files.createDirectories(barrier)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Child JVM of the crash-fault-injection harness (scripts/crash_fuzz.py):
@@ -35,13 +33,7 @@ object CrashDmlRun {
   def main(args: Array[String]): Unit = {
     val Array(dataDir, stmtsFile, mode) = args.take(3)
     graft.lake.Faults.disarm()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
     Files.createDirectories(Paths.get(dataDir))
     val ctx = new graft.sql.GraftContext(spark, dataDir)
 

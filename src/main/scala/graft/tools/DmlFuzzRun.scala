@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Graft half of the randomized DML-sequence differential test
@@ -23,14 +21,7 @@ import scala.jdk.CollectionConverters._
 object DmlFuzzRun {
   def main(args: Array[String]): Unit = {
     val Array(seqFile, outDir) = args.take(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
     val dataDir = Files.createTempDirectory("graft-dmlfuzz").toString
     val ctx = new graft.sql.GraftContext(spark, dataDir)
     new java.io.File(outDir).mkdirs()

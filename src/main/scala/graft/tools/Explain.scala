@@ -1,31 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Print the formatted physical plan of a suite query — the audit loop
-  * behind the PlanSpec gates (pushed filters, ReadSchema pruning,
-  * broadcast sides, exchange reuse, codegen spans).
+/** Print the formatted physical plan of a suite query on the bench's
+  * session — the audit loop behind the PlanSpec gates (pushed filters,
+  * ReadSchema pruning, broadcast sides, exchange reuse, codegen spans).
   *
-  *   scripts/run.sh graft.tools.Explain <sfDir> <query> [k=v ...]
+  *   scripts/run.sh graft.tools.Explain <sfDir> <query>
   *
-  * Trailing k=v pairs are session confs (e.g. graft.rank.smallBytes=0
-  * to audit the DistributedRank scale path).
+  * Session overrides go through SPARK_GRAFT_CONF (e.g.
+  * `SPARK_GRAFT_CONF=graft.rank.smallBytes=0` to audit the
+  * DistributedRank scale path).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val name = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
-    args.drop(2).map(_.split('=')).collect { case Array(k, v) =>
-      spark.conf.set(k, v)
-    }
+    val Array(sfDir, name) = args.take(2)
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(sfDir))
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
     spark.stop()

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Spark half of the randomized differential test: run every generated
@@ -19,15 +17,7 @@ import scala.jdk.CollectionConverters._
 object FuzzRun {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, queriesFile, outDir) = args.take(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(sfDir))
     Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings")
       .foreach(t => graft.Tables.load(spark, sfDir, t).createOrReplaceTempView(t))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize a 10× scale-up of sf0.1 under /tmp/sf1 for the
@@ -24,14 +24,7 @@ object GenScale {
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(t: String): Boolean = only.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(src))
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String)(build: Int => DataFrame): Unit = if (wanted(t)) {

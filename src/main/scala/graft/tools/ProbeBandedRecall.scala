@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Embeddings
 
@@ -28,15 +28,7 @@ object ProbeBandedRecall {
     val b = args.lift(2).map(_.toInt).getOrElse(6)
     val r = args.lift(3).map(_.toInt).getOrElse(3)
     val dim = args.lift(4).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(dir))
 
     val emb = graft.Tables.load(spark, dir, "embeddings").cache()
     val n = emb.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-knob audit for the within-block quadratics the round-20 sf10
   * probe surfaced (dd18 57x, em1 60x at a 10x data step): both funnel
   * through FIXED-cardinality blocking — semDedup's numCells=8 and em1's
@@ -19,13 +17,7 @@ object ProbeCells {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf10")
     val cellCounts = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(8, 448)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(sfDir))
     val emb = graft.Tables.load(spark, sfDir, "embeddings").cache()
     val n = emb.count()
     println(s"""{"sfDir":"$sfDir","vectors":$n}""")

@@ -21,17 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object ProbeScale {
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L << 20).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(s)
-  }
-
   private def t[A](label: String)(f: => A): Unit = {
     val t0 = System.nanoTime(); f
     println(f"$label ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -81,7 +70,7 @@ object ProbeScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val suites = if (args.size > 2) args.drop(2).toSeq else Seq("r13")
-    val spark = session()
+    val spark = graft.Sessions.build(graft.Sessions.Batch, Some(sfDir))
     suites.foreach {
       case "text" => text(spark, sfDir, mult)
       case "r8" => r8(spark, sfDir, mult)

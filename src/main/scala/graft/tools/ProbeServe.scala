@@ -4,8 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.server.HttpFrontend
 import graft.sql.GraftContext
 
@@ -29,16 +27,7 @@ object ProbeServe {
     val readers = args.headOption.map(_.toInt).getOrElse(16)
     val seconds = args.drop(1).headOption.map(_.toInt).getOrElse(20)
     val rows = args.drop(2).headOption.map(_.toInt).getOrElse(10000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // serving default; GRAFT_SCHEDULER_MODE=FIFO records the number FAIR beats
-      .config("spark.scheduler.mode", sys.env.getOrElse("GRAFT_SCHEDULER_MODE", "FAIR"))
-      .config("spark.scheduler.allocation.file", graft.server.Statements.writeFairPoolsFile())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-serve-probe").toString
     val ctx = new GraftContext(spark, dir)
@@ -165,7 +154,7 @@ object ProbeServe {
     // With spark.scheduler.mode=FAIR + Statements' per-statement pools,
     // FAIR round-robins freed task slots across pools, so the floor rides
     // between the monster's task completions (p99 ≈ a task duration).
-    // Run with GRAFT_SCHEDULER_MODE=FIFO to record the number FAIR beats.
+    // Run with SPARK_GRAFT_CONF=spark.scheduler.mode=FIFO to record the number FAIR beats.
     def floorRun(secs: Long): (Long, Double, Double) = {
       val lats = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
       val n = new AtomicLong(0)

@@ -6,8 +6,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.server.{HttpFrontend, PgFrontend}
 import graft.sql.GraftContext
 
@@ -46,16 +44,7 @@ object ProbeSoak {
   def main(args: Array[String]): Unit = {
     val minutes = args.headOption.map(_.toDouble).getOrElse(30.0)
     val readers = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", sys.env.getOrElse("GRAFT_SCHEDULER_MODE", "FAIR"))
-      .config("spark.scheduler.allocation.file", graft.server.Statements.writeFairPoolsFile())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Serve)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-soak").toString
     val ctx = new GraftContext(spark, dir)

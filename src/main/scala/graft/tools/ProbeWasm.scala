@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** WASM UDF interpreter throughput: the per-row budget a user needs
@@ -24,12 +23,7 @@ object ProbeWasm {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(5000000L)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
 
     val mods = graft.functions.wasm.SampleModules
     graft.functions.wasm.WasmUdf.register(spark, "w_sintau", "sintau",

@@ -1,12 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object SmokeEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
     println("entry rows: " + graft.SparkEntry.entry(spark).count())
     spark.stop()
   }

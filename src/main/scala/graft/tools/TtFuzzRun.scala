@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Graft half of the time-travel / RESTORE / VACUUM differential fuzz
@@ -27,13 +25,7 @@ import scala.jdk.CollectionConverters._
 object TtFuzzRun {
   def main(args: Array[String]): Unit = {
     val Array(seqFile, outDir) = args.take(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.build(graft.Sessions.Batch)
     val dataDir = Files.createTempDirectory("graft-ttfuzz").toString
     val ctx = new graft.sql.GraftContext(spark, dataDir)
     new java.io.File(outDir).mkdirs()

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Column ⇄ Expression bridge. Spark 4 made `new Column(expr)` private to
   * the sql package (columns are plan-node-based in the unified API); the
@@ -180,6 +181,22 @@ object GraftSessions {
   def cloneSession(s: SparkSession): SparkSession =
     s.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Register `fn` unless the session already resolves `id` (a builtin,
+    * an extension-injected function, or an earlier registration). */
+  def ensureFunction(s: SparkSession, id: FunctionIdentifier, info: ExpressionInfo,
+                     fn: Seq[Expression] => Expression): Unit = {
+    val reg = s.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    if (!reg.functionExists(id)) reg.registerFunction(id, info, fn)
+  }
+
+  /** Drop a session-local function (no-op when absent). */
+  def dropFunction(s: SparkSession, name: String): Unit =
+    s.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .dropTempFunction(name, ignoreIfNotExists = true)
+
+  /** Block until every listener has seen every event posted so far. */
+  def drainListeners(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Drop every local temp view (the clone must expose exactly the target
     * database's tables, not whatever the parent had registered). */
   def clearTempViews(s: SparkSession): Unit =
@@ -199,38 +216,5 @@ object GraftSessions {
       org.apache.spark.sql.catalyst.TableIdentifier(name), ds.sparkSession, replace = true,
       catalog.getRawTempView, originalText = None, plan, plan, Nil)
     catalog.createTempView(name, view, overrideIfExists = true)
-  }
-}
-
-/** DataFusion-dialect function-name aliases (SURVEY §2.8 compat shim):
-  * queries written for the reference engine keep working unmodified.
-  * Each alias re-registers the Spark builtin's own expression builder
-  * under the DataFusion name — full codegen, zero UDF overhead.
-  */
-object GraftCompatFunctions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-
-  // DataFusion name -> Spark builtin name. ONLY pairs whose semantics
-  // match exactly are aliased: regexp_match (first-match vs all-matches,
-  // flags vs group-index 3rd arg) and to_hex (lowercase vs uppercase)
-  // were considered and rejected — a silently-different result is worse
-  // than an unresolved-function error.
-  private val aliases = Seq(
-    "strpos" -> "instr",            // strpos(str, substr), both 1-based
-    "starts_with" -> "startswith",
-    "ends_with" -> "endswith",
-    "make_array" -> "array",
-    "array_length" -> "array_size",
-    "list_element" -> "element_at") // both 1-based list indexing
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-    aliases.foreach { case (dfName, sparkName) =>
-      if (reg.lookupFunctionBuilder(FunctionIdentifier(dfName)).isEmpty) {
-        FunctionRegistry.builtin.lookupFunctionBuilder(FunctionIdentifier(sparkName))
-          .foreach(b => reg.registerFunction(FunctionIdentifier(dfName), b, "built-in"))
-      }
-    }
   }
 }

@@ -233,6 +233,67 @@ class ContextSpec extends SparkSpec {
     assert(c.catalog.functions.isEmpty)
   }
 
+  test("DROP FUNCTION: no session of any context still calls the function") {
+    val dir = tmpDir("graft-dropfn")
+    def context(): GraftContext = {
+      val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+      s.conf.set("graft.catalog.pollMs", "1")
+      new GraftContext(s, dir)
+    }
+    val a = context()
+    val b = context() // a second context over the same data dir (a peer process)
+    a.execute(
+      """CREATE FUNCTION dropme AS '{"language":"sql","input_types":["bigint","bigint"],"return_type":"bigint","data":"$1 + $2"}'""")
+    Thread.sleep(5)
+    def call(df: => org.apache.spark.sql.DataFrame): Long = df.collect().head.getLong(0)
+    val q = "SELECT dropme(2, 3)"
+    assert(call(a.execute(q)) === 5L)
+    assert(call(a.executeRead(q)) === 5L)
+    assert(call(b.executeRead(q)) === 5L)
+    assert(call(b.execute(q)) === 5L)
+    a.execute("DROP FUNCTION dropme")
+    Thread.sleep(5) // past b's poll interval
+    intercept[Exception](call(a.execute(q)))
+    intercept[Exception](call(a.executeRead(q)))
+    intercept[Exception](call(b.executeRead(q)))
+    intercept[Exception](call(b.execute(q)))
+  }
+
+  test("engine functions register once per session") {
+    val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val dotQ = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_q")
+    new GraftContext(s, tmpDir("graft-fn-once-a"))
+    val first = registry.lookupFunction(dotQ)
+    assert(first.isDefined)
+    // a re-registration would install a new ExpressionInfo (and log that
+    // it replaced a previously registered function)
+    new GraftContext(s, tmpDir("graft-fn-once-b"))
+    assert(registry.lookupFunction(dotQ).get eq first.get)
+  }
+
+  test("a warm read touches no _catalog/ file but the _data.gen poll") {
+    spark.sparkContext.hadoopConfiguration.set("fs.recfs.impl", classOf[RecordingFs].getName)
+    val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    s.conf.set("graft.catalog.pollMs", "1") // poll on every read
+    val c = new GraftContext(s, "recfs://" + tmpDir("graft-warm"))
+    c.execute("CREATE SCHEMA other")
+    c.execute("CREATE TABLE other.w (id BIGINT)")
+    c.execute("INSERT INTO other.w VALUES (1), (2)")
+    val q = "SELECT count(*) FROM other.w WHERE id > 0"
+    assert(c.executeRead(q).collect().head.getLong(0) === 2L) // builds the snapshot
+    RecordingFs.touched.clear()
+    (1 to 3).foreach { _ =>
+      Thread.sleep(2)
+      assert(c.executeRead(q).collect().head.getLong(0) === 2L)
+    }
+    import scala.jdk.CollectionConverters._
+    val catalogIo = RecordingFs.touched.asScala.toSeq.filter(_.contains("/_catalog"))
+    assert(catalogIo.nonEmpty, "the poll reads the trigger file")
+    assert(catalogIo.forall(_.endsWith("/_catalog/_data.gen")), catalogIo)
+  }
+
   test("copy to + external table round trip through staging") {
     val c = ctx()
     c.execute("CREATE TABLE src (a BIGINT, b VARCHAR)")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** GraftExtensions must make engine functions available to a PLAIN
   * SparkSession via spark.sql.extensions — no GraftContext involved. */
 class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("spark.sql.extensions=graft.GraftExtensions exposes dot_q in SQL") {
+  /** A fresh plain session with the extension, stopped afterwards. */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
     // spark.sql.extensions is a STATIC conf: it only takes effect when the
     // SparkContext itself is created with it. Stop any context a previous
     // suite left running so the builder constructs a fresh one; stop ours
@@ -21,7 +22,16 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
+    try f(spark)
+    finally {
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("spark.sql.extensions=graft.GraftExtensions exposes dot_q in SQL") {
+    withExtensionSession { spark =>
       val r = spark.sql("SELECT dot_q(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
         .collect().head.getLong(0)
       assert(r === 32L)
@@ -53,10 +63,14 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
         "SELECT min_k_md5(CAST(id % 10 AS STRING), 3) FROM range(0, 100)")
         .collect().head.getSeq[String](0)
       assert(kmv.length === 3 && kmv === kmv.sorted && kmv.distinct.length === 3)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("the extension injects the DataFusion-name compat aliases") {
+    withExtensionSession { spark =>
+      val r = spark.sql("SELECT strpos('graft', 'af') AS p, make_array(1, 2) AS a").collect().head
+      assert(r.getInt(0) === 3)
+      assert(r.getSeq[Int](1) === Seq(1, 2))
     }
   }
 }

@@ -23,3 +23,24 @@ class MockFs extends RawLocalFileSystem {
   override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
   override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
 }
+
+/** [[MockFs]] under a `recfs:` scheme that records every path it opens,
+  * lists or stats — for pins on which metadata files a code path reads. */
+class RecordingFs extends MockFs {
+  override def getScheme: String = "recfs"
+  override def getUri: URI = URI.create("recfs:///")
+
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    RecordingFs.touched.add(f.toString); super.open(f, bufferSize)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    RecordingFs.touched.add(f.toString); super.getFileStatus(f)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    RecordingFs.touched.add(f.toString); super.listStatus(f)
+  }
+}
+
+object RecordingFs {
+  val touched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}

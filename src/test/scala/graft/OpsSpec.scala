@@ -1396,15 +1396,11 @@ class OpsSpec extends SparkSpec {
     assert(w.sliding(2).forall(p => p(0) > p(1)))
   }
 
-  test("Sessions.tune: default raise, graft knob override, user-set value kept") {
+  test("Sessions.tune: default raise, user-set value kept") {
     val s1 = spark.newSession()
     graft.Sessions.tune(s1)
     assert(s1.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
       === graft.Sessions.ObjectAggFallbackGroups.toString)
-    val s2 = spark.newSession()
-    s2.conf.set("graft.objectAgg.fallbackGroups", "4096")
-    graft.Sessions.tune(s2)
-    assert(s2.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") === "4096")
     val s3 = spark.newSession()
     s3.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "777")
     graft.Sessions.tune(s3)
