@@ -57,16 +57,19 @@ object SystemTables {
     // "vacuumed concurrently" and skip the row — this snapshot serializes
     // after the sweep — exactly like buildSnapshot skips a manifestless
     // table. A pure SELECT must never fail on an unrelated table's
-    // retention sweep.
+    // retention sweep. The pinned version itself always has its row, from
+    // the manifest the snapshot holds: once a newer commit lands, the sweep
+    // may delete its file too, but the snapshot's data view still reads it.
     view("system__table_versions", fields("table_schema" -> StringType,
         "table_name" -> StringType, "table_version_id" -> LongType, "version" -> LongType,
         "creation_time" -> LongType)) {
       pinned.flatMap { p =>
         val root = ctx.catalog.tableRoot(p.uuid)
         val pin = p.manifest.version
-        Manifest.listVersions(root).filter(_ <= pin).flatMap { v =>
-          (if (v == pin) Some(p.manifest) else Manifest.readOpt(root, v))
-            .map(m => Row(p.schema, p.name, v, v, m.timestampMs / 1000))
+        val older = Manifest.listVersions(root).filter(_ < pin)
+          .flatMap(v => Manifest.readOpt(root, v).map(v -> _))
+        (older :+ (pin -> p.manifest)).map { case (v, m) =>
+          Row(p.schema, p.name, v, v, m.timestampMs / 1000)
         }
       }
     }

@@ -1093,4 +1093,27 @@ class ContextSpec extends SparkSpec {
       .collect()(0).getLong(0) === pinned + 1)
     assert(c.executeRead("SELECT count(*) FROM tv").collect()(0).getLong(0) === 6L)
   }
+
+  test("system.table_versions keeps its pinned version after a sweep deletes that manifest") {
+    val s0 = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    s0.conf.set("graft.catalog.pollMs", "0") // the commit below must stay unseen
+    val c = new GraftContext(s0, tmpDir("graft-pinned-gc"))
+    c.execute("CREATE TABLE tg (id BIGINT)")
+    c.execute("INSERT INTO tg VALUES (1)")
+    val data = c.executeRead("SELECT count(*) AS n FROM tg")
+    val Seq((_, pinned)) = c.versionFingerprint(data)
+    // another writer commits, then a sweep prunes every non-latest
+    // manifest — the snapshot's pinned one included
+    val root = c.catalog.tableRoot(c.catalog.getTable("default", "public", "tg").get)
+    new graft.lake.GraftTable(spark, root).append(spark.range(5).toDF("id"))
+    graft.lake.Manifest.listVersions(root).dropRight(1).foreach { v =>
+      assert(graft.lake.LakeIO.delete(graft.lake.Manifest.versionPath(root, v)))
+      graft.lake.Manifest.evict(root, v)
+    }
+    val versions = c.executeRead(
+      "SELECT version FROM system.table_versions WHERE table_name = 'tg'")
+    assert(versions.sparkSession eq data.sparkSession, "both reads must share one snapshot")
+    assert(versions.collect().map(_.getLong(0)).toSeq === Seq(pinned))
+    assert(data.collect()(0).getLong(0) === 1L)
+  }
 }
