@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * Every session reads `SPARK_GRAFT_CPUS` (default 4) for its thread
   * count, and `SPARK_GRAFT_CONF` (`k=v;k=v`) for overrides applied after
   * the profile's values — the one knob for config experiments, e.g.
-  * `SPARK_GRAFT_CONF=graft.rank.smallBytes=0` for the rank scale path or
+  * `SPARK_GRAFT_CONF=graft.forceScalePaths=true` for the scale paths or
   * `spark.scheduler.mode=FIFO` on a serving session.
   */
 object Sessions {

@@ -7,8 +7,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional local-iteration filter
     // the bench's session, so the oracle checks the plans Bench times
-    // (SPARK_GRAFT_CONF=graft.rank.smallBytes=0 forces DistributedRank's
-    // scale path so the compare exercises the distributed ranks too)
+    // (SPARK_GRAFT_CONF=graft.forceScalePaths=true sends every size-gated
+    // operator down its distributed path, so the compare checks those too)
     val spark = Sessions.build(Sessions.Batch, Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>

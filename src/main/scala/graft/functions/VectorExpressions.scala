@@ -311,10 +311,13 @@ case class QuantizeMicro(child: Expression)
       d.toLong
     } else {
       val f = math.floor(d)
-      val frac = d - f // exact: Sterbenz subtraction below 2^52
+      // compare against f + 0.5 (exact for |f| < 2^52), never d - f: for
+      // d in (-1, 0) that difference rounds, e.g. -0.49999999999999994
+      // would read as an exact tie and go to -1
+      val mid = f + 0.5
       val r =
-        if (frac > 0.5) f + 1
-        else if (frac < 0.5) f
+        if (d > mid) f + 1
+        else if (d < mid) f
         else if (d >= 0) f + 1 // exact .5 tie: HALF_UP rounds away from zero
         else f
       r.toLong

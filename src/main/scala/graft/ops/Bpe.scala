@@ -64,11 +64,9 @@ object Bpe {
     // Big corpora (vocabs worth distributing) keep the checkpoint's full
     // width — the threshold rides the corpus size, the same
     // input-proportional policy as the bench shuffle width.
-    val corpusBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     // N rounds stack N literal replace projections on the checkpointed
     // vocab — O(N²) tiny projections total, never a corpus re-read
-    var vocab =
-      if (corpusBytes <= (16L << 20)) vocab0.coalesce(1) else vocab0
+    var vocab = if (ScalePath.smallEstimate(docs)) vocab0.coalesce(1) else vocab0
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false

@@ -32,17 +32,12 @@ import org.apache.spark.sql.functions._
   *
   * Result is EXACTLY the per-key row_number. `orderKeys` must be a total
   * order within keys (the required-unique tuple also means boundary ties
-  * cannot unbalance a slice beyond one duplicate run).
+  * cannot unbalance a slice beyond one duplicate run). Inputs that
+  * `ScalePath.smallEstimate` calls small run the textbook window
+  * instead; `graft.forceScalePaths=true` sends every input through the
+  * slices.
   */
 object DistributedRank {
-
-  /** Effective small-input threshold: the session conf
-    * `graft.rank.smallBytes` (when set) overrides the per-call default —
-    * how PlanSpec forces the distributed path on tiny test frames, and
-    * how a deployment retunes the switch without touching call sites. */
-  private def threshold(df: DataFrame, smallBytes: Long): Long =
-    df.sparkSession.conf.getOption("graft.rank.smallBytes")
-      .map(_.toLong).getOrElse(smallBytes)
 
   /** Driver-side tuple comparator matching Spark's ASC NULLS FIRST /
     * DESC NULLS LAST defaults (only load balance depends on it). */
@@ -114,21 +109,11 @@ object DistributedRank {
     * total). Key/order column names must be distinct top-level columns. */
   private def withRankAndCount(df: DataFrame, keyCols: Seq[String],
                                orderKeys: Seq[(String, Boolean)],
-                               slices0: Int): DataFrame = {
-    // deployment tuning knob mirroring graft.rank.smallBytes: more
-    // slices = finer load balance, deeper pid search tree
-    val slices = df.sparkSession.conf.getOption("graft.rank.slices")
-      .map { s =>
-        val n = try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.rank.slices must be an integer >= 1, got '$s'")
-        }
-        // slices <= 0 would yield zero boundaries: every row lands in
-        // pid 0, silently reinstating the single-task global sort this
-        // operator exists to avoid
-        require(n >= 1, s"graft.rank.slices must be >= 1, got $n")
-        n
-      }.getOrElse(slices0)
+                               slices: Int): DataFrame = {
+    // slices <= 0 would yield zero boundaries: every row lands in pid 0,
+    // silently reinstating the single-task global sort this operator
+    // exists to avoid
+    require(slices >= 1, s"slices must be >= 1, got $slices")
     val cols = keyCols.map((_, true)) ++ orderKeys
     require(cols.map(_._1).distinct.length == cols.length,
       s"key/order columns must be distinct names: ${cols.map(_._1)}")
@@ -189,21 +174,14 @@ object DistributedRank {
     * path this runs the boundary-sampling job EAGERLY — calling it (not
     * the later action) triggers one pass over the key/order projection. */
   def ntileByKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
-                 k: Int, slices: Int = 64,
-                 smallBytes: Long = 16L << 20): DataFrame = {
+                 k: Int, slices: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     validateAtomic(df, keyCols ++ orderCols)
     val keyCs = keyCols.map(col)
     // Inputs small enough that one task per key sorts in memory skip the
     // two extra exchanges and run the textbook plan (same assignment
-    // either way — the switch is pure load-balance, the pageRank
-    // localEdgeLimit precedent). Catalyst's size estimate costs no job.
-    // 16 MiB default: measured crossover at sf1 (est 48 MB) where the
-    // slice machinery already matches the 3-task textbook sort warm and
-    // halves it under cold-cache bench conditions; sf0.1-class inputs
-    // (est ~4 MB) stay textbook.
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes <= threshold(df, smallBytes)) {
+    // either way — the switch is pure load-balance).
+    if (ScalePath.smallEstimate(df)) {
       val w = Window.partitionBy(keyCs: _*).orderBy(orderCols.map(col): _*)
       return df.withColumn("bin", ntile(k).over(w).cast("long"))
     }
@@ -232,12 +210,10 @@ object DistributedRank {
     * over the key/order projection. */
   def rowNumberByKey(df: DataFrame, keyCols: Seq[String],
                      orderKeys: Seq[(String, Boolean)],
-                     out: String = "rn", slices: Int = 64,
-                     smallBytes: Long = 16L << 20): DataFrame = {
+                     out: String = "rn", slices: Int = 64): DataFrame = {
     validateAtomic(df, keyCols ++ orderKeys.map(_._1))
     val orderCs = orderKeys.map { case (n, asc) => if (asc) col(n) else col(n).desc }
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes <= threshold(df, smallBytes)) {
+    if (ScalePath.smallEstimate(df)) {
       val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCs: _*)
       return df.withColumn(out, row_number().over(w).cast("long"))
     }

@@ -56,6 +56,8 @@ object ExactQuantile {
     * both engines perform in DOUBLE — so they select the identical
     * element even where p·n straddles an integer in float).
     * Returns (__k, value, n).
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def rankStatByKey(df: DataFrame, key: Column, value: Column, p: Double,
                     bucketShift: Int = 14): DataFrame =
@@ -68,6 +70,8 @@ object ExactQuantile {
     * histogram and (at most) one more target bucket to the refine's
     * semi-join, not a new scan. Returns (__k, __i = index into `ps`,
     * value, n).
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def rankStatsByKey(df: DataFrame, key: Column, value: Column,
                      ps: Seq[Double], bucketShift: Int = 14): DataFrame = {
@@ -88,6 +92,8 @@ object ExactQuantile {
     * Catalyst expressions as before, so an oracle computing the same
     * formula from its own rank machinery matches bit-for-bit. Returns
     * (__k, __i = index into ps, value: double, n).
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def contQuantilesByKey(df: DataFrame, key: Column, value: Column,
                          ps: Seq[Double], bucketShift: Int = 14): DataFrame = {
@@ -132,6 +138,8 @@ object ExactQuantile {
     * boundaries: ranks in terms of `__n DIV k` and `__n % k`). Same
     * ONE-histogram + ONE-refine distributed shape; returns
     * (__k, __i = index into rankExprs, value, n).
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def orderStatsAtRankExprs(df: DataFrame, key: Column, value: Column,
                             rankExprs: Seq[String], bucketShift: Int = 14): DataFrame =
@@ -253,6 +261,8 @@ object ExactQuantile {
     * `medianByKey` below stays the choice for wide or unknown domains:
     * its bucketed state is domain-independent, at the cost of a second
     * (refine) scan. Same interpolation semantics, same output schema.
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def medianByKeyValues(df: DataFrame, key: Column, value: Column): DataFrame = {
     val vals = df.select(key.as("__k"), value.as("__v")).filter(col("__v").isNotNull)
@@ -268,6 +278,8 @@ object ExactQuantile {
     * __c. Returns a LOCAL (__k, median: double, n) frame — ≤ one row per
     * key, already on the driver, so callers that bake the medians into
     * later passes (q44) collect for free.
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `hist`.
     */
   def medianOfHistogram(hist: DataFrame, bucketShift: Int = 14): DataFrame =
     weightedMedian(hist.select(col("__k"), col("__v"), col("__c")), bucketShift)
@@ -275,6 +287,8 @@ object ExactQuantile {
   /** Exact per-key median of `value` (an integral column — scale decimals
     * up front, e.g. dollars → cents). `bucketShift` sets bucket width to
     * `2^bucketShift` value units. Returns (key, median: double, n: bigint).
+    * EAGER: the call itself runs two Spark jobs (histogram, refine) and
+    * returns a driver-local snapshot; acting on it never re-reads `df`.
     */
   def medianByKey(df: DataFrame, key: Column, value: Column,
                   bucketShift: Int = 14): DataFrame = {

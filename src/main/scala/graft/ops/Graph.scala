@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * (host/page authority) before sampling. Companion of the dedup
   * family's connected components (TextDedup.duplicateGroups): same
   * Pregel-by-DataFrame shape — a bounded per-iteration join+aggregate
-  * keyed on the vertex id, lineage truncated by lazy localCheckpoints,
-  * nothing ever collected to the driver.
+  * keyed on the vertex id, lineage truncated by lazy localCheckpoints.
+  * Graphs that fit on the driver run the identical recurrence there
+  * instead (ScalePath decides; OpsSpec pins each pair bit-equal).
   */
 object Graph {
 
@@ -35,11 +36,17 @@ object Graph {
     * edge/vertex partitions, never the whole graph. 10 iterations on a
     * 1000-executor cluster is 20 shuffles of edge-list size, with
     * map-side combine shrinking the aggregate to vertex cardinality.
+    * Edge lists within ScalePath.DriverRows run on the driver.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                iters: Int = 10, scale: Long = 1000000L,
-               dampNum: Long = 85L, dampDen: Long = 100L,
-               localEdgeLimit: Long = 1000000L): DataFrame = {
+               dampNum: Long = 85L, dampDen: Long = 100L): DataFrame =
+    rankFlow(edges, srcCol, dstCol, wCol, None, iters, scale, dampNum, dampDen)
+
+  /** pageRank's recurrence; `seeds` None teleports to every node. */
+  private def rankFlow(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
+                       seeds: Option[Set[Long]], iters: Int, scale: Long,
+                       dampNum: Long, dampDen: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1L && dampNum >= 0L && dampDen >= 1L && dampNum <= dampDen,
       s"need scale >= 1 and 0 <= dampNum <= dampDen, got scale=$scale damp=$dampNum/$dampDen")
@@ -57,50 +64,48 @@ object Graph {
     val ew = e.join(e.groupBy("src").agg(sum("w").as("ow")), "src")
       .select("src", "dst", "w", "ow")
       .localCheckpoint(false)
-    // Link graphs are often TINY next to the corpus they weight (hosts,
-    // not pages): when the edge list fits on the driver, one collect +
-    // local recurrence replaces iters×2 scheduled shuffles — the dd6
-    // union-find precedent. The recurrence is the identical integer
-    // formula, so both paths are bit-equal; the distributed loop below
-    // stays the scale path.
-    val nEdges = ew.count() // also materializes the checkpoint
-    if (nEdges <= localEdgeLimit) {
-      val spark = edges.sparkSession
-      val es = ew.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val nodes0 = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
-      val teleport = (dampDen - dampNum) * scale / dampDen
-      var rank = nodes0.map(n => n -> scale).toMap
-      var i = 0
-      while (i < iters) {
-        val in = new scala.collection.mutable.HashMap[Long, Long]()
-        es.foreach { case (s, d, w, ow) =>
-          in(d) = in.getOrElse(d, 0L) + rank(s) * w / ow
-        }
-        rank = nodes0.map(n => n -> (teleport + dampNum * in.getOrElse(n, 0L) / dampDen)).toMap
-        i += 1
-      }
-      import spark.implicits._
-      return nodes0.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
-    }
-    val nodes = ew.select(col("src").as("node"))
-      .union(ew.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
     val teleport = (dampDen - dampNum) * scale / dampDen
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var i = 0
-    while (i < iters) {
-      val contrib = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst"), expr("(rank * w) div ow").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
-        .localCheckpoint(false)
-      i += 1
+    // Link graphs are often TINY next to the corpus they weight (hosts,
+    // not pages): on the driver, one collect + the identical integer
+    // recurrence replaces iters×2 scheduled shuffles
+    ScalePath.collectIfSmall(ew) match {
+      case Some(rows) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        val nodes = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct.sorted
+        val seeded: Long => Boolean = seeds.getOrElse(_ => true)
+        var rank = nodes.map(n => n -> (if (seeded(n)) scale else 0L)).toMap
+        for (_ <- 1 to iters) {
+          val in = new scala.collection.mutable.HashMap[Long, Long]()
+          es.foreach { case (s, d, w, ow) =>
+            in(d) = in.getOrElse(d, 0L) + rank(s) * w / ow
+          }
+          rank = nodes.map(n => n ->
+            ((if (seeded(n)) teleport else 0L) + dampNum * in.getOrElse(n, 0L) / dampDen)).toMap
+        }
+        nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
+      case None =>
+        val nodes = ew.select(col("src").as("node"))
+          .union(ew.select(col("dst").as("node")))
+          .distinct()
+          .localCheckpoint(false)
+        // v on seeded nodes, 0 elsewhere
+        def seedOnly(v: Long) = seeds.fold(lit(v))(s =>
+          when(col("node").isInCollection(s), lit(v)).otherwise(lit(0L)))
+        var ranks = nodes.withColumn("rank", seedOnly(scale))
+        for (_ <- 1 to iters) {
+          val contrib = ew.join(ranks, ew("src") === ranks("node"))
+            .select(col("dst"), expr("(rank * w) div ow").as("c"))
+            .groupBy("dst").agg(sum("c").as("s"))
+          ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+            .select(col("node"),
+              (seedOnly(teleport) +
+                expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
+            .localCheckpoint(false)
+        }
+        ranks
     }
-    ranks
   }
 
   /** Bounded-depth reachability with walk counting from a single start
@@ -129,12 +134,11 @@ object Graph {
     * frontier is walk-count-weighted and iteration stops early when it
     * empties. All arithmetic is Int64 adds, so results are partition- and
     * engine-independent. Same dd6/pageRank scale split: seed graphs that
-    * fit on the driver (≤ localEdgeLimit edges) run the identical
-    * recurrence locally instead of paying 2·maxDepth scheduled shuffles.
+    * fit on the driver run the identical recurrence locally instead of
+    * paying 2·maxDepth scheduled shuffles.
     */
   def reachability(edges: DataFrame, srcCol: String, dstCol: String,
-                   start: Long, maxDepth: Int,
-                   localEdgeLimit: Long = 1000000L): DataFrame = {
+                   start: Long, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -142,49 +146,50 @@ object Graph {
       edges(srcCol).cast(LongType).as("src"),
       edges(dstCol).cast(LongType).as("dst"))
       .localCheckpoint(false)
-    val nEdges = e.count() // materializes the checkpoint
-    if (nEdges <= localEdgeLimit) {
-      val adj = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
-      val hops = scala.collection.mutable.HashMap(start -> 0L)
-      val paths = scala.collection.mutable.HashMap(start -> 1L)
-      var frontier = Map(start -> 1L)
-      var d = 0L
-      while (d < maxDepth && frontier.nonEmpty) {
-        val next = scala.collection.mutable.HashMap[Long, Long]()
-        frontier.foreach { case (u, c) =>
-          adj.getOrElse(u, Array.empty[Long]).foreach { v =>
-            next(v) = next.getOrElse(v, 0L) + c
+    ScalePath.collectIfSmall(e) match {
+      case Some(rows) =>
+        val adj = rows.map(r => (r.getLong(0), r.getLong(1)))
+          .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
+        val hops = scala.collection.mutable.HashMap(start -> 0L)
+        val paths = scala.collection.mutable.HashMap(start -> 1L)
+        var frontier = Map(start -> 1L)
+        var d = 0L
+        while (d < maxDepth && frontier.nonEmpty) {
+          val next = scala.collection.mutable.HashMap[Long, Long]()
+          frontier.foreach { case (u, c) =>
+            adj.getOrElse(u, Array.empty[Long]).foreach { v =>
+              next(v) = next.getOrElse(v, 0L) + c
+            }
+          }
+          d += 1
+          next.foreach { case (v, c) =>
+            if (!hops.contains(v)) hops(v) = d
+            paths(v) = paths.getOrElse(v, 0L) + c
+          }
+          frontier = next.toMap
+        }
+        hops.keys.toSeq.sorted.map(n => (n, hops(n), paths(n)))
+          .toDF("node", "hops", "n_paths")
+      case None =>
+        var frontier = Seq((start, 1L)).toDF("node", "cnt").localCheckpoint(false)
+        var acc = frontier.select(col("node"), lit(0L).as("depth"), col("cnt"))
+        var d = 0L
+        var drained = false
+        while (d < maxDepth && !drained) {
+          val next = e.join(frontier, e("src") === frontier("node"))
+            .select(col("dst").as("node"), col("cnt"))
+            .groupBy("node").agg(sum("cnt").as("cnt"))
+            .localCheckpoint(false)
+          d += 1
+          if (next.isEmpty) drained = true
+          else {
+            acc = acc.union(next.select(col("node"), lit(d).as("depth"), col("cnt")))
+            frontier = next
           }
         }
-        d += 1
-        next.foreach { case (v, c) =>
-          if (!hops.contains(v)) hops(v) = d
-          paths(v) = paths.getOrElse(v, 0L) + c
-        }
-        frontier = next.toMap
-      }
-      return hops.keys.toSeq.sorted.map(n => (n, hops(n), paths(n)))
-        .toDF("node", "hops", "n_paths")
+        acc.groupBy("node")
+          .agg(min("depth").as("hops"), sum("cnt").as("n_paths"))
     }
-    var frontier = Seq((start, 1L)).toDF("node", "cnt").localCheckpoint(false)
-    var acc = frontier.select(col("node"), lit(0L).as("depth"), col("cnt"))
-    var d = 0L
-    var drained = false
-    while (d < maxDepth && !drained) {
-      val next = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node"), col("cnt"))
-        .groupBy("node").agg(sum("cnt").as("cnt"))
-        .localCheckpoint(false)
-      d += 1
-      if (next.isEmpty) drained = true
-      else {
-        acc = acc.union(next.select(col("node"), lit(d).as("depth"), col("cnt")))
-        frontier = next
-      }
-    }
-    acc.groupBy("node")
-      .agg(min("depth").as("hops"), sum("cnt").as("n_paths"))
   }
 
   /** Per-node triangle counts over an undirected graph — the local
@@ -257,12 +262,11 @@ object Graph {
     * IMPROVED last round, so work per round is frontier×edges, not
     * walk-count. All arithmetic is Int64 adds and MINs — partition- and
     * engine-independent. Early exit when no distance improves. Same
-    * dd6/pageRank driver fast path under `localEdgeLimit`.
+    * dd6/pageRank driver fast path.
     * Returns (node, dist) for every node reached within maxDepth hops.
     */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
-                    costCol: String, start: Long, maxDepth: Int,
-                    localEdgeLimit: Long = 1000000L): DataFrame = {
+                    costCol: String, start: Long, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -275,53 +279,54 @@ object Graph {
       // recursive-CTE oracle semantics and the relaxation always agree
       .where(col("cost") >= 0)
       .localCheckpoint(false)
-    val nEdges = e.count() // materializes the checkpoint
-    if (nEdges <= localEdgeLimit) {
-      val adj = e.collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
-      val dist = scala.collection.mutable.HashMap(start -> 0L)
-      var frontier = Map(start -> 0L)
-      var d = 0
-      while (d < maxDepth && frontier.nonEmpty) {
-        val improved = scala.collection.mutable.HashMap[Long, Long]()
-        frontier.foreach { case (u, du) =>
-          adj.getOrElse(u, Array.empty[(Long, Long)]).foreach { case (v, c) =>
-            val nd = du + c
-            if (nd < dist.getOrElse(v, Long.MaxValue) &&
-              nd < improved.getOrElse(v, Long.MaxValue)) improved(v) = nd
+    ScalePath.collectIfSmall(e) match {
+      case Some(rows) =>
+        val adj = rows.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+          .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
+        val dist = scala.collection.mutable.HashMap(start -> 0L)
+        var frontier = Map(start -> 0L)
+        var d = 0
+        while (d < maxDepth && frontier.nonEmpty) {
+          val improved = scala.collection.mutable.HashMap[Long, Long]()
+          frontier.foreach { case (u, du) =>
+            adj.getOrElse(u, Array.empty[(Long, Long)]).foreach { case (v, c) =>
+              val nd = du + c
+              if (nd < dist.getOrElse(v, Long.MaxValue) &&
+                nd < improved.getOrElse(v, Long.MaxValue)) improved(v) = nd
+            }
+          }
+          improved.foreach { case (v, nd) => dist(v) = nd }
+          frontier = improved.toMap
+          d += 1
+        }
+        dist.toSeq.sortBy(_._1).toDF("node", "dist")
+      case None =>
+        var dist = Seq((start, 0L)).toDF("node", "dist").localCheckpoint(false)
+        var frontier = dist
+        var d = 0
+        var drained = false
+        while (d < maxDepth && !drained) {
+          val cand = e.join(frontier, e("src") === frontier("node"))
+            .select(col("dst").as("node"), (col("dist") + col("cost")).as("nd"))
+            .groupBy("node").agg(min("nd").as("nd"))
+          val improved = cand.join(dist.select(col("node"), col("dist").as("old")),
+              Seq("node"), "left")
+            .where(col("old").isNull || col("nd") < col("old"))
+            .select(col("node"), col("nd").as("dist"))
+            .localCheckpoint(false)
+          d += 1
+          if (improved.isEmpty) drained = true
+          else {
+            dist = dist.join(improved.select(col("node").as("__in"), col("dist").as("__nd")),
+                dist("node") === col("__in"), "full_outer")
+              .select(coalesce(col("node"), col("__in")).as("node"),
+                coalesce(col("__nd"), col("dist")).as("dist"))
+              .localCheckpoint(false)
+            frontier = improved
           }
         }
-        improved.foreach { case (v, nd) => dist(v) = nd }
-        frontier = improved.toMap
-        d += 1
-      }
-      return dist.toSeq.sortBy(_._1).toDF("node", "dist")
+        dist
     }
-    var dist = Seq((start, 0L)).toDF("node", "dist").localCheckpoint(false)
-    var frontier = dist
-    var d = 0
-    var drained = false
-    while (d < maxDepth && !drained) {
-      val cand = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node"), (col("dist") + col("cost")).as("nd"))
-        .groupBy("node").agg(min("nd").as("nd"))
-      val improved = cand.join(dist.select(col("node"), col("dist").as("old")),
-          Seq("node"), "left")
-        .where(col("old").isNull || col("nd") < col("old"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint(false)
-      d += 1
-      if (improved.isEmpty) drained = true
-      else {
-        dist = dist.join(improved.select(col("node").as("__in"), col("dist").as("__nd")),
-            dist("node") === col("__in"), "full_outer")
-          .select(coalesce(col("node"), col("__in")).as("node"),
-            coalesce(col("__nd"), col("dist")).as("dist"))
-          .localCheckpoint(false)
-        frontier = improved
-      }
-    }
-    dist
   }
 
   /** Fixed-round k-core peeling ("onion decomposition", Batagelj–Zaveršnik
@@ -345,12 +350,12 @@ object Graph {
     * pageRank shuffle layout — shuffles bounded by the CURRENT subgraph,
     * which only shrinks), and the loop exits early at the fixpoint.
     * Lineage is truncated every round with lazy localCheckpoints. Same
-    * dd6/pageRank driver fast path: link graphs under `localEdgeLimit`
+    * dd6/pageRank driver fast path: link graphs that fit on the driver
     * run the identical set recurrence locally — bit-equal results
     * (OpsSpec asserts both paths agree).
     */
   def kCorePeel(edges: DataFrame, aCol: String, bCol: String, k: Int,
-                rounds: Int, localEdgeLimit: Long = 1000000L): DataFrame = {
+                rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
@@ -363,51 +368,50 @@ object Graph {
     // doubled (both directions) so degree = count of rows keyed on "a"
     val ue = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(false)
-    val nEdges = ue.count() // materializes the checkpoint
-    if (nEdges <= localEdgeLimit) {
-      val es = ue.collect().map(r => (r.getString(0), r.getString(1)))
-      val adj: Map[String, Array[String]] =
-        es.groupBy(_._1).map { case (n, a) => n -> a.map(_._2) }
-      var alive: Set[String] = adj.keySet
-      val peeled = scala.collection.mutable.HashMap[String, Long]()
-      var r = 1
-      var done = false
-      while (r <= rounds && !done) {
-        val dead = alive.filter(n => adj(n).count(alive.contains) < k)
-        if (dead.isEmpty) done = true
-        else {
-          dead.foreach(n => peeled(n) = r.toLong)
-          alive = alive -- dead
-          r += 1
+    ScalePath.collectIfSmall(ue) match {
+      case Some(rows) =>
+        val adj: Map[String, Array[String]] = rows.map(r => (r.getString(0), r.getString(1)))
+          .groupBy(_._1).map { case (n, a) => n -> a.map(_._2) }
+        var alive: Set[String] = adj.keySet
+        val peeled = scala.collection.mutable.HashMap[String, Long]()
+        var r = 1
+        var done = false
+        while (r <= rounds && !done) {
+          val dead = alive.filter(n => adj(n).count(alive.contains) < k)
+          if (dead.isEmpty) done = true
+          else {
+            dead.foreach(n => peeled(n) = r.toLong)
+            alive = alive -- dead
+            r += 1
+          }
         }
-      }
-      return (peeled.toSeq ++ alive.toSeq.map(_ -> 0L))
-        .toDF("node", "peel_round")
+        (peeled.toSeq ++ alive.toSeq.map(_ -> 0L)).toDF("node", "peel_round")
+      case None =>
+        var alive = ue.select(col("a").as("node")).distinct().localCheckpoint(false)
+        var removed = spark.emptyDataset[(String, Long)].toDF("node", "peel_round")
+        var r = 1
+        var done = false
+        while (r <= rounds && !done) {
+          val deg = ue
+            .join(alive.select(col("node").as("a")), "a", "left_semi")
+            .join(alive.select(col("node").as("b")), "b", "left_semi")
+            .groupBy("a").agg(count(lit(1)).as("d"))
+          val survivors = deg.where(col("d") >= k)
+            .select(col("a").as("node"))
+            .localCheckpoint(false)
+          val dead = alive.join(survivors, Seq("node"), "left_anti")
+            .localCheckpoint(false)
+          if (dead.isEmpty) done = true
+          else {
+            removed = removed
+              .union(dead.select(col("node"), lit(r.toLong).as("peel_round")))
+              .localCheckpoint(false)
+            alive = survivors
+            r += 1
+          }
+        }
+        removed.union(alive.select(col("node"), lit(0L).as("peel_round")))
     }
-    var alive = ue.select(col("a").as("node")).distinct().localCheckpoint(false)
-    var removed = spark.emptyDataset[(String, Long)].toDF("node", "peel_round")
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val deg = ue
-        .join(alive.select(col("node").as("a")), "a", "left_semi")
-        .join(alive.select(col("node").as("b")), "b", "left_semi")
-        .groupBy("a").agg(count(lit(1)).as("d"))
-      val survivors = deg.where(col("d") >= k)
-        .select(col("a").as("node"))
-        .localCheckpoint(false)
-      val dead = alive.join(survivors, Seq("node"), "left_anti")
-        .localCheckpoint(false)
-      if (dead.isEmpty) done = true
-      else {
-        removed = removed
-          .union(dead.select(col("node"), lit(r.toLong).as("peel_round")))
-          .localCheckpoint(false)
-        alive = survivors
-        r += 1
-      }
-    }
-    removed.union(alive.select(col("node"), lit(0L).as("peel_round")))
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) — `iters` UNNORMALIZED
@@ -422,8 +426,7 @@ object Graph {
     * aggregate per half-round over a checkpointed edge list; driver
     * fast path under the shared edge budget.
     */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int = 3,
-           localEdgeLimit: Long = 1000000L): DataFrame = {
+  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -432,7 +435,6 @@ object Graph {
         edges(dstCol).cast(LongType).as("dst"))
       .distinct()
       .localCheckpoint(false)
-    val nEdges = e.count() // materializes the checkpoint
     // pre-flight overflow bound covering BOTH paths (the distributed
     // loop's sums are plain non-ANSI Long adds, which would WRAP):
     // h_t <= (maxInDeg · maxOutDeg)^t, so require the bound fits Int64.
@@ -452,50 +454,50 @@ object Graph {
         s"HITS overflow after unnormalized growth — lower iters")
       r
     }
-    if (nEdges <= localEdgeLimit) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nodes = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
-      var h = nodes.map(_ -> 1L).toMap
-      var a = nodes.map(_ -> 1L).toMap
-      for (_ <- 1 to iters) {
-        val a1 = scala.collection.mutable.HashMap[Long, Long]().withDefaultValue(0L)
-        es.foreach { case (u, v) => a1(v) = checkedAdd(a1(v), h(u)) }
-        a = nodes.map(n => n -> a1(n)).toMap
-        val h1 = scala.collection.mutable.HashMap[Long, Long]().withDefaultValue(0L)
-        es.foreach { case (u, v) => h1(u) = checkedAdd(h1(u), a(v)) }
-        h = nodes.map(n => n -> h1(n)).toMap
-      }
-      return nodes.sorted.map(n => (n, h(n), a(n))).toSeq
-        .toDF("node", "hub", "auth")
+    ScalePath.collectIfSmall(e) match {
+      case Some(rows) =>
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val nodes = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
+        var h = nodes.map(_ -> 1L).toMap
+        var a = nodes.map(_ -> 1L).toMap
+        for (_ <- 1 to iters) {
+          val a1 = scala.collection.mutable.HashMap[Long, Long]().withDefaultValue(0L)
+          es.foreach { case (u, v) => a1(v) = checkedAdd(a1(v), h(u)) }
+          a = nodes.map(n => n -> a1(n)).toMap
+          val h1 = scala.collection.mutable.HashMap[Long, Long]().withDefaultValue(0L)
+          es.foreach { case (u, v) => h1(u) = checkedAdd(h1(u), a(v)) }
+          h = nodes.map(n => n -> h1(n)).toMap
+        }
+        nodes.sorted.map(n => (n, h(n), a(n))).toSeq.toDF("node", "hub", "auth")
+      case None =>
+        val nodes = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node")))
+          .distinct()
+          .localCheckpoint(false)
+        var h = nodes.withColumn("hub", lit(1L))
+        var a = nodes.withColumn("auth", lit(1L))
+        for (_ <- 1 to iters) {
+          val aIn = e.join(h.select(col("node").as("src"), col("hub")), "src")
+            .groupBy(col("dst").as("node")).agg(sum("hub").as("s"))
+          a = nodes.join(aIn, Seq("node"), "left")
+            .select(col("node"), coalesce(col("s"), lit(0L)).as("auth"))
+            .localCheckpoint(false)
+          val hOut = e.join(a.select(col("node").as("dst"), col("auth")), "dst")
+            .groupBy(col("src").as("node")).agg(sum("auth").as("s"))
+          h = nodes.join(hOut, Seq("node"), "left")
+            .select(col("node"), coalesce(col("s"), lit(0L)).as("hub"))
+            .localCheckpoint(false)
+        }
+        h.join(a, "node").select(col("node"), col("hub"), col("auth"))
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
-    var h = nodes.withColumn("hub", lit(1L))
-    var a = nodes.withColumn("auth", lit(1L))
-    for (_ <- 1 to iters) {
-      val aIn = e.join(h.select(col("node").as("src"), col("hub")), "src")
-        .groupBy(col("dst").as("node")).agg(sum("hub").as("s"))
-      a = nodes.join(aIn, Seq("node"), "left")
-        .select(col("node"), coalesce(col("s"), lit(0L)).as("auth"))
-        .localCheckpoint(false)
-      val hOut = e.join(a.select(col("node").as("dst"), col("auth")), "dst")
-        .groupBy(col("src").as("node")).agg(sum("auth").as("s"))
-      h = nodes.join(hOut, Seq("node"), "left")
-        .select(col("node"), coalesce(col("s"), lit(0L)).as("hub"))
-        .localCheckpoint(false)
-    }
-    h.join(a, "node").select(col("node"), col("hub"), col("auth"))
   }
 
   /** PERSONALIZED PageRank — pageRank with the teleport mass restricted
     * to a seed set: rank flows out from the seeds through the weighted
     * edges, giving "importance relative to THESE nodes" — the
     * recommendation-expansion / related-items primitive (vs global
-    * PageRank's "importance overall"). Same exact-Int64 recurrence,
-    * shuffle layout, and driver/distributed split as `pageRank`; the
-    * only change is the teleport vector:
+    * PageRank's "importance overall"). `pageRank` is this recurrence
+    * with every node seeded; the only change is the teleport vector:
     *
     *   rank₀(v)    = scale·[v ∈ S]
     *   rank_{t+1}(v) = teleport·[v ∈ S] + d·Σ_{(u,v)} rank_t(u)·w/ow
@@ -507,56 +509,9 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            wCol: String, seeds: Set[Long], iters: Int = 10,
                            scale: Long = 1000000L,
-                           dampNum: Long = 85L, dampDen: Long = 100L,
-                           localEdgeLimit: Long = 1000000L): DataFrame = {
-    require(iters >= 1 && seeds.nonEmpty, "need iters >= 1 and a non-empty seed set")
-    val e = edges.select(
-        edges(srcCol).cast(LongType).as("src"),
-        edges(dstCol).cast(LongType).as("dst"),
-        edges(wCol).cast(LongType).as("w"))
-      .where(col("w") > 0)
-    val ew = e.join(e.groupBy("src").agg(sum("w").as("ow")), "src")
-      .select("src", "dst", "w", "ow")
-      .localCheckpoint(false)
-    val teleport = (dampDen - dampNum) * scale / dampDen
-    val nEdges = ew.count()
-    if (nEdges <= localEdgeLimit) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = ew.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val nodes0 = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
-      var rank = nodes0.map(n => n -> (if (seeds(n)) scale else 0L)).toMap
-      var i = 0
-      while (i < iters) {
-        val in = new scala.collection.mutable.HashMap[Long, Long]()
-        es.foreach { case (s, d, w, ow) =>
-          in(d) = in.getOrElse(d, 0L) + rank(s) * w / ow
-        }
-        rank = nodes0.map(n => n ->
-          ((if (seeds(n)) teleport else 0L) + dampNum * in.getOrElse(n, 0L) / dampDen)).toMap
-        i += 1
-      }
-      return nodes0.sorted.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
-    }
-    val nodes = ew.select(col("src").as("node"))
-      .union(ew.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
-    val seedExpr = col("node").isInCollection(seeds)
-    var ranks = nodes.withColumn("rank", when(seedExpr, lit(scale)).otherwise(lit(0L)))
-    var i = 0
-    while (i < iters) {
-      val contrib = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst"), expr("(rank * w) div ow").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (when(seedExpr, lit(teleport)).otherwise(lit(0L)) +
-            expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
-        .localCheckpoint(false)
-      i += 1
-    }
-    ranks
+                           dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
+    require(seeds.nonEmpty, "need a non-empty seed set")
+    rankFlow(edges, srcCol, dstCol, wCol, Some(seeds), iters, scale, dampNum, dampDen)
   }
 
   /** Synchronous weighted label propagation — community detection with a
@@ -573,14 +528,14 @@ object Graph {
     * struct-MAX aggregate — two map-side-combined hash aggregations per
     * round over the checkpointed adjacency, NO per-node sort and no
     * window (the tie-break rides max(struct(wsum, -label))). Same scale
-    * split as pageRank/hits: graphs at or under `localEdgeLimit` run the
-    * identical recurrence on the driver (link/item graphs are usually
-    * tiny next to the corpus); the loop below is the 100 TB path.
+    * split as pageRank/hits: graphs that fit on the driver run the
+    * identical recurrence there (link/item graphs are usually tiny next
+    * to the corpus); the loop below is the 100 TB path.
     * Returns (node, community) where community is the round-`iters`
     * label.
     */
   def lpaCommunities(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-                     iters: Int = 4, localEdgeLimit: Long = 1000000L): DataFrame = {
+                     iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -597,41 +552,48 @@ object Graph {
     val adj = und.select(col("a").as("node"), col("b").as("nb"), col("w"))
       .union(und.select(col("b").as("node"), col("a").as("nb"), col("w")))
       .localCheckpoint(false)
-    val nAdj = adj.count() // materializes the checkpoint
-    if (nAdj <= 2 * localEdgeLimit) {
-      val es = adj.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val nodes = es.map(_._1).distinct
-      var lab = nodes.map(n => n -> n).toMap
-      for (_ <- 1 to iters) {
-        val score = new scala.collection.mutable.HashMap[(Long, Long), Long]()
-        es.foreach { case (v, u, w) =>
-          val l = lab(u)
-          score((v, l)) = score.getOrElse((v, l), 0L) + w
+    // the adjacency holds every undirected edge twice
+    ScalePath.collectIfSmall(adj, 2 * ScalePath.DriverRows) match {
+      case Some(rows) =>
+        val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val nodes = es.map(_._1).distinct
+        var lab = nodes.map(n => n -> n).toMap
+        for (_ <- 1 to iters) {
+          val best = bestLabels(es.iterator.map { case (v, u, w) => (v, lab(u), w) })
+          lab = nodes.map(n => n -> best(n)).toMap
         }
-        val best = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
-        score.foreach { case ((v, l), s) =>
-          best.get(v) match {
-            case Some((bl, bs)) if s < bs || (s == bs && l > bl) => ()
-            case _ => best(v) = (l, s)
-          }
+        nodes.sorted.map(n => (n, lab(n))).toSeq.toDF("node", "community")
+      case None =>
+        var labels = adj.select(col("node")).distinct()
+          .withColumn("lab", col("node"))
+          .localCheckpoint(false)
+        for (_ <- 1 to iters) {
+          val scored = adj.join(labels.select(col("node").as("nb"), col("lab")), "nb")
+            .groupBy("node", "lab").agg(sum("w").as("ws"))
+          labels = scored
+            .groupBy("node")
+            .agg(max(struct(col("ws"), (-col("lab")).as("nl"))).as("best"))
+            .select(col("node"), (-col("best.nl")).as("lab"))
+            .localCheckpoint(false)
         }
-        lab = nodes.map(n => n -> best(n)._1).toMap
+        labels.select(col("node"), col("lab").as("community"))
+    }
+  }
+
+  /** The driver twin of the distributed max(struct(score, -label)):
+    * per node, the label whose (node, label, weight) votes sum highest,
+    * ties → MIN label. */
+  private def bestLabels(votes: Iterator[(Long, Long, Long)]): Map[Long, Long] = {
+    val score = new scala.collection.mutable.HashMap[(Long, Long), Long]()
+    votes.foreach { case (v, l, w) => score((v, l)) = score.getOrElse((v, l), 0L) + w }
+    val best = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
+    score.foreach { case ((v, l), s) =>
+      best.get(v) match {
+        case Some((bl, bs)) if s < bs || (s == bs && l > bl) => ()
+        case _ => best(v) = (l, s)
       }
-      return nodes.sorted.map(n => (n, lab(n))).toSeq.toDF("node", "community")
     }
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("lab", col("node"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val scored = adj.join(labels.select(col("node").as("nb"), col("lab")), "nb")
-        .groupBy("node", "lab").agg(sum("w").as("ws"))
-      labels = scored
-        .groupBy("node")
-        .agg(max(struct(col("ws"), (-col("lab")).as("nl"))).as("best"))
-        .select(col("node"), (-col("best.nl")).as("lab"))
-        .localCheckpoint(false)
-    }
-    labels.select(col("node"), col("lab").as("community"))
+    best.iterator.map { case (v, (l, _)) => v -> l }.toMap
   }
 
   /** SEEDED (semi-supervised) label spread — lpaCommunities' recurrence
@@ -653,7 +615,7 @@ object Graph {
     */
   def labelSpread(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedNodeCol: String, seedLabCol: String,
-                  iters: Int, localEdgeLimit: Long = 1000000L): DataFrame = {
+                  iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val dir = edges.select(edges(srcCol).cast(LongType).as("a"),
         edges(dstCol).cast(LongType).as("b"))
@@ -671,62 +633,48 @@ object Graph {
     // fits on the driver, one collect + the identical local recurrence
     // replaces iters × (join + 2 aggregates) scheduled shuffles. The
     // loop below stays the 100 TB path.
-    val nAdj = adj.count() // materializes the checkpoint either way
-    if (nAdj <= 2 * localEdgeLimit) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = adj.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nodes = es.map(_._1).distinct
-      val nodeSet = nodes.toSet
-      // clamp labels: only seeds of graph nodes participate, exactly the
-      // distributed left join; a null seed label means "unseeded"
-      val slab = new scala.collection.mutable.HashMap[Long, Long]()
-      sd.collect().foreach { r =>
-        if (!r.isNullAt(1) && nodeSet.contains(r.getLong(0)))
-          slab(r.getLong(0)) = r.getLong(1)
-      }
-      var lab: Map[Long, Option[Long]] = nodes.map(n => n -> slab.get(n)).toMap
-      for (_ <- 1 to iters) {
-        // votes: per node, count labels over LABELED neighbors
-        val score = new scala.collection.mutable.HashMap[(Long, Long), Long]()
-        es.foreach { case (v, u) =>
-          lab(u).foreach { l =>
-            score((v, l)) = score.getOrElse((v, l), 0L) + 1L
-          }
+    ScalePath.collectIfSmall(adj, 2 * ScalePath.DriverRows) match {
+      case Some(rows) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val nodes = es.map(_._1).distinct
+        val nodeSet = nodes.toSet
+        // clamp labels: only seeds of graph nodes participate, exactly the
+        // distributed left join; a null seed label means "unseeded"
+        val slab = new scala.collection.mutable.HashMap[Long, Long]()
+        sd.collect().foreach { r =>
+          if (!r.isNullAt(1) && nodeSet.contains(r.getLong(0)))
+            slab(r.getLong(0)) = r.getLong(1)
         }
-        // majority, ties -> MIN label (max(struct(c, -lab)))
-        val best = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
-        score.foreach { case ((v, l), c) =>
-          best.get(v) match {
-            case Some((bl, bc)) if c < bc || (c == bc && l > bl) => ()
-            case _ => best(v) = (l, c)
-          }
+        var lab: Map[Long, Option[Long]] = nodes.map(n => n -> slab.get(n)).toMap
+        for (_ <- 1 to iters) {
+          // majority over LABELED neighbors
+          val best = bestLabels(es.iterator.flatMap { case (v, u) => lab(u).map(l => (v, l, 1L)) })
+          lab = nodes.map(n => n -> slab.get(n).orElse(best.get(n)).orElse(lab(n))).toMap
         }
-        lab = nodes.map { n =>
-          n -> slab.get(n).orElse(best.get(n).map(_._1).orElse(lab(n)))
-        }.toMap
-      }
-      return nodes.sorted.map(n => (n, lab(n))).toSeq.toDF("node", "lab")
+        nodes.sorted.map(n => (n, lab(n))).toSeq.toDF("node", "lab")
+      case None =>
+        // (node, slab, lab): slab the clamp, lab the current assignment
+        var lab = adj.select(col("node")).distinct()
+          .join(sd, Seq("node"), "left")
+          .withColumn("lab", col("slab"))
+          .localCheckpoint(false)
+        for (_ <- 1 to iters) {
+          val votes = adj
+            .join(lab.where(col("lab").isNotNull)
+              .select(col("node").as("nb"), col("lab").as("nblab")), "nb")
+            .groupBy("node", "nblab").agg(count(lit(1)).as("c"))
+            .groupBy("node")
+            .agg(max(struct(col("c"), (-col("nblab")).as("nl"))).as("best"))
+            .select(col("node"), (-col("best.nl")).as("vlab"))
+          lab = lab.join(votes, Seq("node"), "left")
+            .select(col("node"), col("slab"),
+              coalesce(col("slab"), coalesce(col("vlab"), col("lab"))).as("lab"))
+            .localCheckpoint(false)
+        }
+        lab.select(col("node"), col("lab"))
     }
-    // (node, slab, lab): slab the clamp, lab the current assignment
-    var lab = adj.select(col("node")).distinct()
-      .join(sd, Seq("node"), "left")
-      .withColumn("lab", col("slab"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val votes = adj
-        .join(lab.where(col("lab").isNotNull)
-          .select(col("node").as("nb"), col("lab").as("nblab")), "nb")
-        .groupBy("node", "nblab").agg(count(lit(1)).as("c"))
-        .groupBy("node")
-        .agg(max(struct(col("c"), (-col("nblab")).as("nl"))).as("best"))
-        .select(col("node"), (-col("best.nl")).as("vlab"))
-      lab = lab.join(votes, Seq("node"), "left")
-        .select(col("node"), col("slab"),
-          coalesce(col("slab"), coalesce(col("vlab"), col("lab"))).as("lab"))
-        .localCheckpoint(false)
-    }
-    lab.select(col("node"), col("lab"))
   }
 
   /** The events-table item graph: consecutive items (props.k) per user in

@@ -305,8 +305,7 @@ object TextDedup {
     * re-execute rounds 1..N-1. Fixpoint detected by the monotone label
     * sum. Returns (doc_id, group_id) for every node of the graph.
     */
-  def duplicateGroups(pairs: DataFrame, maxIters: Int = 20,
-                      localEdgeLimit: Int = 1000000): DataFrame = {
+  def duplicateGroups(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // symmetrize in ONE pass over pairs (a union of two selects would
     // execute the upstream pair pipeline twice — no CSE across branches)
     val edges = pairs
@@ -323,58 +322,59 @@ object TextDedup {
     // exactly in O(E α(E)) with zero iterative jobs. The distributed
     // min-label loop below stays the scale path for graphs above the
     // bound — the decision reads one cheap count off the cached edges.
-    val nEdges = edges.count()
-    if (nEdges <= localEdgeLimit) {
-      val spark = pairs.sparkSession
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      es.foreach { case (x, y) =>
-        parent.putIfAbsent(x, x); parent.putIfAbsent(y, y)
-        val rx = find(x); val ry = find(y)
-        // union by MIN id so every root IS its component's group id
-        if (rx != ry) { if (rx < ry) parent.put(ry, rx) else parent.put(rx, ry) }
-      }
-      val out = parent.keySet().toArray(Array.empty[java.lang.Long])
-        .map(id => (id.longValue(), find(id.longValue())))
-      import spark.implicits._
-      return out.toSeq.toDF("doc_id", "group_id")
+    ScalePath.collectIfSmall(edges) match {
+      case Some(rows) =>
+        val spark = pairs.sparkSession
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        edges.unpersist()
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x
+          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
+        }
+        es.foreach { case (x, y) =>
+          parent.putIfAbsent(x, x); parent.putIfAbsent(y, y)
+          val rx = find(x); val ry = find(y)
+          // union by MIN id so every root IS its component's group id
+          if (rx != ry) { if (rx < ry) parent.put(ry, rx) else parent.put(rx, ry) }
+        }
+        val out = parent.keySet().toArray(Array.empty[java.lang.Long])
+          .map(id => (id.longValue(), find(id.longValue())))
+        import spark.implicits._
+        out.toSeq.toDF("doc_id", "group_id")
+      case None =>
+        // iteration 0 baked in: every node starts from min(self, neighbors)
+        var labels = edges
+          .groupBy(col("a").as("id")).agg(least(first(col("a")), min(col("b"))).as("lbl"))
+          .localCheckpoint(false)
+        var prevSum = labels.agg(sum("lbl")).collect()(0).getLong(0) // materializes ckpt
+        var converged = false
+        var iter = 0
+        while (!converged && iter < maxIters) {
+          val nbrMin = edges.join(labels, edges("b") === labels("id"))
+            .groupBy(col("a").as("id")).agg(min("lbl").as("nlbl"))
+          // lazy checkpoint: the convergence aggregate below is the single
+          // action that both materializes this round and reads its label sum
+          labels = labels.join(nbrMin, Seq("id"), "left")
+            .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+            .localCheckpoint(false)
+          val s = labels.agg(sum("lbl")).collect()(0).getLong(0)
+          converged = s == prevSum // label sum is strictly decreasing until fixpoint
+          prevSum = s
+          iter += 1
+        }
+        edges.unpersist()
+        // a silent non-converged result would mislabel clusters (and diverge
+        // from the transitive-closure oracle) — fail loudly instead
+        if (!converged)
+          throw new IllegalStateException(
+            s"duplicateGroups did not converge within $maxIters iterations " +
+              "(component diameter exceeds the cap); raise maxIters")
+        labels.select(col("id").as("doc_id"), col("lbl").as("group_id"))
     }
-    // iteration 0 baked in: every node starts from min(self, neighbors)
-    var labels = edges
-      .groupBy(col("a").as("id")).agg(least(first(col("a")), min(col("b"))).as("lbl"))
-      .localCheckpoint(false)
-    var prevSum = labels.agg(sum("lbl")).collect()(0).getLong(0) // materializes ckpt
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val nbrMin = edges.join(labels, edges("b") === labels("id"))
-        .groupBy(col("a").as("id")).agg(min("lbl").as("nlbl"))
-      // lazy checkpoint: the convergence aggregate below is the single
-      // action that both materializes this round and reads its label sum
-      labels = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(false)
-      val s = labels.agg(sum("lbl")).collect()(0).getLong(0)
-      converged = s == prevSum // label sum is strictly decreasing until fixpoint
-      prevSum = s
-      iter += 1
-    }
-    edges.unpersist()
-    // a silent non-converged result would mislabel clusters (and diverge
-    // from the transitive-closure oracle) — fail loudly instead
-    if (!converged)
-      throw new IllegalStateException(
-        s"duplicateGroups did not converge within $maxIters iterations " +
-          "(component diameter exceeds the cap); raise maxIters")
-    labels.select(col("id").as("doc_id"), col("lbl").as("group_id"))
   }
 
   /** Weighted 64-bit SimHash (the standard Charikar construction with

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *   scripts/run.sh graft.tools.Explain <sfDir> <query>
   *
   * Session overrides go through SPARK_GRAFT_CONF (e.g.
-  * `SPARK_GRAFT_CONF=graft.rank.smallBytes=0` to audit the
-  * DistributedRank scale path).
+  * `SPARK_GRAFT_CONF=graft.forceScalePaths=true` to audit the
+  * distributed paths of the size-gated operators).
   */
 object Explain {
   def main(args: Array[String]): Unit = {

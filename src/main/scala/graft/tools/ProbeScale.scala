@@ -71,15 +71,20 @@ object ProbeScale {
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val suites = if (args.size > 2) args.drop(2).toSeq else Seq("r13")
     val spark = graft.Sessions.build(graft.Sessions.Batch, Some(sfDir))
-    suites.foreach {
-      case "text" => text(spark, sfDir, mult)
-      case "r8" => r8(spark, sfDir, mult)
-      case "r9" => r9(spark, sfDir, mult)
-      case "r12" => r12(spark, sfDir, mult)
-      case "r13" => r13(spark, sfDir, mult)
-      case "r14" => r14(spark, sfDir, mult)
-      case "r17" => r17(spark, sfDir, mult)
-      case other => sys.error(s"unknown suite $other (text|r8|r9|r12|r13|r14|r17)")
+    suites.foreach { suite =>
+      // r8/r9/r12/r13 time the distributed spellings at BOTH multipliers,
+      // so growth isolates them, not the driver-or-cluster switch
+      spark.conf.set(graft.ops.ScalePath.Conf, Set("r8", "r9", "r12", "r13")(suite))
+      suite match {
+        case "text" => text(spark, sfDir, mult)
+        case "r8" => r8(spark, sfDir, mult)
+        case "r9" => r9(spark, sfDir, mult)
+        case "r12" => r12(spark, sfDir, mult)
+        case "r13" => r13(spark, sfDir, mult)
+        case "r14" => r14(spark, sfDir, mult)
+        case "r17" => r17(spark, sfDir, mult)
+        case other => sys.error(s"unknown suite $other (text|r8|r9|r12|r13|r14|r17)")
+      }
     }
     spark.stop()
   }
@@ -151,7 +156,7 @@ object ProbeScale {
       println(s"== x$m: events ${ev.count()}, docs ${docs.count()}")
       t(s"gr1 pagerank x$m (distributed path)")(noop(
         graft.ops.Graph.pageRank(graft.ops.Graph.itemTransitionEdges(ev),
-          "src", "dst", "w", iters = 10, localEdgeLimit = 0L)))
+          "src", "dst", "w", iters = 10)))
       t(s"ev12 interval-join x$m") {
         val errors = ev.where(col("event_type") === "error")
           .select(col("event_id"), unix_micros(col("ts")).as("tus"))
@@ -182,8 +187,7 @@ object ProbeScale {
           .select(concat(lit("u:"), col("user_id").cast("string")).as("a"),
             concat(lit("i:"),
               get_json_object(col("props"), "$.k").cast("long").cast("string")).as("b"))
-        noop(graft.ops.Graph.kCorePeel(bip, "a", "b", k = 11, rounds = 12,
-          localEdgeLimit = 0L))
+        noop(graft.ops.Graph.kCorePeel(bip, "a", "b", k = 11, rounds = 12))
       }
       t(s"gr5 shortest paths x$m (distributed loop)") {
         val edges = graft.ops.Graph.itemTransitionEdges(ev).localCheckpoint(false)
@@ -192,7 +196,7 @@ object ProbeScale {
           .where(lit(2) * col("w") * col("c") > lit(3) * col("s"))
           .select(col("src"), col("dst"), expr("1000000L div w").as("cost"))
         noop(graft.ops.Graph.shortestPaths(se, "src", "dst", "cost",
-          start = 0L, maxDepth = 6, localEdgeLimit = 0L))
+          start = 0L, maxDepth = 6))
       }
       t(s"q42 KMV sketch intersect x$m") {
         import graft.functions.MinKMd5Aggregate.min_k_md5
@@ -260,9 +264,9 @@ object ProbeScale {
         emb, "vec_id", "embedding", k = 3, planes = 6, dim = 64)))
       val edges = graft.ops.Graph.itemTransitionEdges(ev).localCheckpoint(false)
       t(s"gr9 LPA x$m (distributed loop)")(noop(graft.ops.Graph.lpaCommunities(
-        edges, "src", "dst", "w", iters = 4, localEdgeLimit = 0L)))
+        edges, "src", "dst", "w", iters = 4)))
       t(s"gr10 PPR x$m (distributed loop)")(noop(graft.ops.Graph.personalizedPageRank(
-        edges, "src", "dst", "w", seeds = Set(1L, 2L, 3L), iters = 10, localEdgeLimit = 0L)))
+        edges, "src", "dst", "w", seeds = Set(1L, 2L, 3L), iters = 10)))
       t(s"mm7 shared frames x$m")(noop(graft.ops.Multimodal.sharedFramePairs(spark,
         graft.ops.Multimodal.asBinaryTable(docs, "doc_id", "text"))))
       t(s"ev33 dau/mau contribution explode x$m") {
@@ -289,10 +293,7 @@ object ProbeScale {
 
   private def r13(spark: SparkSession, sfDir: String, mult: Int): Unit = {
     import graft.ops.DistributedRank
-    // force the scale path at BOTH multipliers so growth isolates the
-    // rank machinery, not the small-input switch
-    spark.conf.set("graft.rank.smallBytes", "0")
-    try for (m <- Seq(1, mult)) {
+    for (m <- Seq(1, mult)) {
       val ev = repEvents(spark, sfDir, m)
       val docs = repDocs(spark, sfDir, m)
       println(s"== x$m: events ${ev.count()}, docs ${docs.count()}")
@@ -410,7 +411,7 @@ object ProbeScale {
             |FROM bom GROUP BY root""".stripMargin))
       }
       ev.unpersist(); docs.unpersist()
-    } finally spark.conf.unset("graft.rank.smallBytes")
+    }
   }
 
   /** Round-14 ops: incremental dedup (dd19) and BPE training (tx30).

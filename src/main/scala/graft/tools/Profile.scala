@@ -25,7 +25,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Session overrides go through SPARK_GRAFT_CONF; a constrained-heap
   * spill run is e.g.
-  *   SPARK_DRIVER_MEM=1200m SPARK_GRAFT_CONF=graft.rank.smallBytes=0 \
+  *   SPARK_DRIVER_MEM=1200m SPARK_GRAFT_CONF=graft.forceScalePaths=true \
   *     scripts/run.sh graft.tools.Profile /tmp/sf1 q46,tx29,ev35 1
   */
 object Profile {

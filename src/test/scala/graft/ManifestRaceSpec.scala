@@ -10,12 +10,14 @@ import graft.lake.Manifest.TableManifest
   * so the attempts genuinely overlap.
   */
 object CommitRacer {
+  val NoBarrier = "barrier never appeared"
+
   def main(args: Array[String]): Unit = {
     val Array(tableRoot, tag, barrier, roundsStr) = args
     val rounds = roundsStr.toInt
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
     while (!new java.io.File(barrier).exists()) {
-      if (System.nanoTime() > deadline) sys.error("barrier never appeared")
+      if (System.nanoTime() > deadline) sys.error(NoBarrier)
       Thread.sleep(2)
     }
     (1 to rounds).foreach { v =>
@@ -35,16 +37,30 @@ object CommitRacer {
   * and the stored manifest is byte-complete from a single winner — no
   * lost updates, no interleaved content.
   */
-class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
+class ManifestRaceSpec extends SparkSpec {
+  import ManifestRaceSpec.Starved
 
   // Every test here races real processes/threads against wall-clock
-  // deadlines, so a heavily loaded box (e.g. the driver running the
-  // 32-core bench alongside) can starve a racer past a deadline without
-  // any contract violation. Retry once before declaring failure; a
-  // genuine protocol bug (two winners, lost update, interleaved bytes)
-  // is deterministic under retry and still fails loudly.
+  // deadlines, so a heavily loaded box can starve a racer past a deadline
+  // without any contract violation. Only that failure — a Starved — is
+  // retried once (a pass on the retry reports as canceled, a flicker); a
+  // contract assertion (two winners, lost update, interleaved bytes)
+  // fails on its first occurrence.
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    withRetry(super.withFixture(test))
+    super.withFixture(test) match {
+      case first @ org.scalatest.Failed(_: Starved) =>
+        super.withFixture(test) match {
+          case org.scalatest.Succeeded =>
+            org.scalatest.Canceled("starved on the first try, passed on the retry",
+              first.exception)
+          case retry => retry
+        }
+      case outcome => outcome
+    }
+
+  /** Fails with Starved, not a contract failure, unless `ok`. */
+  private def unstarved(ok: Boolean, what: => String): Unit =
+    if (!ok) throw new Starved(what)
 
   private def launch(tableRoot: String, tag: String, barrier: String,
                      rounds: Int): Process = {
@@ -58,9 +74,10 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
 
   private def drain(p: Process): Seq[String] = {
     val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    assert(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS), "racer timed out")
-    assert(p.exitValue() === 0,
-      s"racer failed: ${new String(p.getErrorStream.readAllBytes(), "UTF-8").take(1500)}")
+    unstarved(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS), "racer timed out")
+    val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
+    unstarved(!err.contains(CommitRacer.NoBarrier), "racer never saw the start barrier")
+    assert(p.exitValue() === 0, s"racer failed: ${err.take(1500)}")
     out.linesIterator.filter(_.startsWith("v=")).toSeq
   }
 
@@ -106,7 +123,7 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join(300000))
-    assert(threads.forall(!_.isAlive), "racer threads still running at deadline")
+    unstarved(threads.forall(!_.isAlive), "racer threads still running at deadline")
     (1 to rounds).foreach { v =>
       val w = Option(wins.get(v.toLong)).map(_.size).getOrElse(0)
       assert(w === 1, s"version $v had $w winners")
@@ -136,7 +153,7 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join(300000))
-    assert(threads.forall(!_.isAlive), "racer threads still running at deadline")
+    unstarved(threads.forall(!_.isAlive), "racer threads still running at deadline")
     (1 to rounds).foreach { v =>
       val w = Option(wins.get(v.toLong))
       assert(w.map(_.size).contains(1), s"version $v winners: $w")
@@ -315,7 +332,13 @@ class ManifestRaceSpec extends SparkSpec with org.scalatest.Retries {
       s"reader/gc failed under churn: $e\n${sw.toString.take(4000)}"
     })
     // the race was real: sweeps pruned versions while readers enumerated
-    assert(versionsPruned.get() > 0, "gc never pruned a version — no contention")
-    assert(reads.get() > 10, s"only ${reads.get()} rebuilds — no contention")
+    unstarved(versionsPruned.get() > 0, "gc never pruned a version — no contention")
+    unstarved(reads.get() > 10, s"only ${reads.get()} rebuilds — no contention")
   }
+}
+
+object ManifestRaceSpec {
+  /** A racer starved past a deadline by host load: no contract was
+    * violated, so the spec retries the test once. */
+  final class Starved(msg: String) extends RuntimeException(msg)
 }

@@ -682,12 +682,12 @@ class OpsSpec extends SparkSpec {
       (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)
     }.toDF("s", "t")
     val seeds = (0 until 60 by 4).map(n => (n.toLong, (n % 3).toLong)).toDF("n", "l")
-    def run(limit: Long) =
-      ops.Graph.labelSpread(edges, "s", "t", seeds, "n", "l", iters = 3,
-          localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.labelSpread(edges, "s", "t", seeds, "n", "l", iters = 3)
         .orderBy("node").collect()
         .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq
-    assert(run(Long.MaxValue) === run(0L))
+    }
+    assert(run(false) === run(true))
   }
 
   test("pageRank driver fast path and distributed loop are bit-equal") {
@@ -697,11 +697,12 @@ class OpsSpec extends SparkSpec {
     val edges = (1 to 300).map { _ =>
       (rnd.nextInt(40).toLong, 40L + rnd.nextInt(10), 1L + rnd.nextInt(5))
     }.toDF("src", "dst", "w")
-    def run(limit: Long) =
-      ops.Graph.pageRank(edges, "src", "dst", "w", iters = 10, localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.pageRank(edges, "src", "dst", "w", iters = 10)
         .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fast = run(Long.MaxValue)
-    val distributed = run(0L)
+    }
+    val fast = run(false)
+    val distributed = run(true)
     assert(fast === distributed)
     // ranks are positive and dst-only nodes accumulate inbound mass
     assert(fast.forall(_._2 > 0))
@@ -713,12 +714,13 @@ class OpsSpec extends SparkSpec {
     val edges = (1 to 300).map { _ =>
       (rnd.nextInt(40).toLong, 40L + rnd.nextInt(10), 1L + rnd.nextInt(5))
     }.toDF("src", "dst", "w")
-    def run(limit: Long) =
+    def run(scale: Boolean) = withScalePaths(scale) {
       ops.Graph.personalizedPageRank(edges, "src", "dst", "w", seeds = Set(1L, 2L),
-          iters = 10, localEdgeLimit = limit)
+          iters = 10)
         .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fast = run(Long.MaxValue)
-    assert(fast === run(0L))
+    }
+    val fast = run(false)
+    assert(fast === run(true))
     // src nodes (<40) have NO in-edges in this construction: non-seed
     // sources hold rank 0, seeds hold at least the teleport mass
     assert(fast.filter(p => p._1 < 40 && p._1 != 1L && p._1 != 2L).forall(_._2 == 0L))
@@ -761,13 +763,13 @@ class OpsSpec extends SparkSpec {
     val edges = (1 to 150).map { _ =>
       (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong)
     }.distinct.toDF("src", "dst")
-    def run(limit: Long) =
-      ops.Graph.reachability(edges, "src", "dst", start = 0L, maxDepth = 5,
-        localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.reachability(edges, "src", "dst", start = 0L, maxDepth = 5)
         .orderBy("node").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val fast = run(Long.MaxValue)
-    val distributed = run(0L)
+    }
+    val fast = run(false)
+    val distributed = run(true)
     assert(fast === distributed)
     // ground truth by brute-force walk enumeration
     val adj = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -789,9 +791,10 @@ class OpsSpec extends SparkSpec {
     val truth = hops.keys.toSeq.sorted.map(n => (n, hops(n), paths(n)))
     assert(fast === truth)
     // start node isolated from the graph still reports its anchor walk
-    val lone = ops.Graph.reachability(edges, "src", "dst", start = 999L,
-      maxDepth = 4, localEdgeLimit = 0L).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val lone = withScalePaths() {
+      ops.Graph.reachability(edges, "src", "dst", start = 999L, maxDepth = 4).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    }
     assert(lone === Seq((999L, 0L, 1L)))
   }
 
@@ -800,12 +803,13 @@ class OpsSpec extends SparkSpec {
     // random graph plus noise kCorePeel must absorb: reversed dupes, self-loops
     val base = (1 to 300).map(_ => (s"n${rnd.nextInt(40)}", s"n${rnd.nextInt(40)}"))
     val edges = (base ++ base.take(40).map(_.swap) ++ Seq(("n1", "n1"))).toDF("a", "b")
-    def run(limit: Long) =
-      ops.Graph.kCorePeel(edges, "a", "b", k = 4, rounds = 10, localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.kCorePeel(edges, "a", "b", k = 4, rounds = 10)
         .orderBy("node").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val fast = run(Long.MaxValue)
-    val distributed = run(0L)
+    }
+    val fast = run(false)
+    val distributed = run(true)
     assert(fast === distributed)
     // brute-force synchronous peeling over the undirected simple graph
     val und = base.filter(e => e._1 != e._2)
@@ -832,13 +836,13 @@ class OpsSpec extends SparkSpec {
     val edges = (1 to 200).map { _ =>
       (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong, (rnd.nextInt(9) + 1).toLong)
     }.toDF("src", "dst", "cost")
-    def run(limit: Long) =
-      ops.Graph.shortestPaths(edges, "src", "dst", "cost", start = 0L,
-        maxDepth = 5, localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.shortestPaths(edges, "src", "dst", "cost", start = 0L, maxDepth = 5)
         .orderBy("node").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fast = run(Long.MaxValue)
-    val distributed = run(0L)
+    }
+    val fast = run(false)
+    val distributed = run(true)
     assert(fast === distributed)
     // brute force: min cost over ALL walks of <= 5 edges
     val es = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -864,12 +868,13 @@ class OpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(61)
     val edges = (1 to 120).map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    def run(limit: Long) =
-      ops.Graph.hits(edges, "src", "dst", iters = 3, localEdgeLimit = limit)
+    def run(scale: Boolean) = withScalePaths(scale) {
+      ops.Graph.hits(edges, "src", "dst", iters = 3)
         .orderBy("node").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val fast = run(Long.MaxValue)
-    val distributed = run(0L)
+    }
+    val fast = run(false)
+    val distributed = run(true)
     assert(fast === distributed)
     // brute force over the distinct edge set
     val es = edges.distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -930,24 +935,26 @@ class OpsSpec extends SparkSpec {
           .partitionBy("f").orderBy("c", "id")).cast("long"))
       .orderBy("f", "c", "id").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val dist = ops.DistributedRank.ntileByKey(df, Seq("f"), Seq("c", "id"), k = 7,
-        slices = 5, smallBytes = 0L)
-      .orderBy("f", "c", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(dist === plain)
-    // tiny-key edge: a key with fewer rows than buckets gets bins 1..n
-    val tiny = Seq(("t", 1L, 1L), ("t", 2L, 2L)).toDF("f", "c", "id")
-    val tb = ops.DistributedRank.ntileByKey(tiny, Seq("f"), Seq("c", "id"), k = 7,
-        slices = 3, smallBytes = 0L)
-      .orderBy("c").collect().map(_.getLong(3)).toSeq
-    assert(tb === Seq(1L, 2L))
-    // plan shape of the forced distributed path: a RANGE repartition (the
-    // parallelism source) and NO per-key-only window sort
-    val plan = ops.DistributedRank.ntileByKey(df, Seq("f"), Seq("c", "id"), k = 7,
-        slices = 5, smallBytes = 0L)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("hashpartitioning(__pid"), plan.take(2000))
+    withScalePaths() {
+      val dist = ops.DistributedRank.ntileByKey(df, Seq("f"), Seq("c", "id"), k = 7,
+          slices = 5)
+        .orderBy("f", "c", "id").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(dist === plain)
+      // tiny-key edge: a key with fewer rows than buckets gets bins 1..n
+      val tiny = Seq(("t", 1L, 1L), ("t", 2L, 2L)).toDF("f", "c", "id")
+      val tb = ops.DistributedRank.ntileByKey(tiny, Seq("f"), Seq("c", "id"), k = 7,
+          slices = 3)
+        .orderBy("c").collect().map(_.getLong(3)).toSeq
+      assert(tb === Seq(1L, 2L))
+      // plan shape of the forced distributed path: a RANGE repartition (the
+      // parallelism source) and NO per-key-only window sort
+      val plan = ops.DistributedRank.ntileByKey(df, Seq("f"), Seq("c", "id"), k = 7,
+          slices = 5)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(plan.contains("hashpartitioning(__pid"), plan.take(2000))
+    }
   }
 
   test("distributed row_number equals the textbook window, incl. global + desc order") {
@@ -960,26 +967,30 @@ class OpsSpec extends SparkSpec {
         .over(w.partitionBy("f").orderBy(col("c").desc, col("id"))).cast("long"))
       .orderBy("f", "c", "id").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val dist = ops.DistributedRank.rowNumberByKey(df, Seq("f"),
-        Seq(("c", false), ("id", true)), out = "rn", slices = 5, smallBytes = 0L)
-      .orderBy("f", "c", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val dist = withScalePaths() {
+      ops.DistributedRank.rowNumberByKey(df, Seq("f"),
+          Seq(("c", false), ("id", true)), out = "rn", slices = 5)
+        .orderBy("f", "c", "id").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    }
     assert(dist === plain)
     // GLOBAL row_number (the ev35/tx29 shape): no keys at all
     val gPlain = df.withColumn("rn", row_number()
         .over(w.orderBy(col("c"), col("id"))).cast("long"))
       .orderBy("c", "id").collect().map(_.getLong(3)).toSeq
-    val gDist = ops.DistributedRank.rowNumberByKey(df, Seq(),
-        Seq(("c", true), ("id", true)), out = "rn", slices = 5, smallBytes = 0L)
-      .orderBy("c", "id").collect().map(_.getLong(3)).toSeq
-    assert(gDist === gPlain)
-    // forced distributed plan: parallelism comes from the deterministic
-    // slice id, never a single global sort partition
-    val plan = ops.DistributedRank.rowNumberByKey(df, Seq(),
-        Seq(("c", true), ("id", true)), out = "rn", slices = 5, smallBytes = 0L)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("hashpartitioning(__pid"), plan.take(2000))
+    withScalePaths() {
+      val gDist = ops.DistributedRank.rowNumberByKey(df, Seq(),
+          Seq(("c", true), ("id", true)), out = "rn", slices = 5)
+        .orderBy("c", "id").collect().map(_.getLong(3)).toSeq
+      assert(gDist === gPlain)
+      // forced distributed plan: parallelism comes from the deterministic
+      // slice id, never a single global sort partition
+      val plan = ops.DistributedRank.rowNumberByKey(df, Seq(),
+          Seq(("c", true), ("id", true)), out = "rn", slices = 5)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(plan.contains("hashpartitioning(__pid"), plan.take(2000))
+    }
   }
 
   test("distributed row_number handles NULL order values (ASC NULLS FIRST / DESC NULLS LAST)") {
@@ -996,9 +1007,11 @@ class OpsSpec extends SparkSpec {
       val plain = df.withColumn("rn",
           row_number().over(w.orderBy(order, col("id"))).cast("long"))
         .orderBy("id").collect().map(_.getLong(2)).toSeq
-      val dist = ops.DistributedRank.rowNumberByKey(df, Seq(),
-          Seq(("c", asc), ("id", true)), out = "rn", slices = 6, smallBytes = 0L)
-        .orderBy("id").collect().map(_.getLong(2)).toSeq
+      val dist = withScalePaths() {
+        ops.DistributedRank.rowNumberByKey(df, Seq(),
+            Seq(("c", asc), ("id", true)), out = "rn", slices = 6)
+          .orderBy("id").collect().map(_.getLong(2)).toSeq
+      }
       assert(dist === plain, s"asc=$asc")
     }
   }
@@ -1019,33 +1032,12 @@ class OpsSpec extends SparkSpec {
     val plain = df.withColumn("rn",
         row_number().over(w.orderBy(col("s"), col("id"))).cast("long"))
       .orderBy("id").collect().map(_.getLong(2)).toSeq
-    val dist = ops.DistributedRank.rowNumberByKey(df, Seq(),
-        Seq(("s", true), ("id", true)), out = "rn", slices = 7, smallBytes = 0L)
-      .orderBy("id").collect().map(_.getLong(2)).toSeq
-    assert(dist === plain)
-  }
-
-  test("graft.rank.slices conf is validated (regression: <=0 silently reinstated the single-task sort)") {
-    val df = (1 to 300).map(i => (i.toLong % 5, i.toLong)).toDF("c", "id")
-    def run() = ops.DistributedRank.rowNumberByKey(df, Seq(),
-      Seq(("c", true), ("id", true)), out = "rn", slices = 5, smallBytes = 0L)
-    try {
-      for (bad <- Seq("0", "-3")) {
-        spark.conf.set("graft.rank.slices", bad)
-        val ex = intercept[IllegalArgumentException](run())
-        assert(ex.getMessage.contains(">= 1"), ex.getMessage)
-      }
-      spark.conf.set("graft.rank.slices", "lots")
-      val ex2 = intercept[IllegalArgumentException](run())
-      assert(ex2.getMessage.contains("integer"), ex2.getMessage)
-      // a valid override still computes textbook-equal ranks
-      spark.conf.set("graft.rank.slices", "3")
-      val w = org.apache.spark.sql.expressions.Window
-      val plain = df.withColumn("rn",
-          row_number().over(w.orderBy(col("c"), col("id"))).cast("long"))
+    val dist = withScalePaths() {
+      ops.DistributedRank.rowNumberByKey(df, Seq(),
+          Seq(("s", true), ("id", true)), out = "rn", slices = 7)
         .orderBy("id").collect().map(_.getLong(2)).toSeq
-      assert(run().orderBy("id").collect().map(_.getLong(2)).toSeq === plain)
-    } finally spark.conf.unset("graft.rank.slices")
+    }
+    assert(dist === plain)
   }
 
   test("pca invariant audit raises on rank-deficient input (regression: null/Infinity ppm rows)") {
@@ -1068,15 +1060,17 @@ class OpsSpec extends SparkSpec {
     // an array order column would work on the small-window path but
     // throw deep inside boundary baking on the scale path — the up-front
     // validation makes the failure surface input-size independent
-    for (smallBytes <- Seq(0L, Long.MaxValue)) {
-      val ex = intercept[IllegalArgumentException](
+    for (scale <- Seq(true, false)) {
+      val ex = intercept[IllegalArgumentException](withScalePaths(scale) {
         ops.DistributedRank.rowNumberByKey(df, Seq(),
-          Seq(("arr", true), ("id", true)), out = "rn", smallBytes = smallBytes))
+          Seq(("arr", true), ("id", true)), out = "rn")
+      })
       assert(ex.getMessage.contains("non-atomic"), ex.getMessage)
     }
-    val ex2 = intercept[IllegalArgumentException](
+    val ex2 = intercept[IllegalArgumentException](withScalePaths() {
       ops.DistributedRank.ntileByKey(df.withColumn("b", lit(Array[Byte](1))),
-        Seq("b"), Seq("id"), k = 2, smallBytes = 0L))
+        Seq("b"), Seq("id"), k = 2)
+    })
     assert(ex2.getMessage.contains("non-atomic"), ex2.getMessage)
   }
 
@@ -1163,10 +1157,12 @@ class OpsSpec extends SparkSpec {
       (1L, 2L, 5L), (2L, 3L, 5L), (1L, 3L, 5L),
       (10L, 11L, 5L), (11L, 12L, 5L), (10L, 12L, 5L),
       (3L, 10L, 1L)).toDF("src", "dst", "w")
-    def run(df: org.apache.spark.sql.DataFrame, limit: Long, iters: Int = 4) =
-      ops.Graph.lpaCommunities(df, "src", "dst", "w", iters = iters, localEdgeLimit = limit)
-        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val got = run(twoTri, Long.MaxValue)
+    def run(df: org.apache.spark.sql.DataFrame, scale: Boolean, iters: Int = 4) =
+      withScalePaths(scale) {
+        ops.Graph.lpaCommunities(df, "src", "dst", "w", iters = iters)
+          .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      }
+    val got = run(twoTri, false)
     assert(got.filter(_._1 < 10).map(_._2).distinct.length === 1)
     assert(got.filter(_._1 >= 10).map(_._2).distinct.length === 1)
     assert(got.filter(_._1 < 10).head._2 !== got.filter(_._1 >= 10).head._2)
@@ -1176,14 +1172,14 @@ class OpsSpec extends SparkSpec {
     // LPA oscillates with period 2 on it (known property, why round
     // counts are fixed and even/odd matters for the oracle).
     val star = Seq((5L, 1L, 1L), (5L, 2L, 1L), (5L, 3L, 1L)).toDF("src", "dst", "w")
-    val s1 = run(star, Long.MaxValue, iters = 1)
+    val s1 = run(star, false, iters = 1)
     assert(s1.find(_._1 == 5L).get._2 === 1L)
     // random graph: driver recurrence == distributed loop, bit for bit
     val rnd = new scala.util.Random(11)
     val edges = (1 to 250).map { _ =>
       (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong, 1L + rnd.nextInt(4))
     }.toDF("src", "dst", "w")
-    assert(run(edges, Long.MaxValue) === run(edges, 0L))
+    assert(run(edges, false) === run(edges, true))
   }
 
   test("contQuantilesByKey matches built-in percentile_cont (R-7) on random data") {
@@ -1722,5 +1718,36 @@ class OpsSpec extends SparkSpec {
     val want = vecs.select(col("id"), ops.Embeddings.quantizeDeclarative(col("vec")).as("q"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Any](1)))
     assert(got.toSeq === want.toSeq)
+    // ARRAY<DOUBLE>: the products next to the -0.5 tie (-5e-7 scales to
+    // exactly -0.5 → -1; its upper neighbour to -0.4999999999999999 → 0),
+    // the +0.5 and -2.5 ties, and a random spread. The double one ulp
+    // above -0.5 (-0.49999999999999994) is not a product of any double
+    // and 1e6, so the scaled values never carry it.
+    val dvecs = Seq(
+      (1L, Seq(-5e-7, -4.999999999999999e-7, -5.000000000000001e-7, 5e-7,
+        4.999999999999999e-7, -2.5e-6, 1.5e-6, -0.0, Double.MinPositiveValue)),
+      (2L, Seq.fill(64)(rnd.nextDouble() * 2 - 1))
+    ).toDF("id", "vec")
+    def quantized(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      dvecs.select(col("id"), f(col("vec")).as("q"))
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Any](1))).toSeq
+    assert(quantized(ops.Embeddings.quantize) ===
+      quantized(ops.Embeddings.quantizeDeclarative))
+  }
+
+  test("bpe train learns the same merges on the coalesced and the wide vocab path") {
+    val rnd = new scala.util.Random(5)
+    val docs = (1 to 400).map { _ =>
+      Seq.fill(6)(Seq.fill(2 + rnd.nextInt(5))("abcde"(rnd.nextInt(5))).mkString)
+        .mkString(" ")
+    }.toDF("text").repartition(4)
+    def merges(scale: Boolean) = withScalePaths(scale) {
+      ops.Bpe.train(docs, "text", merges = 12).orderBy("merge_rank")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
+    val coalesced = merges(false)
+    assert(coalesced.size === 12)
+    assert(merges(true) === coalesced)
   }
 }

@@ -587,13 +587,12 @@ class PlanSpec extends SparkSpec {
 
   test("gini + zipf rank via the distributed row_number at scale (ev35/tx29)") {
     // force the DistributedRank switch past the small-input textbook path
-    spark.conf.set("graft.rank.smallBytes", "0")
-    try {
+    withScalePaths() {
       Seq("ev35_revenue_gini", "tx29_zipf_slope").foreach { q =>
         val p = planOf(q)
         assert(p.contains("hashpartitioning(__pid"), s"$q:\n${p.take(3000)}")
       }
-    } finally spark.conf.unset("graft.rank.smallBytes")
+    }
   }
 
   test("incremental dedup joins by digest and bucket, never all-pairs (dd19)") {
@@ -637,8 +636,7 @@ class PlanSpec extends SparkSpec {
       case _: TakeOrderedAndProjectExec => ()
       case a: BaseAggregateExec if countersOnlyAgg(a) => ()
     }.isDefined
-    spark.conf.set("graft.rank.smallBytes", "0")
-    try {
+    withScalePaths() {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val plan = fn(spark, dir).queryExecution.sparkPlan
         plan.collect {
@@ -648,7 +646,7 @@ class PlanSpec extends SparkSpec {
       }
       assert(offenders.isEmpty,
         "global window over unbounded input:\n" + offenders.mkString("\n"))
-    } finally spark.conf.unset("graft.rank.smallBytes")
+    }
   }
 
   test("bpe encode is a zero-shuffle projection (merges baked as literals)") {

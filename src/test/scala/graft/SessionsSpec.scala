@@ -41,8 +41,8 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CONF syntax: k=v pairs split on ';', values may hold '='") {
-    assert(Sessions.overrides(" graft.rank.smallBytes=0 ; a.b=x=y;;junk ") ===
-      Map("graft.rank.smallBytes" -> "0", "a.b" -> "x=y"))
+    assert(Sessions.overrides(" graft.forceScalePaths=true ; a.b=x=y;;junk ") ===
+      Map("graft.forceScalePaths" -> "true", "a.b" -> "x=y"))
   }
 
   test("SparkSession.builder occurs in src/main only inside Sessions.scala") {

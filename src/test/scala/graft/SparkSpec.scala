@@ -14,6 +14,13 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` with the size-gated operators' driver-or-cluster switch
+    * forced to the distributed path (`on`) or left to input size. */
+  def withScalePaths[A](on: Boolean = true)(body: => A): A = {
+    spark.conf.set(graft.ops.ScalePath.Conf, on)
+    try body finally spark.conf.unset(graft.ops.ScalePath.Conf)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

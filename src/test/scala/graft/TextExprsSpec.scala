@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The native text expressions (ShingleHashSet, SimHash64,
   * MinKFingerprint, WinnowSelect) must be value-identical to the
@@ -11,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * randomized corpus that includes repeated shingles, duplicate words,
   * empty/short docs, multi-space runs, and unicode.
   */
-class TextExprsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextExprsSpec extends SparkSpec {
 
   private def corpus() = {
     import spark.implicits._
@@ -309,8 +301,10 @@ class TextExprsSpec extends AnyFunSuite {
     val df = pairs.toDF("id1", "id2")
     val fast = graft.ops.TextDedup.duplicateGroups(df)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val loop = graft.ops.TextDedup.duplicateGroups(df, localEdgeLimit = 0)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val loop = withScalePaths() {
+      graft.ops.TextDedup.duplicateGroups(df)
+        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     assert(fast.sameElements(loop))
   }
 
