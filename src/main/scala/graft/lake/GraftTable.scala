@@ -12,9 +12,10 @@ import org.apache.spark.sql.types._
   * Provides the Seafowl-owned storage semantics (reference
   * `src/context/delta.rs`, `src/context/physical.rs:216-485`):
   *
-  *  - append writes ZSTD parquet chunked by `maxRecordsPerFile`, collects
-  *    per-file min/max/nullCount in ONE distributed aggregation over
-  *    `input_file_name()`, and commits a new version;
+  *  - append writes ZSTD parquet chunked by `maxRecordsPerFile` in one
+  *    write job whose tasks also take each file's min/max/nullCount and
+  *    record count (FileStats — no second pass over the written files),
+  *    and commits a new version;
   *  - UPDATE/DELETE prune files by predicate-vs-stats, rewrite only the
   *    affected files (fused into new files), and inherit untouched files
   *    byte-identical — matching the reference's observable file lineage
@@ -186,26 +187,45 @@ class GraftTable(val spark: SparkSession, val root: String) {
     }
 
   /** Write df's rows as new parquet files under the table root; returns
-    * manifest entries with stats. One distributed stats pass, no collect
-    * of data rows. */
+    * their manifest entries. One Spark job: the write tasks take each
+    * file's stats as they write it (FileStats.Tracker), and one LIST of
+    * the batch dir gives the sizes. A file that got no rows (a write of
+    * zero rows still opens one) gets no entry and is deleted here, before
+    * any commit could leave it orphaned; a batch dir left with no data
+    * file goes with it. */
   private def writeFiles(df: DataFrame, maxRecordsPerFile: Long): Seq[FileEntry] = {
     val batchDir = s"data-${System.currentTimeMillis}-${UUID.randomUUID.toString.take(8)}"
-    val out = s"$root/$batchDir"
-    guarded(df).write
-      .option("compression", "zstd")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(out)
-    collectStats(out, batchDir, df.schema)
+    val out = new HPath(s"$root/$batchDir")
+    val tracker = new FileStats.Tracker(df.schema)
+    org.apache.spark.sql.GraftWrites.parquet(guarded(df), out.toString,
+      Map("compression" -> "zstd", "maxRecordsPerFile" -> maxRecordsPerFile.toString),
+      Seq(tracker))
+    val (written, empty) = tracker.files.partition(_.numRecords > 0)
+    if (written.isEmpty) {
+      LakeIO.delete(out, recursive = true)
+      Nil
+    } else {
+      empty.foreach(f => LakeIO.delete(new HPath(out, f.name)))
+      val sizes = fileSizes(out)
+      written.map { f =>
+        FileEntry(s"$batchDir/${f.name}", sizes(f.name), f.numRecords, tracker.stats(f),
+          statsVersion = StatsVersion)
+      }
+    }
   }
 
-  /** Stats for every parquet file under dir: min/max/nullCount per leaf
-    * column + record count, via one groupBy(input_file_name()). */
-  private[lake] def collectStats(dir: String, relPrefix: String, sch: StructType): Seq[FileEntry] = {
+  /** File name -> size for every file directly under dir, from ONE
+    * directory listing (object-store friendly: a LIST per batch dir
+    * instead of a HEAD per file). */
+  private def fileSizes(dir: HPath): Map[String, Long] =
+    LakeIO.listStatus(dir).filter(_.isFile).map(s => s.getPath.getName -> s.getLen).toMap
+
+  /** Stats for every parquet file under dir by reading the files back:
+    * min/max/nullCount per statable column + record count, via one
+    * groupBy(input_file_name()). For files graft did not write (CONVERT);
+    * its own writes take the same stats inside the write job. */
+  private[graft] def collectStats(dir: String, relPrefix: String, sch: StructType): Seq[FileEntry] = {
     val written = spark.read.schema(sch).parquet(dir)
-    def isAtomic(dt: DataType): Boolean = dt match {
-      case _: ArrayType | _: MapType | _: StructType | NullType | BinaryType => false
-      case _ => true
-    }
     def statBound(f: StructField, c: Column): Column = f.dataType match {
       case TimestampType => unix_micros(c).cast(StringType)
       case TimestampNTZType =>
@@ -217,10 +237,9 @@ class GraftTable(val spark: SparkSession, val root: String) {
             org.apache.spark.sql.GraftBridge.expression(c), TimestampType, Some("UTC"))))
           .cast(StringType)
       case DateType => unix_date(c).cast(StringType) // epoch-days (DATE→INT cast is illegal under ANSI)
-      case dt if isAtomic(dt) => c.cast(StringType)
-      case _ => lit(null).cast(StringType)
+      case _ => c.cast(StringType)
     }
-    val statable = sch.fields.filter(f => isAtomic(f.dataType))
+    val statable = sch.fields.filter(f => FileStats.isStatable(f.dataType))
     val aggs = statable.flatMap { f =>
       Seq(
         statBound(f, min(col(f.name))).as(s"min__${f.name}"),
@@ -231,12 +250,7 @@ class GraftTable(val spark: SparkSession, val root: String) {
       .groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    // file sizes from ONE directory listing (object-store friendly: a LIST
-    // per batch dir instead of a HEAD per file)
-    val sizes: Map[String, Long] =
-      LakeIO.listStatus(new HPath(dir))
-        .filter(_.isFile)
-        .map(s => s.getPath.getName -> s.getLen).toMap
+    val sizes = fileSizes(new HPath(dir))
     rows.toIndexedSeq.map { r =>
       val uri = r.getAs[String]("__file")
       val fileName = uri.substring(uri.lastIndexOf('/') + 1)

@@ -41,7 +41,9 @@ object Manifest {
       // so an untouched file inherited into a new version keeps its own.
       statsVersion: Int = 1)
 
-  /** The stats layout `GraftTable.collectStats` writes today. */
+  /** The stats layout every writer produces today: the write job's own
+    * tasks (FileStats, every graft write) and `GraftTable.collectStats`
+    * (CONVERT) spell bounds identically. */
   val StatsVersion = 2
 
   case class TableManifest(

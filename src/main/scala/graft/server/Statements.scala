@@ -2,6 +2,7 @@ package graft.server
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, TimeUnit}
 
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.SparkSession
 
 /** Statement-scoped job-group control: every serving-tier statement runs
@@ -116,6 +117,52 @@ object Statements {
       def run(): Unit = { cancelled.remove(groupId); () }
     }, 15, TimeUnit.MINUTES)
     spark.sparkContext.cancelJobGroupAndFutureJobs(groupId, reason)
+    sweep(spark.sparkContext, groupId, reason)
+  }
+
+  // groupIds whose statement is inside `run`
+  private val inFlight = ConcurrentHashMap.newKeySet[String]()
+
+  /** Cancel the group's jobs again every 100 ms while its statement runs.
+    * The future-jobs mark does not stop a map-stage job — the kind AQE
+    * submits for each shuffle stage — so a cancel landing between a
+    * statement's broadcast job and its first shuffle stage would
+    * otherwise let that stage run to completion (seen: a timed-out cross
+    * join kept all four slots for minutes). */
+  private def sweep(sc: SparkContext, groupId: String, reason: String): Unit =
+    timer.schedule(new Runnable {
+      def run(): Unit = if (inFlight.contains(groupId)) {
+        val st = sc.statusTracker
+        if (st.getJobIdsForGroup(groupId).exists(j =>
+            st.getJobInfo(j).exists(_.status == JobExecutionStatus.RUNNING)))
+          sc.cancelJobGroup(groupId, reason)
+        sweep(sc, groupId, reason)
+      }
+    }, 100, TimeUnit.MILLISECONDS)
+
+  /** Upper bound on [[awaitTasksEnded]]'s wait. */
+  private val TaskDrainMs = 10000L
+
+  /** Wait, up to [[TaskDrainMs]], until no stage of `groupId`'s jobs has a
+    * running task. A cancelled job ends at once, but its killed tasks
+    * keep their slots until they next check for interruption — seconds,
+    * for a codegen'd nested-loop join — and a statement submitted
+    * meanwhile queues behind them and can time out too. Waiting here
+    * hands the connection back only once the slots are free; an overrun
+    * is logged, not thrown, since the statement's answer is already
+    * "cancelled". */
+  private def awaitTasksEnded(sc: SparkContext, groupId: String): Unit = {
+    val st = sc.statusTracker
+    def activeTasks: Int = st.getJobIdsForGroup(groupId).toSeq
+      .flatMap(j => st.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq))
+      .flatMap(s => st.getStageInfo(s).toSeq)
+      .map(_.numActiveTasks).sum
+    val deadline = System.nanoTime() + TaskDrainMs * 1000000L
+    while (activeTasks > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+    val left = activeTasks
+    if (left > 0)
+      ServerLog.warn(s"cancelled statement [$groupId] still has $left running tasks " +
+        s"after $TaskDrainMs ms")
   }
 
   /** Run `f` with the calling thread's jobs tagged to `groupId`,
@@ -126,6 +173,7 @@ object Statements {
   def run[T](spark: SparkSession, groupId: String, desc: String,
              timeoutMs: Long)(f: => T): T = {
     val sc = spark.sparkContext
+    inFlight.add(groupId)
     sc.setJobGroup(groupId, desc.take(256), interruptOnCancel = true)
     // per-statement fair-share pool (see poolFor): thread-local, cleared
     // in the finally with the job group
@@ -144,11 +192,14 @@ object Statements {
       // cancel/timeout from a real failure that raced one
       case e: Throwable =>
         val reason = cancelled.get(groupId)
-        if (reason != null) throw new Cancelled(reason) else throw e
+        if (reason == null) throw e
+        awaitTasksEnded(sc, groupId)
+        throw new Cancelled(reason)
     } finally {
       deadline.foreach(_.cancel(false))
       sc.clearJobGroup()
       sc.setLocalProperty("spark.scheduler.pool", null)
+      inFlight.remove(groupId)
       cancelled.remove(groupId)
     }
   }

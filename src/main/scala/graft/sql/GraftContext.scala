@@ -166,8 +166,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       .map { s => LakeIO.delete(s.getPath, recursive = true); s.getPath.getName }
   }
 
+  /** The result of a statement that returns no rows: a local relation,
+    * so rendering it runs no Spark job — and a cancel that lands after
+    * the statement committed cannot fail its "ok". */
   private def emptyResult: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+    spark.createDataFrame(java.util.List.of[Row](),
       StructType(Seq(StructField("ok", BooleanType))))
 
   // --- statement splitting (quote- and comment-aware) ---------------------

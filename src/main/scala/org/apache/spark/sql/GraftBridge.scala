@@ -61,6 +61,44 @@ object GraftRelations {
     }.flatten
 }
 
+/** A parquet write with caller-supplied write-job stats trackers — what
+  * `df.write` cannot take (its command wires only Spark's own basic
+  * tracker). `FileFormatWriter.write` is the call the write command makes;
+  * delta-spark makes the same one for its per-file statistics. */
+object GraftWrites {
+  import org.apache.spark.internal.io.FileCommitProtocol
+  import org.apache.spark.sql.execution.SQLExecution
+  import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker}
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+
+  /** Write `df`'s rows as parquet files under the new directory `path`
+    * (one write job; options as `df.write.option`), feeding every row to
+    * `trackers`. Each tracker has seen every file once this returns. */
+  def parquet(df: DataFrame, path: String, options: Map[String, String],
+              trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(
+        sparkSession = spark,
+        plan = plan,
+        fileFormat = new ParquetFileFormat,
+        committer = FileCommitProtocol.instantiate(
+          spark.sessionState.conf.fileCommitProtocolClass,
+          jobId = java.util.UUID.randomUUID().toString,
+          outputPath = path),
+        outputSpec = FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        hadoopConf = spark.sessionState.newHadoopConfWithOptions(options),
+        partitionColumns = Nil,
+        bucketSpec = None,
+        statsTrackers = trackers,
+        options = options)
+    }
+  }
+}
+
 /** Arrow IPC result encoding for the serving tier — the wire format the
   * reference's Arrow Flight (SQL) frontend speaks (`src/frontend/flight/`;
   * gRPC itself is offline-impossible here, so the IPC stream rides HTTP

@@ -1017,30 +1017,15 @@ class ContextSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("doomed_t"))
   }
 
-  /** Jobs started on this thread while `f` runs (the listener bus is
-    * asynchronous: a marker job on the same thread drains it). */
-  private def jobsStartedBy(f: => Unit): Int = {
-    val group = s"jobs-${System.nanoTime()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => started.incrementAndGet()
-          case g if g == group + "-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      started.get
-    } finally sc.removeSparkListener(listener)
+  test("a served INSERT, UPDATE or DELETE runs one Spark job: the write") {
+    val c = ctx()
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    c.execute("CREATE TABLE jobs_t (id BIGINT, v BIGINT)")
+    c.execute("INSERT INTO jobs_t VALUES (1, 1), (2, 2)").collect()
+    assert(jobsStartedBy(c.execute("INSERT INTO jobs_t VALUES (3, 3)").collect()) === 1)
+    assert(jobsStartedBy(c.execute("UPDATE jobs_t SET v = v + 1 WHERE id = 1").collect()) === 1)
+    assert(jobsStartedBy(c.execute("DELETE FROM jobs_t WHERE id = 2").collect()) === 1)
+    assert(c.execute("SELECT sum(v) FROM jobs_t").collect()(0).getLong(0) === 5L)
   }
 
   test("a read snapshot after a write starts no Spark job, staging tables included") {

@@ -48,6 +48,93 @@ class LakeSpec extends SparkSpec {
     assert(f.stats("score").nullCount === 0)
   }
 
+  /** Every file the latest version lists, restated by reading the files
+    * back (`collectStats`, the pass the write job's own stats replace). */
+  private def statsOracle(t: GraftTable): Map[String, Manifest.FileEntry] = {
+    val sch = t.schema
+    t.latestManifest.files.map(_.path.takeWhile(_ != '/')).distinct
+      .flatMap(b => t.collectStats(s"${t.root}/$b", b, sch))
+      .map(e => e.path -> e).toMap
+  }
+
+  test("write-task stats are bit-equal to a read-back collectStats pass") {
+    import org.apache.spark.sql.Row
+    val sch = StructType(Seq(
+      StructField("id", LongType), StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("s", StringType), StructField("dec", DecimalType(38, 18)),
+      StructField("b", BooleanType), StructField("by", ByteType), StructField("sh", ShortType),
+      StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType), StructField("nul", StringType),
+      StructField("nuli", IntegerType)))
+    val doubles = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      1.5, -2.25, null)
+    val floats = Seq(Float.NaN, 0.0f, -0.0f, Float.NegativeInfinity, Float.PositiveInfinity,
+      3.5f, null)
+    val strings = Seq("", "a", "é", "日本語", "\uD83D\uDE00", "\uFF61", "Z", null, "ab")
+    val t0 = java.time.LocalDateTime.of(1965, 3, 1, 12, 30, 15, 123456000)
+    val rows = (0 until 203).map { i =>
+      Row(i.toLong,
+        doubles(i % doubles.size), floats(i % floats.size), strings(i % strings.size),
+        if (i % 11 == 0) null
+        else new java.math.BigDecimal(s"${(i * 7919L) % 1000 - 500}.${"%018d".format(i * 31L)}"),
+        if (i % 5 == 0) null else i % 3 == 0,
+        ((i * 37) % 256 - 128).toByte, ((i * 7001) % 65536 - 32768).toShort,
+        if (i % 13 == 0) null else java.sql.Date.valueOf(t0.toLocalDate.plusDays(i * 211L)),
+        if (i % 17 == 0) null
+        else java.sql.Timestamp.valueOf(t0.plusSeconds(i * 86400L * 97 + i)),
+        t0.plusMinutes(i * 7919L), null, null)
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), sch)
+    val t = GraftTable.create(spark, tmpDir("graft-wstats"), sch)
+    // several tasks, each writing several files
+    t.append(df.repartition(4), maxRecordsPerFile = 7)
+    val files = t.latestManifest.files
+    assert(files.map(_.path.takeWhile(_ != '/')).distinct.size === 1)
+    assert(files.size >= 4 * 7, files.map(_.numRecords))
+    assert(files.map(_.numRecords).sum === 203L)
+    assert(files.map(e => e.path -> e).toMap === statsOracle(t))
+    // the tie and NaN cases really occur inside single files
+    assert(files.exists(_.stats("d").max.contains("NaN")))
+    assert(files.exists(_.stats("d").min.contains("-Infinity")))
+    assert(files.forall(e => e.stats("nul") === Manifest.ColStats(None, None, e.numRecords)))
+    // a rewrite (UPDATE) takes its stats the same way
+    t.update(Seq("s" -> "concat(s, 'x')", "d" -> "d * -1"), Some("id % 2 = 0"))
+    val rewritten = t.latestManifest.files
+    assert(rewritten.map(e => e.path -> e).toMap === statsOracle(t))
+  }
+
+  test("a write of zero rows leaves no file behind") {
+    val t = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0)), maxPerFile = 10)
+    def parquetOnDisk: Set[String] =
+      graft.lake.LakeIO.listFilesRecursive(new org.apache.hadoop.fs.Path(t.root))
+        .map(_.getPath.toString).filter(_.endsWith(".parquet"))
+        .map(p => p.substring(p.indexOf("/data-") + 1)).toSet
+    val before = parquetOnDisk
+    assert(before.size === 1)
+    t.delete(Some("id <= 2"))
+    assert(t.latestManifest.files.isEmpty)
+    t.append(Seq.empty[(Long, String, Double)].toDF("id", "name", "score"))
+    assert(t.latestManifest.files.isEmpty)
+    // only the first version's file is on disk: the rewrite and the empty
+    // append wrote no 0-row file and left no batch dir
+    assert(parquetOnDisk === before)
+    val dataDirs = graft.lake.LakeIO.listStatus(new org.apache.hadoop.fs.Path(t.root))
+      .filter(_.getPath.getName.startsWith("data-"))
+    assert(dataDirs.size === 1)
+  }
+
+  test("append, update and delete each run one Spark job on an AQE session") {
+    val s = org.apache.spark.sql.GraftSessions.cloneSession(spark)
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val t = GraftTable.create(s, tmpDir("graft-jobs"), StructType(Seq(
+      StructField("id", LongType), StructField("v", LongType))))
+    val df = s.createDataFrame((1L to 50L).map(i => (i, i))).toDF("id", "v")
+    assert(jobsStartedBy(t.append(df)) === 1)
+    assert(jobsStartedBy(t.update(Seq("v" -> "v + 1"), Some("id = 7"))) === 1)
+    assert(jobsStartedBy(t.delete(Some("id = 8"))) === 1)
+    assert(t.read().count() === 49L)
+  }
+
   test("update fuses affected files and inherits untouched ones") {
     val t = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0), (10L, "c", 3.0), (11L, "d", 4.0)))
     val before = t.latestManifest.files.map(_.path).toSet

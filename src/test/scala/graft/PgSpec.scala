@@ -762,4 +762,32 @@ class PgSpec extends SparkSpec {
       assert(errs2.isEmpty && rows === Seq(Seq("2")), (rows, errs2))
     } finally { c.close(); tfe.stop() }
   }
+
+  test("a timed-out statement's tasks free their slots before the connection's next statement") {
+    // the cross join's killed tasks outlive its cancelled job; the
+    // follow-up must not queue behind them into its own timeout
+    val runawayStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            String.valueOf(p.getProperty("spark.job.description")) == runawaySql))
+          e.stageIds.foreach(runawayStages.add)
+    }
+    val st = spark.sparkContext.statusTracker
+    def runawayTasks: Int = runawayStages.stream().mapToInt(s =>
+      st.getStageInfo(s).map(_.numActiveTasks).getOrElse(0)).sum
+    spark.sparkContext.addSparkListener(listener)
+    val tfe = new PgFrontend(ctx, 0, statementTimeoutMs = 5000)
+    tfe.start()
+    val c = new Client(tfe.boundPort)
+    try (1 to 3).foreach { round =>
+      val (_, _, _, errs) = c.query(runawaySql)
+      assert(errs.exists(_.contains("timeout")), (round, errs))
+      // the error arrives only once the killed tasks have ended
+      org.apache.spark.sql.GraftSessions.drainListeners(spark)
+      assert(runawayStages.size > 0 && runawayTasks === 0, round)
+      val (_, rows, _, errs2) = c.query("SELECT 2 AS two")
+      assert(errs2.isEmpty && rows === Seq(Seq("2")), (round, rows, errs2))
+    } finally { c.close(); tfe.stop(); spark.sparkContext.removeSparkListener(listener) }
+  }
 }

@@ -21,6 +21,32 @@ trait SparkSpec extends AnyFunSuite {
     try body finally spark.conf.unset(graft.ops.ScalePath.Conf)
   }
 
+  /** Jobs started on this thread while `f` runs (the listener bus is
+    * asynchronous: a marker job on the same thread drains it). */
+  def jobsStartedBy(f: => Unit): Int = {
+    val group = s"jobs-${System.nanoTime()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => started.incrementAndGet()
+          case g if g == group + "-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
