@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Randomized DML-sequence differential generator: emits N seeded
 statement SEQUENCES (CREATE / INSERT VALUES / INSERT SELECT / UPDATE /
-DELETE / TRUNCATE / MERGE over 2 tables) that graft's GraftContext and
+DELETE / TRUNCATE / MERGE over 2 tables, and UPDATE / DELETE whose
+expressions read the OTHER table through a subquery) that graft's
+GraftContext and
 DuckDB must drive to identical FINAL TABLE STATE — the randomized analog
 of the reference's golden DML tests (tests/statements/dml.rs), which the
 SELECT-only fuzz layer (gen_fuzz.py) never touches.
@@ -17,6 +19,10 @@ Portability discipline (same contract as gen_fuzz.py, plus DML rules):
   against the pre-merge target), then DELETE USING / UPDATE FROM /
   INSERT anti-join, in clause order. Merge sources GROUP BY the key so
   the one-source-row-per-target rule can never trip.
+- cross-table subquery DML is the same text in both engines: an IN
+  subquery's NULLs and an empty scalar subquery's NULL follow SQL
+  three-valued logic in both. The subquery reads the table as the
+  sequence left it, so a stale catalog view shows up as a diff.
 
 Usage: gen_dml_fuzz.py <nseq> <seed> > sequences.jsonl
 Each line: {"seq": i, "tables": ["fa","fb"], "graft": [...], "duck": [...]}
@@ -165,6 +171,16 @@ class Gen:
         s = "DELETE FROM %s WHERE %s" % (t, self.pred())
         return [s], [s]
 
+    def delete_in(self, t, o):
+        s = "DELETE FROM %s WHERE id IN (SELECT id FROM %s WHERE %s)" % (t, o, self.pred())
+        return [s], [s]
+
+    def update_sub(self, t, o):
+        c = self.rnd.choice(["a", "b"])
+        s = "UPDATE %s SET %s = (SELECT max(%s) FROM %s) WHERE %s" % (
+            t, c, self.rnd.choice(["a", "b"]), o, self.pred())
+        return [s], [s]
+
     def truncate(self, t):
         return ["TRUNCATE TABLE %s" % t], ["TRUNCATE %s" % t]
 
@@ -235,8 +251,8 @@ def gen_sequence(rnd, seq):
         o = "fb" if t == "fa" else "fa"
         op = rnd.choices(
             ["ins_values", "ins_select", "update", "delete", "truncate", "merge",
-             "add_column", "drop_column"],
-            weights=[20, 14, 22, 16, 4, 15, 6, 3])[0]
+             "add_column", "drop_column", "delete_in", "update_sub"],
+            weights=[20, 14, 22, 16, 4, 15, 6, 3, 10, 10])[0]
         if op == "ins_values":
             gs, ds = g.ins_values(t)
         elif op == "ins_select":
@@ -247,6 +263,10 @@ def gen_sequence(rnd, seq):
             gs, ds = g.delete(t)
         elif op == "truncate":
             gs, ds = g.truncate(t)
+        elif op == "delete_in":
+            gs, ds = g.delete_in(t, o)
+        elif op == "update_sub":
+            gs, ds = g.update_sub(t, o)
         elif op == "add_column":
             gs, ds = g.add_column(t)
         elif op == "drop_column":

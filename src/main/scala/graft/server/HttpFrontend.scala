@@ -180,8 +180,8 @@ class HttpFrontend(ctx: GraftContext, port: Int,
     else {
       val (body, mime) = ctx.locked {
         // writes (or write+read batches) hold the context lock through
-        // execute + render: currentDb and the main session's registered
-        // views are shared across the handler pool. The statement guard
+        // execute + render: currentDb is shared across the handler pool,
+        // and writes commit one at a time. The statement guard
         // bounds how long a runaway write can hold that lock.
         Statements.run(ctx.spark, Statements.newGroupId("http"), sql, statementTimeoutMs) {
           def runAll() = stmts.map(ctx.execute).last
@@ -216,6 +216,9 @@ class HttpFrontend(ctx: GraftContext, port: Int,
     if (stmts.size != 1) return respond(ex, 400, "GET accepts exactly one statement\n")
     val sql = stmts.head
     if (!ctx.isReadOnly(sql)) return respond(ex, 405, "NOT_READ_ONLY_QUERY\n")
+    // what one run measured is not a cacheable entity
+    if (ctx.isExplainAnalyze(sql))
+      return respond(ex, 400, "EXPLAIN ANALYZE runs the query: send it with POST /q\n")
 
     // lock-free: analyze on the current catalog snapshot (no job runs),
     // fingerprint the pinned (uuid, version) scans in the plan, and only

@@ -151,8 +151,11 @@ object Statements {
     * hands the connection back only once the slots are free; an overrun
     * is logged, not thrown, since the statement's answer is already
     * "cancelled". */
-  private def awaitTasksEnded(sc: SparkContext, groupId: String): Unit = {
-    val st = sc.statusTracker
+  private def awaitTasksEnded(spark: SparkSession, groupId: String): Unit = {
+    // the status store lags the scheduler (rate-limited task counts, often
+    // 0 for tasks that started together) until the bus delivers the stage end
+    org.apache.spark.sql.GraftSessions.drainListeners(spark)
+    val st = spark.sparkContext.statusTracker
     def activeTasks: Int = st.getJobIdsForGroup(groupId).toSeq
       .flatMap(j => st.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq))
       .flatMap(s => st.getStageInfo(s).toSeq)
@@ -193,7 +196,7 @@ object Statements {
       case e: Throwable =>
         val reason = cancelled.get(groupId)
         if (reason == null) throw e
-        awaitTasksEnded(sc, groupId)
+        awaitTasksEnded(spark, groupId)
         throw new Cancelled(reason)
     } finally {
       deadline.foreach(_.cancel(false))

@@ -37,27 +37,28 @@ object Functions {
       str("data"), str("volatility", "volatile"))
   }
 
-  def create(ctx: GraftContext, name: String, detailsJson: String, orReplace: Boolean): Unit = {
+  /** Persist a function after validating it on a throwaway clone of
+    * `snapshot`, the statement's read snapshot — so a body may call engine
+    * functions and functions persisted before it. A module that fails to
+    * parse/validate must not be persisted, or every later statement would
+    * trip over it. Later snapshots register it from the catalog. */
+  def create(catalog: graft.catalog.Catalog, snapshot: org.apache.spark.sql.SparkSession,
+             name: String, detailsJson: String, orReplace: Boolean): Unit = {
     val d = parse(detailsJson)
     require(d.returnType.nonEmpty, "function details need a return_type")
-    require(orReplace || !ctx.catalog.functions.contains(name),
+    require(orReplace || !catalog.functions.contains(name),
       s"function $name already exists")
-    // validate FIRST, on a throwaway clone of the main session (so a body
-    // may call engine functions): a module that fails to parse/validate
-    // must not be persisted, or every later statement would trip over it.
-    // The main session and read snapshots pick it up from the catalog.
-    registerInto(org.apache.spark.sql.GraftSessions.cloneSession(ctx.spark),
-      Map(name -> detailsJson), drop = Seq(name))
-    ctx.catalog.createFunction(name, detailsJson, orReplace)
+    registerInto(org.apache.spark.sql.GraftSessions.cloneSession(snapshot), Map(name -> detailsJson))
+    catalog.createFunction(name, detailsJson, orReplace)
   }
 
-  /** Make `s`'s persisted functions match the catalog: drop the `drop`
-    * names, then register `fns` (name -> details JSON). */
-  def registerInto(s: org.apache.spark.sql.SparkSession, fns: Map[String, String],
-                   drop: Iterable[String]): Unit = {
-    drop.foreach(org.apache.spark.sql.GraftSessions.dropFunction(s, _))
-    fns.foreach { case (n, j) => register(s, n, parse(j)) }
-  }
+  /** Register `fns` (name -> details JSON) on `s`, each replacing any
+    * temporary function of that name. */
+  def registerInto(s: org.apache.spark.sql.SparkSession, fns: Map[String, String]): Unit =
+    fns.foreach { case (n, j) =>
+      org.apache.spark.sql.GraftSessions.dropFunction(s, n)
+      register(s, n, parse(j))
+    }
 
   private def sqlTypeName(t: String): String = t.toUpperCase match {
     case "INT" | "INTEGER" | "INT4" => "INT"

@@ -5,10 +5,12 @@ import java.time.Instant
 import graft.catalog.Catalog
 import graft.lake.{GraftTable, LakeIO, Manifest}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, GraftSessions, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, GraftSessions, Row, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** The engine's session/statement layer: what Seafowl hand-builds around
   * DataFusion, re-built around Spark SQL (reference
@@ -18,10 +20,15 @@ import scala.jdk.CollectionConverters._
   * CONVERT/CREATE FUNCTION — the ones the reference adds to its forked
   * parser, `src/datafusion/parser.rs:104-186`) are recognized up front and
   * executed eagerly against the catalog + manifest tables; everything else
-  * (SELECT/WITH/VALUES/EXPLAIN/SHOW) flows to Catalyst via `spark.sql`
-  * after (a) registering the referenced catalog tables as views and
-  * (b) applying the time-travel rewrite `t('<ts>')` → version-pinned view
-  * (reference `src/version.rs:61-106`).
+  * (SELECT/WITH/VALUES/EXPLAIN/SHOW) flows to Catalyst after the
+  * time-travel rewrite `t('<ts>')` → version-pinned view (reference
+  * `src/version.rs:61-106`).
+  *
+  * Catalog resolution has one path, like the reference's per-query catalog
+  * view (`src/context/mod.rs:89-112`): every statement that resolves
+  * catalog names plans on its database's snapshot (`snapshotSession`), a
+  * session clone per (db, generation); the base session `spark` carries no
+  * catalog views or persisted functions.
   *
   * Naming: tables live in catalog schemas (default `public`); `public`
   * tables register under their bare name, qualified `sch.tbl` references
@@ -40,11 +47,10 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   // GraftContext over the same session)
   graft.GraftExtensions.ensure(spark)
 
-  /** Serialize WRITE statement processing on the context: currentDb,
-    * catalogDirty, and the main session's registered-view set are shared,
-    * so DDL/DML/upload/sync handlers wrap execute+render in `locked`.
-    * READS do not take this lock — they run on immutable per-generation
-    * snapshot sessions (`executeRead`), so one slow analytical query never
+  /** Serialize WRITE statement processing on the context: the lock guards
+    * `currentDb` and orders writes, so DDL/DML/upload/sync handlers wrap
+    * execute+render in `locked`. READS do not take this lock — they run on
+    * immutable per-generation snapshots (`executeRead`), so one slow query never
     * blocks other clients (the reference serves requests concurrently on
     * tokio, `src/frontend/http.rs:158-233`). */
   def locked[T](f: => T): T = synchronized(f)
@@ -56,8 +62,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     require(catalog.listDatabases.contains(db), s"unknown database $db")
     val prev = currentDb
     currentDb = db
-    markDirty()
-    try f finally { currentDb = prev; markDirty() }
+    try f finally currentDb = prev
   }
 
   def table(schema: String, name: String): GraftTable = {
@@ -265,23 +270,16 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
 
   // --- query-side registration + rewrites ---------------------------------
 
-  // Views snapshot table file lists, so they must refresh after any
-  // catalog or data mutation — but NOT on every read: re-registering all
-  // tables (and re-reading every manifest for system.table_versions) on
-  // the hot path costs O(total history) per query.
-  @volatile private var catalogDirty = true
-
   // Monotone catalog generation: bumped on every mutation; keys the
   // read-snapshot cache so reads after a write see the new version while
   // in-flight reads keep their pinned snapshot.
   private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Callers that mutate tables outside `execute` (upload/sync endpoints)
-    * must invalidate the registered views. Also touches the catalog's
+    * must invalidate the read snapshots. Also touches the catalog's
     * cross-process trigger so OTHER server processes over this dataDir
     * learn something changed (their poll in snapshotSession). */
   def markDirty(): Unit = {
-    catalogDirty = true
     generation.incrementAndGet()
     lastSeenDataGen = catalog.touchDataGen() // own touch must not re-bump us
   }
@@ -306,18 +304,17 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     val seen = catalog.readDataGen()
     if (seen != lastSeenDataGen) {
       lastSeenDataGen = seen
-      catalogDirty = true
       generation.incrementAndGet()
     }
   }
 
-  // --- concurrent read path ----------------------------------------------
+  // --- read snapshots: the one catalog path -------------------------------
 
   // (db, generation) -> a session clone with exactly that database's
   // catalog registered. Sessions share the SparkContext (executors, data
-  // cache) but have isolated temp views, so N readers + 1 writer never
-  // contend: readers resolve against an immutable snapshot, the writer
-  // bumps the generation and the NEXT read builds a fresh one.
+  // cache) but have isolated temp views and functions, so N readers + 1
+  // writer never contend: the writer bumps the generation and the NEXT
+  // statement builds a fresh snapshot.
   private val readSessions =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), GraftContext.Snapshot]
 
@@ -399,16 +396,18 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     // database's data — the cross-contamination the spec hammers on)
     GraftSessions.clearTempViews(s)
     val pinned = registerDataViews(s, db, state)
-    // staging external tables are session-global (transient, not per-db)
+    // staging external tables are session-global (transient, not per-db).
+    // A source that no longer opens fails the queries that read it, not
+    // every statement planned on this snapshot.
     stagingTables.foreach { case (name, st) =>
-      GraftSessions.replaceTempView(
-        readExternal(s, st.format, st.location, st.options, Some(st.schema)), s"staging__$name")
+      val df = try readExternal(s, st.format, st.location, st.options, Some(st.schema))
+        catch { case scala.util.control.NonFatal(e) =>
+          SystemTables.lazyFrame(s, s"staging__$name", st.schema)(throw e) }
+      GraftSessions.replaceTempView(df, s"staging__$name")
     }
     SystemTables.registerInto(this, s, db, state, pinned)
-    // the clone also inherits the parent's persisted functions, which
-    // may be newer or older than `state`'s
-    Functions.registerInto(s, state.functionDetails, drop = knownFunctions.asScala)
-    GraftContext.Snapshot(s, state)
+    Functions.registerInto(s, state.functionDetails)
+    GraftContext.Snapshot(s, state, pinned)
   }
 
   /** The current read snapshot for `db`: built at most once per (db,
@@ -428,10 +427,41 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * catalog snapshot for `db` (default: the session's current database).
     * Returns a lazy DataFrame — analysis happens here (so ETags can be
     * computed plan-based without executing), jobs run when consumed. */
-  def executeRead(sql: String, db: Option[String] = None): DataFrame = {
-    val d = db.getOrElse(currentDb)
-    val snap = snapshotSession(d)
-    snap.session.sql(rewriteQuery(sql, snap.session, d, snap.state))
+  def executeRead(sql: String, db: Option[String] = None): DataFrame =
+    plan(sql, db.getOrElse(currentDb))
+
+  /** Plan a query, or EXPLAIN ANALYZE of one, on the current snapshot of `db`. */
+  private def plan(sql: String, db: String = currentDb): DataFrame = {
+    val snap = snapshotSession(db)
+    def query(q: String) = snap.session.sql(rewriteQuery(q, snap.session, db, snap.state))
+    sql.trim match {
+      case reExplainAnalyze(q) => explainAnalyze(query(q))
+      case q => query(q)
+    }
+  }
+
+  /** EXPLAIN ANALYZE (reference parity: DataFusion's runs the plan and
+    * reports its runtime metrics): one row per (operator, metric) of the
+    * EXECUTED plan. The query runs, afresh, when the result is planned for
+    * consumption, so the consumer's statement job group covers it. */
+  private def explainAnalyze(df: DataFrame): DataFrame = {
+    val schema = StructType(Seq(StructField("operator", StringType),
+      StructField("metric", StringType), StructField("value", LongType, nullable = false)))
+    SystemTables.lazyFrame(df.sparkSession, "explain_analyze", schema) {
+      val qe = GraftBridge.ofRows(df.sparkSession, df.queryExecution.analyzed).queryExecution
+      qe.executedPlan.execute().foreach(_ => ()) // metrics accumulate here
+      val out = Seq.newBuilder[Row]
+      def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
+        p.metrics.toSeq.sortBy(_._1).foreach { case (k, m) => out += Row(p.nodeName, k, m.value) }
+        p match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            walk(a.executedPlan)
+          case _ => p.children.foreach(walk)
+        }
+      }
+      walk(qe.executedPlan)
+      out.result()
+    }
   }
 
   /** Inline-metastore read (Arrow Flight SQL parity where gRPC can't go —
@@ -477,47 +507,9 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     s.sql(rewritten)
   }
 
-  // views registered by the previous registerAll — dropped when they
-  // disappear from the catalog (or the session switches database), so a
-  // stale view can't serve another database's data
-  private var registeredViews: Set[String] = Set.empty
-  // the catalog state the main session's views and functions match
-  @volatile private var mainState: Catalog.State = _
-  // persisted functions registered on the main session (name -> details)
-  private var mainFunctions: Map[String, String] = Map.empty
-  // every persisted function name ever registered on the main session —
-  // grow-only, and added BEFORE the registration, so a snapshot reading
-  // it after cloning the main session sees every name the clone carries
-  private val knownFunctions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Make the main session match the catalog: every table visible to
-    * spark.sql (public tables under their bare name; others via `sch__tbl`
-    * flat names, rewritten in) and exactly the catalog's persisted
-    * functions. Skipped entirely when nothing changed since the last
-    * registration. */
-  private def registerAll(): Unit = {
-    if (!catalogDirty) return
-    val state = catalog.load()
-    val pinned = registerDataViews(spark, currentDb, state)
-    val fresh = pinned.map(_.view).toSet
-    (registeredViews -- fresh).foreach(spark.catalog.dropTempView(_): Unit)
-    registeredViews = fresh
-    SystemTables.registerInto(this, spark, currentDb, state, pinned)
-    val fns = state.functionDetails
-    val changed = fns.filter { case (n, j) => !mainFunctions.get(n).contains(j) }
-    knownFunctions.addAll(fns.keySet.asJava)
-    Functions.registerInto(spark, changed, drop = (mainFunctions.keySet -- fns.keySet) ++ changed.keySet)
-    mainFunctions = fns
-    mainState = state
-    catalogDirty = false
-  }
-
   /** Backtick-quote qualified names of known non-public tables + rewrite
-    * time travel `t('<ts>')` to a version-pinned registered view, against
-    * the state of the main session's last [[registerAll]]. */
-  private[sql] def rewriteQuery(sql0: String): String =
-    rewriteQuery(sql0, spark, currentDb, mainState)
-
+    * time travel `t('<ts>')` to a version-pinned view registered on
+    * `session`, against the snapshot's catalog `state`. */
   private[sql] def rewriteQuery(sql0: String, session: SparkSession, db: String,
                                 state: Catalog.State): String = {
     var sql = sql0
@@ -598,12 +590,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     out.result()
   }
 
-  /** Run a read-only (or Spark-handled) statement through Catalyst. */
-  private def sparkSql(sql: String): DataFrame = {
-    registerAll()
-    spark.sql(rewriteQuery(sql))
-  }
-
   // --- dispatcher ---------------------------------------------------------
 
   private val reUse = """(?is)^USE\s+([\w"]+)\s*$""".r
@@ -665,7 +651,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       val d = clean(db)
       require(catalog.listDatabases.contains(d), s"unknown database $d")
       currentDb = d
-      markDirty() // registered views belong to the previous database
       emptyResult
     case reCreateDb(db) =>
       catalog.createDatabase(clean(db)); emptyResult
@@ -711,9 +696,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         require(Set("PARQUET", "CSV", "JSON", "NDJSON")(fmtUp),
           s"PARTITIONED BY applies to directory-listed file formats, not $fmtUp")
       }
-      // validate eagerly on the main session, then record the recipe so
-      // read snapshots (buildSnapshot) re-register the same view — a
-      // staging table must stay visible to the lock-free read path
+      // validate eagerly, then record the recipe: snapshots
+      // (buildSnapshot) register the view from it
       val df = readExternal(spark, fmtUp, resolvedLoc, options)
       declaredPcols.foreach { declared =>
         // discovery must see BOTH source paths: v1 (LogicalRelation over
@@ -746,7 +730,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
           s"(${if (discovered.isEmpty) "none" else discovered.mkString(", ")}); " +
           "expected hive-style key=value directories for exactly the declared columns")
       }
-      df.createOrReplaceTempView(s"staging__$name")
       stagingTables(name) = Staging(fmtUp, resolvedLoc, options, df.schema)
       emptyResult
     case reClone(dst, src, ver) =>
@@ -769,9 +752,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     case reCreateTableAs(qname, query) =>
       val (sch, name) = splitName(qname)
       requireNotStaging(sch)
-      registerAll()
-      val df = spark.sql(rewriteQuery(query))
-      createPublishLast(sch, name)(root => GraftTable.createAs(spark, root, df): Unit)
+      val df = plan(query)
+      createPublishLast(sch, name)(root => GraftTable.createAs(df.sparkSession, root, df): Unit)
       emptyResult
     case reCreateTable(qname, cols) =>
       val (sch, name) = splitName(qname)
@@ -784,24 +766,16 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       val t = table(sch0, name)
       // FULL serializability even when the query reads its own target
       // (INSERT INTO t SELECT … FROM t): the input frame is REBUILT
-      // inside the retried closure against freshly re-pinned views, and
-      // the commit anchors to a manifest read BEFORE the re-pin — a
-      // writer that slips in between raises CommitConflict and the whole
+      // inside the retried closure on a snapshot that pins t no older than
+      // the manifest the commit anchors to (planSource) — a writer that
+      // slips in between raises CommitConflict and the whole
       // read-plan-write replays. (A plain `t.append(df)` retries with
       // the PRE-conflict frame — Delta-style WriteSerializable, i.e.
       // write skew; the conc-DML fuzz's self-referencing shapes pin the
       // stronger guarantee.)
-      var attempts = 0
       t.retryCommit {
         val m = t.latestManifest
-        // retries re-pin the views even against CROSS-PROCESS commits
-        // (which never set our dirty flag); the first attempt is already
-        // dirty from execute()'s own markDirty — skipping the extra
-        // generation bump keeps the common path at one snapshot rebuild
-        if (attempts > 0) markDirty()
-        attempts += 1
-        registerAll()
-        var df = spark.sql(rewriteQuery(query))
+        var df = planSource(query, t, m.version)
         Option(colList).map(_.trim).filter(_.nonEmpty) match {
           case Some(cl) =>
             val names = cl.split(',').map(_.trim.replace("\"", ""))
@@ -830,16 +804,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // attempt, so a MERGE whose source reads its own target re-plans
       // from the fresh snapshot instead of re-committing a stale frame
       // (same full-serializability closure as INSERT … SELECT above)
-      var srcAttempts = 0
-      def srcDf = {
-        // same retry-only re-pin as INSERT…SELECT above
-        if (srcAttempts > 0) markDirty()
-        srcAttempts += 1
-        registerAll()
-        if (p.source.startsWith("("))
-          spark.sql(rewriteQuery(p.source.trim.stripPrefix("(").stripSuffix(")")))
-        else spark.sql(rewriteQuery(s"SELECT * FROM ${p.source}"))
-      }
+      def srcDf = planSource(selectFrom(p.source), t, t.latestManifest.version)
       MergeInto.execute(t, srcDf, p)
       emptyResult
     case reUpdate(qname, setAndWhere) =>
@@ -853,10 +818,12 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         require(i > 0, s"bad assignment: $a")
         (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
       }
-      table(sch, name).update(assigns, where); emptyResult
+      val (t, rw) = dmlTarget(sch, name, assigns.map(_._2) ++ where)
+      t.update(assigns.map { case (c, e) => (c, rw(e)) }, where.map(rw)); emptyResult
     case reDelete(qname, where) =>
       val (sch, name) = splitName(qname)
-      table(sch, name).delete(Option(where)); emptyResult
+      val (t, rw) = dmlTarget(sch, name, Option(where).toSeq)
+      t.delete(Option(where).map(rw)); emptyResult
     case reTruncate(qname) =>
       val (sch, name) = splitName(qname)
       table(sch, name).truncate(); emptyResult
@@ -867,15 +834,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // — NOT check-then-drop, which another process could race between
       // the two steps (ctx.locked is per-process; the catalog file is
       // shared) and resurface the very error IF EXISTS promises away.
-      val dropped =
-        try { catalog.dropTable(currentDb, sch, name); true }
-        catch {
-          case e: IllegalArgumentException
-              if ifExists != null && String.valueOf(e.getMessage).startsWith("unknown table") =>
-            false
-        }
-      if (dropped)
-        spark.catalog.dropTempView(if (sch == "public") name else s"${sch}__$name")
+      try catalog.dropTable(currentDb, sch, name)
+      catch {
+        case e: IllegalArgumentException
+            if ifExists != null && String.valueOf(e.getMessage).startsWith("unknown table") =>
+      }
       emptyResult
     case reDropSchema(schName) =>
       requireNotStaging(clean(schName))
@@ -892,17 +855,14 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // beyond-reference schema evolution: O(manifest), no rewrite
       val (sch, name) = splitName(qname)
       table(sch, name).addColumn(clean(cname), sqlType(tpe))
-      spark.catalog.dropTempView(if (sch == "public") name else s"${sch}__$name")
       emptyResult
     case reDropColumn(qname, cname) =>
       val (sch, name) = splitName(qname)
       table(sch, name).dropColumn(clean(cname))
-      spark.catalog.dropTempView(if (sch == "public") name else s"${sch}__$name")
       emptyResult
     case reRename(from, to) =>
       val (fs, fn) = splitName(from); val (ts, tn) = splitName(to)
       catalog.renameTable(currentDb, fs, fn, ts, tn)
-      spark.catalog.dropTempView(if (fs == "public") fn else s"${fs}__$fn")
       emptyResult
     case reVacuumDb(_) =>
       // dropped-table storage + crash-orphaned unpublished dirs (the
@@ -968,18 +928,16 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       }
       emptyResult
     case reCreateFn(orReplace, name, json) =>
-      registerAll() // a body may call a function created just before
-      Functions.create(this, clean(name), json, orReplace != null); emptyResult
+      // validated on the snapshot: a body may call a function created before
+      Functions.create(catalog, snapshotSession(currentDb).session, clean(name), json,
+        orReplace != null)
+      emptyResult
     case reDropFn(ifExists, names) =>
       names.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty)
         .foreach(n => catalog.dropFunction(n, ifExists != null))
       emptyResult
     case reCopyTo(src, path, fmt) =>
-      registerAll()
-      val body = src.trim
-      val df =
-        if (body.startsWith("(")) spark.sql(rewriteQuery(body.stripPrefix("(").stripSuffix(")")))
-        else spark.sql(rewriteQuery(s"SELECT * FROM $body"))
+      val df = plan(selectFrom(src))
       val format = Option(fmt).map(_.toLowerCase).getOrElse("parquet")
       format match {
         case "parquet" => df.write.mode("overwrite").parquet(path)
@@ -990,30 +948,50 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         case other => throw new IllegalArgumentException(s"unsupported COPY format $other")
       }
       emptyResult
-    case reExplainAnalyze(q) =>
-      // reference parity: DataFusion's EXPLAIN ANALYZE executes the plan
-      // and annotates it with runtime metrics (seafowl passes it through,
-      // src/context/mod.rs query path). Here: run the query to completion
-      // (discarding rows), then emit one row per (operator, metric) from
-      // the EXECUTED plan — rows seen, spills, shuffle sizes, etc.
-      val df = sparkSql(q)
-      val qe = df.queryExecution
-      qe.executedPlan.execute().foreach(_ => ()) // metrics accumulate here
-      val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        p.metrics.toSeq.sortBy(_._1).foreach { case (k, m) =>
-          out += ((p.nodeName, k, m.value))
-        }
-        p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case _ => p.children.foreach(walk)
-        }
-      }
-      walk(qe.executedPlan)
-      import spark.implicits._
-      out.toSeq.toDF("operator", "metric", "value")
-    case other => sparkSql(other)
+    case other => plan(other)
+  }
+
+  /** Plan a write's source query on a snapshot that pins the target at
+    * `version` or later, the version its commit anchors to. A snapshot
+    * built before that commit (another process's, or the one a retry
+    * lost to) is replaced first, so a source reading its own target never
+    * commits a stale frame. */
+  private def planSource(query: String, target: GraftTable, version: Long): DataFrame = {
+    snapshotFor(target, version)
+    plan(query)
+  }
+
+  /** The current snapshot, rebuilt first if it pins `target` below `version`. */
+  private def snapshotFor(target: GraftTable, version: Long): GraftContext.Snapshot = {
+    val snap = snapshotSession(currentDb)
+    val stale = snap.pinned.exists(p =>
+      catalog.tableRoot(p.uuid) == target.root && p.manifest.version < version)
+    if (stale) { markDirty(); snapshotSession(currentDb) } else snap
+  }
+
+  /** `SELECT * FROM <table>`, or the query of a `(query)` source. */
+  private def selectFrom(src: String): String = {
+    val body = src.trim
+    if (body.startsWith("(")) body.stripPrefix("(").stripSuffix(")") else s"SELECT * FROM $body"
+  }
+
+  /** An UPDATE/DELETE target and the rewrite its SET/WHERE expressions get.
+    * Only a subquery or a persisted function reaches the catalog; then the
+    * target lives on the current snapshot's session, else on the base one. */
+  private def dmlTarget(sch: String, name: String,
+                        exprs: Seq[String]): (GraftTable, String => String) = {
+    val t = table(sch, name)
+    val functions = spark.sessionState.functionRegistry
+    val readsCatalog = exprs.exists(e => spark.sessionState.sqlParser.parseExpression(e).exists {
+      case _: SubqueryExpression => true
+      case f: UnresolvedFunction => !functions.functionExists(FunctionIdentifier(f.nameParts.last))
+      case _ => false
+    })
+    if (!readsCatalog) (t, identity)
+    else {
+      val snap = snapshotFor(t, t.latestManifest.version)
+      (new GraftTable(snap.session, t.root), rewriteQuery(_, snap.session, currentDb, snap.state))
+    }
   }
 
   /** Multi-statement execution (all run sequentially; results of the last
@@ -1029,6 +1007,9 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     val up = sql.trim.toUpperCase
     Seq("SELECT", "WITH", "VALUES", "SHOW", "EXPLAIN", "DESCRIBE").exists(up.startsWith)
   }
+
+  /** True if the statement is EXPLAIN ANALYZE: a read that runs its query. */
+  def isExplainAnalyze(sql: String): Boolean = reExplainAnalyze.matches(sql.trim)
 
   /** (table uuid, version) pairs for every graft table the query's
     * ANALYZED plan actually scans — the ETag input (reference
@@ -1138,8 +1119,10 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
 /** Inline-metastore request model (reference `clade/proto/schema.proto`:
   * SchemaObject / TableObject / StorageLocation). */
 object GraftContext {
-  /** A read snapshot: a session clone and the catalog state it was built from. */
-  private[sql] case class Snapshot(session: SparkSession, state: Catalog.State)
+  /** A read snapshot: a session clone, the catalog state it was built
+    * from and the manifests its data views are pinned to. */
+  private[sql] case class Snapshot(session: SparkSession, state: Catalog.State,
+                                   pinned: Seq[SystemTables.Pinned])
 
   /** Unreferenced-storage dirs younger than this survive the GC sweep —
     * sized so the slowest realistic CTAS build (a large query writing

@@ -244,10 +244,9 @@ object MergeInto {
     * writer's rows). `src0` is BY-NAME and re-evaluated after the
     * snapshot read on every attempt, so a source that reads the target
     * table itself re-plans from fresh data too (full serializability;
-    * the caller's thunk re-pins its views — GraftContext passes one that
-    * does `markDirty(); registerAll()` first). */
+    * the caller's thunk re-pins its views — GraftContext's plans on a
+    * snapshot that pins the target no older than its latest manifest). */
   def execute(table: GraftTable, src0: => DataFrame, p: Parsed): Long = table.retryCommit {
-    val spark = table.spark
     val m = table.latestManifest
     // schema from the SAME snapshot the file sets are planned against
     val sch = org.apache.spark.sql.types.DataType
@@ -258,6 +257,9 @@ object MergeInto {
     val hasMatched = updC.nonEmpty || delC.nonEmpty
 
     val src = src0.cache()
+    // the target's frames are built on the source's session: one
+    // statement, one catalog state
+    val spark = src.sparkSession
     try {
       // 1. prune candidate files by the source's equi-key ranges
       val keys = pruneKeys(p.onCond, p.tAlias)

@@ -4,7 +4,7 @@ import java.util.OptionalLong
 
 import graft.catalog.Catalog
 import graft.lake.Manifest
-import org.apache.spark.sql.{GraftBridge, GraftSessions, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, GraftSessions, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{LocalScan, ScanBuilder, Statistics, SupportsReportStatistics}
@@ -44,8 +44,7 @@ object SystemTables {
   def registerInto(ctx: GraftContext, spark: SparkSession, db: String,
                    state: Catalog.State, pinned: Seq[Pinned]): Unit = {
     def view(name: String, schema: StructType)(rows: => Seq[Row]): Unit =
-      GraftSessions.replaceTempView(GraftBridge.ofRows(spark,
-        DataSourceV2Relation.create(new LazyView(name, schema, () => rows), None, None)), name)
+      GraftSessions.replaceTempView(lazyFrame(spark, name, schema)(rows), name)
     def functions: Seq[(String, String)] =
       state.functions.toSeq.map { case (n, f) => n -> f.detailsJson }.sortBy(_._1)
 
@@ -168,6 +167,12 @@ object SystemTables {
       constraints.map { case (sch, _, cn, ce) => Row(db, sch, cn, ce) }
     }
   }
+
+  /** A frame over [[LazyView]] rows: `rows` runs when a query reading the
+    * frame is planned, on the planning thread. */
+  private[sql] def lazyFrame(spark: SparkSession, name: String, schema: StructType)(rows: => Seq[Row]): DataFrame =
+    GraftBridge.ofRows(spark,
+      DataSourceV2Relation.create(new LazyView(name, schema, () => rows), None, None))
 
   /** A read-only DSv2 table whose scan is a `LocalScan`: Spark asks for
     * its rows while planning a query that reads it (and never otherwise),

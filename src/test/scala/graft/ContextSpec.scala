@@ -294,6 +294,22 @@ class ContextSpec extends SparkSpec {
     assert(catalogIo.forall(_.endsWith("/_catalog/_data.gen")), catalogIo)
   }
 
+  test("a staging table whose files are gone fails only the queries that read it") {
+    val c = ctx()
+    val dir = tmpDir("graft-gone-ext")
+    c.execute("CREATE TABLE gsrc (a BIGINT)")
+    c.execute("INSERT INTO gsrc VALUES (1)")
+    c.execute(s"COPY gsrc TO '$dir/p'")
+    c.execute(s"CREATE EXTERNAL TABLE gone_ext STORED AS PARQUET LOCATION '$dir/p'")
+    assert(longs(c, "SELECT a FROM staging.gone_ext") === Seq(1L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/p"))
+    c.execute("INSERT INTO gsrc VALUES (2)") // a new snapshot for the reads below
+    assert(longs(c, "SELECT count(*) FROM gsrc") === Seq(2L))
+    assert(c.executeRead("SELECT count(*) FROM gsrc").collect().head.getLong(0) === 2L)
+    val e = intercept[Exception](c.executeRead("SELECT a FROM staging.gone_ext").collect())
+    assert(String.valueOf(e.getMessage).contains(s"$dir/p"), e)
+  }
+
   test("copy to + external table round trip through staging") {
     val c = ctx()
     c.execute("CREATE TABLE src (a BIGINT, b VARCHAR)")
@@ -668,6 +684,66 @@ class ContextSpec extends SparkSpec {
     assert(rows.nonEmpty)
     // the executed scan/filter actually ran: some operator counted rows
     assert(rows.exists { case (_, m, v) => m == "numOutputRows" && v >= 2L })
+  }
+
+  private def longs(c: GraftContext, sql: String): Seq[Long] =
+    c.execute(sql).collect().map(_.getLong(0)).toSeq
+
+  test("a fresh context's IN-subquery DELETE sees the row inserted just before") {
+    val c = ctx()
+    c.execute("CREATE TABLE a (k BIGINT)")
+    c.execute("INSERT INTO a VALUES (1), (2), (3)")
+    c.execute("CREATE TABLE b (k BIGINT)")
+    c.execute("INSERT INTO b VALUES (2)")
+    c.execute("DELETE FROM a WHERE k IN (SELECT k FROM b)")
+    assert(longs(c, "SELECT k FROM a ORDER BY k") === Seq(1L, 3L))
+  }
+
+  test("a DELETE after an UPDATE of its subquery's table matches the new values") {
+    val c = ctx()
+    c.execute("CREATE TABLE a (k BIGINT)")
+    c.execute("INSERT INTO a VALUES (1), (2), (3)")
+    c.execute("CREATE TABLE b (k BIGINT)")
+    c.execute("INSERT INTO b VALUES (2)")
+    assert(longs(c, "SELECT k FROM b") === Seq(2L))
+    c.execute("UPDATE b SET k = 3")
+    c.execute("DELETE FROM a WHERE k IN (SELECT k FROM b)")
+    assert(longs(c, "SELECT k FROM a ORDER BY k") === Seq(1L, 2L))
+  }
+
+  test("a scalar-subquery UPDATE after an INSERT reads the inserted row") {
+    val c = ctx()
+    c.execute("CREATE TABLE a (k BIGINT, v BIGINT)")
+    c.execute("INSERT INTO a VALUES (1, 0)")
+    c.execute("CREATE TABLE b (m BIGINT)")
+    c.execute("INSERT INTO b VALUES (10)")
+    assert(longs(c, "SELECT max(m) FROM b") === Seq(10L))
+    c.execute("INSERT INTO b VALUES (20)")
+    c.execute("UPDATE a SET v = (SELECT MAX(m) FROM b)")
+    assert(longs(c, "SELECT v FROM a") === Seq(20L))
+  }
+
+  test("UPDATE and DELETE call a persisted function") {
+    val c = ctx()
+    c.execute("CREATE TABLE pf (k BIGINT, v BIGINT)")
+    c.execute("INSERT INTO pf VALUES (1, 10), (2, 20)")
+    c.execute(
+      """CREATE FUNCTION pf_add AS '{"language":"sql","input_types":["bigint","bigint"],"return_type":"bigint","data":"$1 + $2"}'""")
+    c.execute("UPDATE pf SET v = pf_add(v, 1) WHERE k = 1")
+    c.execute("DELETE FROM pf WHERE pf_add(k, 0) = 2")
+    assert(longs(c, "SELECT v FROM pf") === Seq(11L))
+  }
+
+  test("a function created in one context does not resolve in another on the same session") {
+    val a = new GraftContext(spark, tmpDir("graft-fn-iso-a"))
+    val b = new GraftContext(spark, tmpDir("graft-fn-iso-b"))
+    a.execute(
+      """CREATE FUNCTION iso_add AS '{"language":"sql","input_types":["bigint","bigint"],"return_type":"bigint","data":"$1 + $2"}'""")
+    val q = "SELECT iso_add(2, 3)"
+    assert(longs(a, q) === Seq(5L))
+    assert(a.executeRead(q).collect().head.getLong(0) === 5L)
+    intercept[org.apache.spark.sql.AnalysisException](b.execute(q).collect())
+    intercept[org.apache.spark.sql.AnalysisException](b.executeRead(q).collect())
   }
 
   test("shallow clone is zero-copy, version-pinnable, and diverges copy-on-write") {

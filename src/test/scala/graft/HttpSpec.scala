@@ -592,6 +592,24 @@ class HttpSpec extends SparkSpec {
     } finally tfe.stop()
   }
 
+  test("EXPLAIN ANALYZE answers POST /q under the statement's job group; GET /q refuses it") {
+    assert(post("/q", "CREATE TABLE ea_http (id BIGINT); INSERT INTO ea_http VALUES (1), (2), (3)",
+      auth).statusCode() === 200)
+    val sql = "EXPLAIN ANALYZE SELECT id FROM ea_http WHERE id > 1"
+    val (r, groups) = jobGroupsDuring(post("/q", sql, auth))
+    assert(r.statusCode() === 200, r.body())
+    val lines = r.body().split("\n").toSeq
+    assert(lines.forall(l => l.startsWith("{\"operator\":") && l.contains("\"metric\":")), r.body())
+    // the query ran: some operator counted the two matching rows
+    assert("\"metric\":\"numOutputRows\",\"value\":2\\b".r.findFirstIn(r.body()).isDefined, r.body())
+    // its jobs ran in the statement's group, which the timeout and a
+    // client disconnect cancel
+    assert(groups.nonEmpty && groups.forall(g => g != null && g.startsWith("http")), groups)
+    // one run's measurements are not a cacheable entity
+    val g = get("/q/" + java.net.URLEncoder.encode(sql, UTF_8))
+    assert(g.statusCode() === 400, g.body())
+  }
+
   test("client disconnect mid-stream cancels the statement's jobs") {
     // a large streamed read: many partitions, each expensive enough that
     // the full result takes minutes — the client reads a few KB and hangs

@@ -301,9 +301,9 @@ class ManifestRaceSpec extends SparkSpec {
         }
       }
     }
-    // two readers: the main session's view registration, and the
-    // lock-free snapshot path (a rebuild per generation). The version
-    // enumeration runs when the query scans system.table_versions.
+    // two readers, `execute` and the lock-free `executeRead`, both on the
+    // snapshot path (a rebuild per generation). The version enumeration
+    // runs when the query scans system.table_versions.
     val served = loop("served") {
       val n = ctx.execute(
         "SELECT count(*) AS n FROM system.table_versions").collect().head.getLong(0)

@@ -338,6 +338,22 @@ class PgSpec extends SparkSpec {
     } finally c.close()
   }
 
+  test("simple-query EXPLAIN ANALYZE answers execute's rows under the statement's job group") {
+    val c = new Client
+    try {
+      val (_, _, _, errs0) = c.query("CREATE TABLE ea_pg (id BIGINT); INSERT INTO ea_pg VALUES (1), (2), (3)")
+      assert(errs0.isEmpty, errs0)
+      val sql = "EXPLAIN ANALYZE SELECT id FROM ea_pg WHERE id > 1"
+      val ((cols, rows, _, errs), groups) = jobGroupsDuring(c.query(sql))
+      assert(errs.isEmpty, errs)
+      assert(cols === Seq("operator", "metric", "value"))
+      assert(rows.exists(r => r(1) == "numOutputRows" && r(2) == "2"), rows)
+      assert(groups.nonEmpty && groups.forall(g => g != null && g.startsWith("pg")), groups)
+      val viaExecute = ctx.execute(sql).collect().map(r => Seq(r.getString(0), r.getString(1)))
+      assert(rows.map(_.take(2)) === viaExecute.toSeq)
+    } finally c.close()
+  }
+
   test("an error keeps the connection usable") {
     val c = new Client
     try {

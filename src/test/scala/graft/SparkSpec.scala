@@ -47,6 +47,22 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `f`'s result and the job-group id (null outside a group) of every
+    * job started, on any thread, while it ran. */
+  def jobGroupsDuring[A](f: => A): (A, Seq[String]) = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = f
+      org.apache.spark.sql.GraftSessions.drainListeners(spark)
+      (a, groups.toArray(Array.empty[String]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
