@@ -129,7 +129,17 @@ object Sessions {
 
   /** Apply runtime defaults to a built session. Values already set by
     * the user (spark-defaults, --conf, SPARK_GRAFT_CONF, or an earlier
-    * set) are kept.
+    * set) are kept. Installs, idempotently and without a conf key:
+    *  - the raised object-aggregate fallback threshold (below);
+    *  - [[graft.plan.SmallSort]] in `extraStrategies`: a global sort whose
+    *    input `ScalePath.small` admits runs in one task, with no
+    *    range-sampling job re-running its input stage
+    *    (`graft.forceScalePaths=true` restores range partitioning);
+    *  - [[graft.plan.HoistKernels]] in `extraOptimizations`: a filter
+    *    computes each total graft kernel once per row, in a projection
+    *    under it, instead of once per inlined spelling.
+    * Sessions cloned from a tuned one (the per-generation snapshots)
+    * inherit the planner changes.
     *
     * INTERACTION NOTE — the raised fallback threshold is session-global,
     * so it also governs Spark's UNBOUNDED-buffer object aggregates
@@ -146,6 +156,11 @@ object Sessions {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (spark.conf.getOption(key).forall(_ == "128"))
       spark.conf.set(key, ObjectAggFallbackGroups.toString)
+    val x = spark.experimental
+    if (!x.extraStrategies.contains(graft.plan.SmallSort))
+      x.extraStrategies = graft.plan.SmallSort +: x.extraStrategies
+    if (!x.extraOptimizations.contains(graft.plan.HoistKernels))
+      x.extraOptimizations = x.extraOptimizations :+ graft.plan.HoistKernels
     spark
   }
 }

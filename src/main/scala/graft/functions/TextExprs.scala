@@ -33,7 +33,7 @@ object TextExprs {
     * ~0.1 s for 50k docs).
     */
   case class PHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
 
     override def dataType: DataType = StringType
     override def prettyName: String = "phash64"
@@ -133,7 +133,7 @@ object TextExprs {
     * insensitive to.
     */
   case class ShingleHashSet(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1, s"shingle width must be >= 1, got $n")
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -200,7 +200,7 @@ object TextExprs {
     * adversarial inputs; the DuckDB oracle replays the same chain.
     */
   case class BpeEncodeDoc(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
 
     override def dataType: DataType = StringType
     override def prettyName: String = "bpe_encode_doc"
@@ -316,7 +316,7 @@ object TextExprs {
     * doc-keyed exchange with a zero-shuffle projection.
     */
   case class SimHash64(child: Expression, weighted: Boolean)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
 
     override def dataType: DataType = StringType
     override def prettyName: String = if (weighted) "simhash64_weighted" else "simhash64"
@@ -379,7 +379,7 @@ object TextExprs {
     * aggregate formulation produced no group for those).
     */
   case class MinKFingerprint(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1 && k >= 1)
 
     override def dataType: DataType = StringType
@@ -463,7 +463,7 @@ object TextExprs {
     * window) yield an empty array.
     */
   case class WinnowSelect(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(k >= 1 && w >= 1)
 
     override def dataType: DataType = ArrayType(
@@ -543,7 +543,7 @@ object TextExprs {
     * equals the original byte range); fewer than n words → empty array.
     */
   case class WindowHashes(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1, s"window width must be >= 1, got $n")
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -593,7 +593,7 @@ object TextExprs {
     * quality operators become single codegen-friendly projections.
     */
   case class MarkerCounts(child: Expression, markerSets: Seq[Seq[String]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     // membership packs into an Int bitmask (1 << i) below
     require(markerSets.size <= 32,
       s"marker_counts supports at most 32 marker sets, got ${markerSets.size}")
@@ -658,7 +658,7 @@ object TextExprs {
     * so expression equality stays structural (CSE/exchange reuse).
     */
   case class BucketWeightSum(child: Expression, weights: IndexedSeq[Long])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(weights.length == 256, s"need 256 bucket weights, got ${weights.length}")
 
     override def dataType: DataType = StructType(Seq(
@@ -702,7 +702,7 @@ object TextExprs {
     * a zero-shuffle projection.
     */
   case class NgramBucketWeightSum(child: Expression, n: Int, weights: IndexedSeq[Long])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1, s"n-gram width must be >= 1, got $n")
     require(weights.length == 4096, s"need 4096 bucket weights, got ${weights.length}")
 
@@ -751,7 +751,7 @@ object TextExprs {
     * downstream, so the declared pair output is unchanged.
     */
   case class MinHashBandKeys(child: Expression, n: Int, k: Int, bands: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1 && k >= 1 && bands >= 1 && k % bands == 0,
       s"k ($k) must be a multiple of bands ($bands)")
     private val rowsPerBand = k / bands
@@ -824,7 +824,7 @@ object TextExprs {
     * NULL for shingle-less docs.
     */
   case class MinHashSigHex(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
     require(n >= 1 && k >= 1, s"need n >= 1 and k >= 1, got n=$n k=$k")
 
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -894,7 +894,7 @@ object TextExprs {
     * regexp_extract_all that materializes every token just to count them.
     */
   case class TokenCounts(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "token_counts"
@@ -939,7 +939,7 @@ object TextExprs {
     * struct(redacted, n_emails, n_ids, n_phones).
     */
   case class PiiRedact(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with TotalKernel {
 
     override def dataType: DataType = StructType(Seq(
       StructField("redacted", StringType),

@@ -19,7 +19,7 @@ import org.apache.spark.sql.GraftBridge
   * so the DuckDB oracles are unaffected.
   */
 case class DotProductLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with TotalKernel {
 
   override def dataType: DataType = LongType
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -77,7 +77,7 @@ case class NearestCells(
     cents: IndexedSeq[(Long, IndexedSeq[Long], Long)],
     nprobe: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with TotalKernel {
   require(nprobe >= 1 && cents.nonEmpty)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -142,7 +142,7 @@ case class HierNearestCell(
     fines: IndexedSeq[(Long, IndexedSeq[(Long, IndexedSeq[Long], Long)])],
     wCoarse: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with TotalKernel {
   require(coarse.nonEmpty && wCoarse >= 1)
 
   override def dataType: DataType = LongType
@@ -223,7 +223,7 @@ case class MatVecProject(child: Expression,
                          center: IndexedSeq[Double],
                          scale: Double)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with TotalKernel {
   require(mat.nonEmpty && mat.forall(_.length == center.length),
     "matrix rows and center must share the input dimension")
 
@@ -269,7 +269,8 @@ case class MatVecProject(child: Expression,
   * never cross the .5 boundary, and exact ties are exact doubles);
   * NaN/±Inf pass through round and then fail the BIGINT cast exactly
   * like the declarative spelling under ANSI. OpsSpec pins equality on
-  * ties, near-ties, negatives, nulls and subnormals.
+  * ties, near-ties, negatives, nulls and subnormals. Not a
+  * [[TotalKernel]]: that failure must stay on the rows that reach it.
   */
 case class QuantizeMicro(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression

@@ -5,6 +5,7 @@ import java.util.UUID
 import graft.lake.Manifest._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -197,7 +198,11 @@ class GraftTable(val spark: SparkSession, val root: String) {
     val batchDir = s"data-${System.currentTimeMillis}-${UUID.randomUUID.toString.take(8)}"
     val out = new HPath(s"$root/$batchDir")
     val tracker = new FileStats.Tracker(df.schema)
-    org.apache.spark.sql.GraftWrites.parquet(guarded(df), out.toString,
+    // a VALUES source is a LocalRelation, which Spark slices into
+    // min(rows, cores) tasks — one file per row for a small INSERT; one
+    // task writes it whole (maxRecordsPerFile still splits a big one)
+    val src = if (fromValues(df)) df.coalesce(1) else df
+    org.apache.spark.sql.GraftWrites.parquet(guarded(src), out.toString,
       Map("compression" -> "zstd", "maxRecordsPerFile" -> maxRecordsPerFile.toString),
       Seq(tracker))
     val (written, empty) = tracker.files.partition(_.numRecords > 0)
@@ -213,6 +218,12 @@ class GraftTable(val spark: SparkSession, val root: String) {
       }
     }
   }
+
+  /** Whether `df` optimizes to a LocalRelation. Only plans whose leaves
+    * are all local relations are optimized to find out. */
+  private def fromValues(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** File name -> size for every file directly under dir, from ONE
     * directory listing (object-store friendly: a LIST per batch dir

@@ -347,6 +347,30 @@ class LakeSpec extends SparkSpec {
     assert(t.latestManifest.files.map(_.path) === paths)
   }
 
+  test("a 4-row INSERT ... VALUES commits exactly one new file") {
+    val c = new graft.sql.GraftContext(spark, tmpDir("graft-values"))
+    c.execute("CREATE TABLE ev (id BIGINT, v VARCHAR)")
+    c.execute("INSERT INTO ev VALUES (1, 'a')").collect()
+    val before = c.table("public", "ev").latestManifest.files.map(_.path).toSet
+    c.execute("INSERT INTO ev VALUES (2, 'b'), (3, 'c'), (4, 'd'), (5, 'e')").collect()
+    val added = c.table("public", "ev").latestManifest.files.filterNot(f => before(f.path))
+    assert(added.size === 1 && added.head.numRecords === 4L, added)
+    assert(c.execute("SELECT count(*) FROM ev").collect()(0).getLong(0) === 5L)
+  }
+
+  test("cluster writes one range partition per task on a tuned session") {
+    import tuned.implicits._
+    val t = GraftTable.create(tuned, tmpDir("graft-cluster-tuned"),
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))))
+    (0 until 4).foreach(b => t.append((0 until 10).map(i => (i * 4L + b, s"r$b")).toDF("id", "v")))
+    t.cluster(Seq("id"), maxRecordsPerFile = 10) // nParts = ceil(40 / 10) = 4
+    // part-<task>-...: one task per range partition, not one task split
+    // by maxRecordsPerFile
+    val tasks = t.latestManifest.files.map(_.path.split('/').last.split('-')(1)).toSet
+    assert(tasks.size === 4, t.latestManifest.files.map(_.path))
+    assert(t.read().count() === 40)
+  }
+
   test("cluster makes file ranges disjoint so point queries touch one file") {
     val root = tmpDir("graft-cluster")
     val t = GraftTable.create(spark, root,

@@ -1673,6 +1673,17 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("propsK equals get_json_object on layouts the generator does not write") {
+    import spark.implicits._
+    val props = Seq[String]("""{"k":12}""", """{"k": 12, "x": 3}""", """{"x": 3, "k": 12}""",
+      null, """{"k": 7}""", """{"k": "9"}""", """{"k": null}""").toDF("props")
+    val got = props.select(ops.EventProps.propsK(col("props")).as("fast"),
+      get_json_object(col("props"), "$.k").cast("long").as("json")).collect()
+    got.foreach(r => assert(r.get(0) === r.get(1), r))
+    assert(got.map(r => Option(r.get(0))).toSeq ===
+      Seq(Some(12L), Some(12L), Some(12L), None, Some(7L), Some(9L), None))
+  }
+
   test("native BPE encode expression equals the declarative lambda spelling bit-for-bit") {
     import spark.implicits._
     // adversarial shapes: multi-space runs, leading/trailing spaces,

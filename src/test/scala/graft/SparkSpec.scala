@@ -14,11 +14,16 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** A session on the same context with what `Sessions.tune` installs
+    * (the planner's small-sort strategy and kernel hoist); `spark` itself
+    * stays stock. */
+  lazy val tuned: SparkSession = graft.Sessions.tune(spark.newSession())
+
   /** Runs `body` with the size-gated operators' driver-or-cluster switch
-    * forced to the distributed path (`on`) or left to input size. */
-  def withScalePaths[A](on: Boolean = true)(body: => A): A = {
-    spark.conf.set(graft.ops.ScalePath.Conf, on)
-    try body finally spark.conf.unset(graft.ops.ScalePath.Conf)
+    * forced to the distributed path (`on`) or left to input size, on `s`. */
+  def withScalePaths[A](on: Boolean = true, s: SparkSession = spark)(body: => A): A = {
+    s.conf.set(graft.ops.ScalePath.Conf, on)
+    try body finally s.conf.unset(graft.ops.ScalePath.Conf)
   }
 
   /** Jobs started on this thread while `f` runs (the listener bus is
