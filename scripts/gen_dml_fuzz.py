@@ -32,7 +32,13 @@ import random
 import sys
 
 COLS = ["id", "a", "b", "s"]
-STRPOOL = ["alpha", "beta", "gamma", "delta", "x", "yz", "longish_value", ""]
+# Pool entries are the text between the quotes of a SQL literal, so
+# `it''s` reads as it's in both engines. The rest put a statement
+# separator, a keyword, a comment marker and two non-ASCII characters
+# inside literals (U+FF5E sorts before U+1F600 in UTF-8 byte order, after
+# it in UTF-16). Backslashes stay out: DuckDB reads them literally.
+STRPOOL = ["alpha", "beta", "gamma", "delta", "x", "yz", "longish_value", "",
+           "it''s", "a;b", "x WHERE y", "-- no", "\uff5e", "\U0001f600"]
 
 
 class Gen:
@@ -97,6 +103,8 @@ class Gen:
             "%s IS NULL" % self.rnd.choice([p + "a", p + "b", p + "s"]),
             "%s IS NOT NULL" % self.rnd.choice([p + "a", p + "s"]),
             "%ss LIKE '%s%%'" % (p, self.rnd.choice(["a", "b", "g", "lo", "x"])),
+            "%ss %s '%s'" % (p, self.rnd.choice(["<", "<=", ">", ">=", "=", "<>"]),
+                             self.rnd.choice(STRPOOL)),
         ]
         n = self.rnd.randint(1, 2)
         parts = [self.rnd.choice(atoms) for _ in range(n)]

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sql.GraftContext
+import graft.sql.{GraftContext, SqlText}
 
 /** CLI frontend (the analog of the reference's `src/cli/`): one-off SQL
   * execution, or an interactive REPL when no SQL argument is given.
@@ -12,7 +12,8 @@ import graft.sql.GraftContext
   * result as JSON-lines (the same encoding the HTTP frontend streams).
   *
   * REPL parity with the reference CLI (`src/cli/commands.rs`):
-  * statements span lines until a terminating `;`; meta-commands execute
+  * statements span lines until a terminating `;` (`SqlText.complete`:
+  * outside literals, quoted identifiers and comments); meta-commands execute
   * immediately — `\d` list tables, `\d <name>` describe a table, `\?`
   * help, `\q` quit. Errors print and the loop continues (a typo must
   * never cost the session).
@@ -24,44 +25,6 @@ object Shell {
     "\\d       list tables",
     "\\d name  describe table",
     "\\?       help")
-
-  /** A buffered statement is complete when its last meaningful character
-    * is `;` OUTSIDE any string literal ('' escapes), double-quoted
-    * identifier, `--` line comment, or (nested) `/* */` block comment —
-    * psql's quote-state rule, so a value like 'a;b', a `"quoted;name"`
-    * identifier, or a literal spanning lines never triggers premature
-    * execution, and a statement followed by a trailing block comment
-    * still auto-executes. The lexer states mirror
-    * GraftContext.splitStatements exactly, so what the REPL decides is a
-    * complete input splits the same way when executed. */
-  private[graft] def terminated(sql: String): Boolean = {
-    var inS = false  // '...' string literal ('' escapes via double-toggle)
-    var inD = false  // "..." quoted identifier
-    var last = ' '
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inS && !inD && c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1 // line comment
-      } else if (!inS && !inD && c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        var depth = 1
-        i += 2
-        while (i < sql.length && depth > 0) {
-          if (sql.startsWith("/*", i)) { depth += 1; i += 2 }
-          else if (sql.startsWith("*/", i)) { depth -= 1; i += 2 }
-          else i += 1
-        }
-        if (depth > 0) return false // unterminated block comment
-        i -= 1 // outer loop re-advances
-      } else {
-        if (c == '\'' && !inD) inS = !inS
-        else if (c == '"' && !inS) inD = !inD
-        if (!c.isWhitespace) last = c
-      }
-      i += 1
-    }
-    !inS && !inD && last == ';'
-  }
 
   /** The REPL loop, IO-injected for tests: reads logical statements from
     * `lines`, writes results/errors to `out`. Returns on EOF or `\q`.
@@ -100,13 +63,13 @@ object Shell {
           case Array("\\d", name) => guarded {
             show(ctx.executeRead(
               "SELECT column_name, data_type, is_nullable FROM information_schema.columns " +
-              s"WHERE table_name = '${name.replace("'", "''")}' ORDER BY ordinal_position"))
+              s"WHERE table_name = ${SqlText.quote(name)} ORDER BY ordinal_position"))
           }
           case _ => out.println(s"unknown command: $line (\\? for help)")
         }
       } else {
         buf.append(raw).append('\n')
-        if (terminated(buf.result())) {
+        if (SqlText.complete(buf.result())) {
           val sql = buf.result().trim.stripSuffix(";")
           buf.clear()
           if (sql.nonEmpty) guarded(timed(sql)(show(ctx.locked(ctx.executeAll(sql)))))

@@ -3,6 +3,7 @@ package graft.catalog
 import java.util.UUID
 
 import graft.lake.LakeIO
+import graft.lake.Manifest.jstr
 import graft.lake.Manifest.Json
 import graft.lake.Manifest.Json._
 import org.apache.hadoop.fs.{Path => HPath}
@@ -73,13 +74,6 @@ class Catalog(val dataDir: String) {
 
   // --- persistence --------------------------------------------------------
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\r' => "\\r"; case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private def q(s: String) = "\"" + esc(s) + "\""
 
   private def versionFile(v: Long): HPath = new HPath(dir, f"v$v%020d.json")
 
@@ -131,19 +125,19 @@ class Catalog(val dataDir: String) {
     * concurrent committer (another process on the same data dir). */
   private def save(s: State, base: Long): Boolean = {
     val dbs = s.dbs.toSeq.sortBy(_._1).map { case (db, schemas) =>
-      q(db) + ":" + schemas.toSeq.sortBy(_._1).map { case (sch, tables) =>
-        q(sch) + ":" + tables.toSeq.sortBy(_._1).map { case (t, e) =>
-          q(t) + s""":{"uuid":${q(e.uuid)}}"""
+      jstr(db) + ":" + schemas.toSeq.sortBy(_._1).map { case (sch, tables) =>
+        jstr(sch) + ":" + tables.toSeq.sortBy(_._1).map { case (t, e) =>
+          jstr(t) + s""":{"uuid":${jstr(e.uuid)}}"""
         }.mkString("{", ",", "}")
       }.mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     val fns = s.functions.toSeq.sortBy(_._1).map { case (n, f) =>
-      q(n) + s""":{"detailsJson":${q(f.detailsJson)}}"""
+      jstr(n) + s""":{"detailsJson":${jstr(f.detailsJson)}}"""
     }.mkString("{", ",", "}")
     val dropped = s.dropped.map { d =>
-      s"""{"schema":${q(d.schema)},"name":${q(d.name)},"uuid":${q(d.uuid)},"dropTimeMs":${d.dropTimeMs}}"""
+      s"""{"schema":${jstr(d.schema)},"name":${jstr(d.name)},"uuid":${jstr(d.uuid)},"dropTimeMs":${d.dropTimeMs}}"""
     }.mkString("[", ",", "]")
-    val sseq = s.syncSeq.toSeq.sortBy(_._1).map { case (k, v) => q(k) + ":" + v }
+    val sseq = s.syncSeq.toSeq.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
     val next = base + 1
     val ok = LakeIO.writeAtomic(versionFile(next),

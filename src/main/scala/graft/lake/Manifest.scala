@@ -79,7 +79,8 @@ object Manifest {
     case c => c.toString
   }
 
-  /** JSON string literal with full escaping (shared: manifests, HTTP). */
+  /** JSON string literal with full escaping (shared: manifests, the
+    * catalog, HTTP results). */
   def jstr(s: String): String = "\"" + esc(s) + "\""
   private def jopt(o: Option[String]): String = o.map(jstr).getOrElse("null")
 

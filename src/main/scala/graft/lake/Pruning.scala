@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Stats-based file pruning: decide from a file's per-column min/max/null
   * statistics whether a predicate can possibly match any row in the file —
@@ -24,7 +25,7 @@ object Pruning {
       scala.util.Try(s.toLong).toOption
     case FloatType | DoubleType => scala.util.Try(s.toDouble).toOption
     case _: DecimalType => scala.util.Try(BigDecimal(s)).toOption
-    case StringType => Some(s)
+    case StringType => Some(UTF8String.fromString(s))
     case BooleanType => Some(s == "true")
     case _ => None
   }
@@ -39,7 +40,9 @@ object Pruning {
     case (x: BigDecimal, y: Double) => Some(x.compare(BigDecimal(y)))
     case (x: Long, y: BigDecimal) => Some(BigDecimal(x).compare(y))
     case (x: Double, y: BigDecimal) => Some(BigDecimal(x).compare(y))
-    case (x: String, y: String) => Some(x.compareTo(y))
+    // file stats are min/max in Spark's order, UTF-8 bytes — not
+    // String.compareTo's UTF-16 units, which disagree past U+FFFF
+    case (x: UTF8String, y: UTF8String) => Some(x.compareTo(y))
     case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
     case _ => None
   }
@@ -54,7 +57,7 @@ object Pruning {
     case v: java.lang.Float => Some(v.doubleValue)
     case v: java.lang.Double => Some(v.doubleValue)
     case v: Decimal => Some(v.toBigDecimal)
-    case v: org.apache.spark.unsafe.types.UTF8String => Some(v.toString)
+    case v: UTF8String => Some(v)
     case v: java.lang.Boolean => Some(v.booleanValue)
     case _ => None
   }

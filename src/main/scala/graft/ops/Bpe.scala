@@ -223,38 +223,15 @@ object Bpe {
   /** `encode` with the merge list already on the driver (rank order).
     * The per-word tokenize + merge-replay runs as ONE native expression
     * (TextExprs.BpeEncodeDoc): the declarative per-word lambda spelling
-    * (`transform` over split words, kept below in
-    * `encodeWithDeclarative` as the OpsSpec equality pin) evaluates
-    * INTERPRETED per word per merge — the tx31/tx33 hot path.
+    * (`transform` over split words, kept in test scope as OpsSpec's
+    * equality pin) evaluates INTERPRETED per word per merge — the
+    * tx31/tx33 hot path.
     */
   def encodeWith(docs: DataFrame, textCol: String, idCol: String,
                  merges: Seq[(String, String)]): DataFrame = {
     require(merges.size <= 64, s"merge table too large: ${merges.size} (model, not data)")
     docs.select(col(idCol).as("doc_id"),
         graft.functions.TextExprs.bpe_encode_doc(col(textCol), merges).as("tokens"))
-      .withColumn("n_tokens",
-        when(col("tokens") === "", lit(0L))
-          .otherwise(size(split(col("tokens"), " ")).cast("long")))
-  }
-
-  /** The declarative (interpreted-lambda) spelling of `encodeWith` —
-    * retained as the semantic reference the native expression is pinned
-    * against (OpsSpec compares both on adversarial inputs). */
-  private[graft] def encodeWithDeclarative(docs: DataFrame, textCol: String, idCol: String,
-                                           merges: Seq[(String, String)]): DataFrame = {
-    require(merges.size <= 64, s"merge table too large: ${merges.size} (model, not data)")
-    val words = filter(split(col(textCol), " "), w => length(w) > 0)
-    def enc(w: Column): Column = {
-      val seq0 = concat(lit(" "), regexp_replace(w, "(.)", "$1 "))
-      val merged = merges.foldLeft(seq0) { case (s, (a, b)) =>
-        // lit() arguments: merge symbols containing quotes/backslashes
-        // pass through unescaped, exactly as in train()
-        call_function("replace", s, lit(s" $a $b "), lit(s" $a$b "))
-      }
-      trim(merged)
-    }
-    docs.select(col(idCol).as("doc_id"),
-        array_join(transform(words, enc(_)), " ").as("tokens"))
       .withColumn("n_tokens",
         when(col("tokens") === "", lit(0L))
           .otherwise(size(split(col("tokens"), " ")).cast("long")))

@@ -19,15 +19,10 @@ object Embeddings {
 
   /** Quantize a float-array column to BIGINT micro-units — the native
     * QuantizeMicro expression (one compiled loop per row; the transform
-    * lambda spelling below, kept as the OpsSpec equality reference, pays
-    * an interpreted dispatch + a Round BigDecimal per ELEMENT). */
+    * lambda spelling, kept in test scope as OpsSpec's equality reference,
+    * pays an interpreted dispatch + a Round BigDecimal per ELEMENT). */
   def quantize(vec: Column): Column =
     graft.functions.VectorFunctions.quantize_micro(vec)
-
-  /** The declarative spelling of `quantize` — the semantic reference the
-    * native expression is pinned against (OpsSpec). */
-  private[graft] def quantizeDeclarative(vec: Column): Column =
-    transform(vec, x => round(x.cast(DoubleType) * 1000000.0).cast(LongType))
 
   /** Exact dot product of two quantized vectors (Int64, order-free) via
     * the codegen'd DotProductLong expression — identical semantics to

@@ -8,7 +8,7 @@ import java.security.MessageDigest
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.sql.GraftContext
+import graft.sql.{GraftContext, SqlText}
 import org.apache.spark.sql.DataFrame
 
 /** HTTP query frontend with CDN/browser cache semantics, mirroring the
@@ -152,7 +152,7 @@ class HttpFrontend(ctx: GraftContext, port: Int,
     // the query runs scoped to exactly those tables, read-only, lock-free
     extractInline(rawBody) match {
       case Some((sql, schemas, stores)) =>
-        val stmts = ctx.splitStatements(sql)
+        val stmts = SqlText.statements(sql)
         if (stmts.size != 1 || !ctx.isReadOnly(stmts.head))
           return respond(ex, 400, "inline-metastore queries must be a single read statement\n")
         val t0 = System.nanoTime()
@@ -166,7 +166,7 @@ class HttpFrontend(ctx: GraftContext, port: Int,
       case None => ()
     }
     val sql = extractQuery(rawBody)
-    val stmts = ctx.splitStatements(sql)
+    val stmts = SqlText.statements(sql)
     if (stmts.isEmpty) return respond(ex, 400, "empty statement\n")
     val reads = stmts.zipWithIndex.filter { case (s, _) => ctx.isReadOnly(s) }
     if (reads.size > 1 || reads.exists(_._2 != stmts.size - 1))
@@ -212,7 +212,7 @@ class HttpFrontend(ctx: GraftContext, port: Int,
       } else decoded
     // normalize through the splitter: strips comments so a leading
     // `-- note` can't misclassify the statement
-    val stmts = ctx.splitStatements(sqlRaw)
+    val stmts = SqlText.statements(sqlRaw)
     if (stmts.size != 1) return respond(ex, 400, "GET accepts exactly one statement\n")
     val sql = stmts.head
     if (!ctx.isReadOnly(sql)) return respond(ex, 405, "NOT_READ_ONLY_QUERY\n")

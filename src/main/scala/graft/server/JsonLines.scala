@@ -3,6 +3,7 @@ package graft.server
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 
+import graft.lake.Manifest.jstr
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -16,16 +17,6 @@ object JsonLines {
   private val ntzFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
   private val tsFmt = ntzFmt.withZone(ZoneOffset.UTC)
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   def value(v: Any, dt: DataType): String = (v, dt) match {
     case (null, _) => "null"
     case (x: java.sql.Timestamp, _) => "\"" + tsFmt.format(x.toInstant) + "\""
@@ -34,7 +25,7 @@ object JsonLines {
     case (x: java.time.LocalDateTime, _) => "\"" + ntzFmt.format(x) + "\""
     case (x: java.sql.Date, _) => "\"" + x.toString + "\""
     case (x: java.time.LocalDate, _) => "\"" + x.toString + "\""
-    case (x: String, _) => "\"" + esc(x) + "\""
+    case (x: String, _) => jstr(x)
     case (x: Array[Byte], _) => "\"" + java.util.Base64.getEncoder.encodeToString(x) + "\""
     case (x: java.math.BigDecimal, _) => x.toPlainString
     case (x: scala.math.BigDecimal, _) => x.bigDecimal.toPlainString
@@ -47,14 +38,14 @@ object JsonLines {
       x.map(value(_, et)).mkString("[", ",", "]")
     case (x: Row, st: StructType) => row(x, st)
     case (x: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-      x.map { case (k, mv) => "\"" + esc(String.valueOf(k)) + "\":" + value(mv, vt) }
+      x.map { case (k, mv) => jstr(String.valueOf(k)) + ":" + value(mv, vt) }
         .mkString("{", ",", "}")
     case (x, _) => String.valueOf(x) // numbers, booleans
   }
 
   def row(r: Row, schema: StructType): String =
     schema.fields.zipWithIndex.map { case (f, i) =>
-      "\"" + esc(f.name) + "\":" + value(if (r.isNullAt(i)) null else r.get(i), f.dataType)
+      jstr(f.name) + ":" + value(if (r.isNullAt(i)) null else r.get(i), f.dataType)
     }.mkString("{", ",", "}")
 
   /** Stream df as JSON-lines without materializing everything at once. */

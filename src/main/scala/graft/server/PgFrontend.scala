@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.control.NonFatal
 
-import graft.sql.GraftContext
+import graft.sql.{GraftContext, SqlText}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -165,14 +165,14 @@ class PgFrontend(ctx: GraftContext, port: Int,
             val sql = cstrIn()
             val nParamTypes = b.getShort
             val declaredOids = (0 until nParamTypes.toInt).map(_ => b.getInt)
-            val stmts = ctx.splitStatements(sql)
+            val stmts = SqlText.statements(sql)
             if (stmts.size > 1) {
               sendError(out, "42601", "cannot insert multiple commands into a prepared statement")
               failed = true
             } else {
               val one = stmts.headOption.getOrElse("")
               // undeclared trailing parameters get oid 0 (unknown → text)
-              val oids = declaredOids.padTo(maxParamIndex(one), 0)
+              val oids = declaredOids.padTo(SqlText.maxParam(one), 0)
               prepared(name) = Prepared(one, oids)
               msg(out, '1')(_ => ()) // ParseComplete
             }
@@ -423,50 +423,6 @@ class PgFrontend(ctx: GraftContext, port: Int,
   private class BinaryDecodeException(message: String)
     extends IllegalArgumentException(message)
 
-  /** Rewrite `$n` placeholders via `repl`, skipping string literals,
-    * quoted identifiers, and `$$`-style dollar signs without digits. */
-  private def rewriteParams(sql: String, repl: Int => String): String = {
-    val sb = new StringBuilder(sql.length + 16)
-    var i = 0
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' => // string literal: copy verbatim incl. \x and '' escapes
-          sb += '\''; i += 1
-          var done = false
-          while (i < sql.length && !done) {
-            val ch = sql.charAt(i)
-            sb += ch
-            if (ch == '\\' && i + 1 < sql.length) { sb += sql.charAt(i + 1); i += 1 }
-            else if (ch == '\'') {
-              if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { sb += '\''; i += 1 }
-              else done = true
-            }
-            i += 1
-          }
-        case '"' => // quoted identifier
-          sb += '"'; i += 1
-          while (i < sql.length && sql.charAt(i) != '"') { sb += sql.charAt(i); i += 1 }
-          if (i < sql.length) { sb += '"'; i += 1 }
-        case '$' if i + 1 < sql.length && sql.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j).isDigit) j += 1
-          sb ++= repl(sql.substring(i + 1, j).toInt)
-          i = j
-        case c => sb += c; i += 1
-      }
-    }
-    sb.result()
-  }
-
-  private def maxParamIndex(sql: String): Int = {
-    var max = 0
-    rewriteParams(sql, { n => if (n > max) max = n; "" })
-    max
-  }
-
-  private def sqlEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("'", "\\'")
-
   /** Binary-format wire value → its text representation (which then
     * flows through the shared `literalFor` path): network-order fixed
     * width for the int/float/bool OIDs, base-10000 digit groups for
@@ -548,25 +504,25 @@ class PgFrontend(ctx: GraftContext, port: Int,
       case 20 | 21 | 23 | 26 | 700 | 701 | 1700 =>
         require(s.nonEmpty && s.matches("[-+0-9.eE]+"), s"invalid numeric parameter: $s")
         s
-      case 1082 => s"DATE '${sqlEscape(s)}'"
-      case 1114 | 1184 => s"TIMESTAMP '${sqlEscape(s)}'"
-      case _ => s"'${sqlEscape(s)}'" // text/varchar/unknown: quoted string
+      case 1082 => "DATE " + SqlText.quote(s)
+      case 1114 | 1184 => "TIMESTAMP " + SqlText.quote(s)
+      case _ => SqlText.quote(s) // text/varchar/unknown: quoted string
     }
   }
 
   private def bindParams(p: Prepared, values: Seq[Option[String]]): String = {
-    require(values.size >= maxParamIndex(p.sql),
-      s"bind supplies ${values.size} parameters but statement uses ${maxParamIndex(p.sql)}")
-    rewriteParams(p.sql, { n =>
+    val used = SqlText.maxParam(p.sql)
+    require(values.size >= used, s"bind supplies ${values.size} parameters but statement uses $used")
+    SqlText.bindParams(p.sql) { n =>
       require(n >= 1 && n <= values.size, s"parameter $$$n out of range")
       literalFor(p.paramOids.lift(n - 1).getOrElse(0), values(n - 1))
-    })
+    }
   }
 
   /** For Describe on an unbound statement: typed NULLs stand in for the
     * parameters so analysis can produce the row shape. */
   private def describeSql(p: Prepared): String =
-    rewriteParams(p.sql, { n =>
+    SqlText.bindParams(p.sql) { n =>
       val t = p.paramOids.lift(n - 1).getOrElse(0) match {
         case 16 => "BOOLEAN"
         case 21 => "SMALLINT"
@@ -580,14 +536,14 @@ class PgFrontend(ctx: GraftContext, port: Int,
         case _ => "STRING"
       }
       s"CAST(NULL AS $t)"
-    })
+    }
 
   // --- query execution ------------------------------------------------------
 
   private def simpleQuery(sql: String, out: DataOutputStream,
                           prefix: String,
                           ref: java.util.concurrent.atomic.AtomicReference[String]): Unit = {
-    val stmts = try ctx.splitStatements(sql) catch {
+    val stmts = try SqlText.statements(sql) catch {
       case e: Throwable => sendError(out, "42601", String.valueOf(e.getMessage)); return
     }
     if (stmts.isEmpty) { msg(out, 'I')(_ => ()); return } // EmptyQueryResponse

@@ -178,43 +178,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     spark.createDataFrame(java.util.List.of[Row](),
       StructType(Seq(StructField("ok", BooleanType))))
 
-  // --- statement splitting (quote- and comment-aware) ---------------------
-
-  /** Split on top-level semicolons. `--` line comments and (nested)
-    * `/* */` block comments are stripped — a semicolon inside a comment
-    * is not a statement boundary, and a leading comment must not defeat
-    * the dispatch regexes, which anchor at the statement start. Comment
-    * markers inside string literals are content, not comments. */
-  def splitStatements(sql: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0; var inS = false; var inD = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inS && !inD && c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        cur += ' '
-      } else if (!inS && !inD && c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        var depth = 1
-        i += 2
-        while (i < sql.length && depth > 0) {
-          if (sql.startsWith("/*", i)) { depth += 1; i += 2 }
-          else if (sql.startsWith("*/", i)) { depth -= 1; i += 2 }
-          else i += 1
-        }
-        cur += ' '
-      } else {
-        if (c == '\'' && !inD) inS = !inS
-        else if (c == '"' && !inS) inD = !inD
-        if (c == ';' && !inS && !inD) { out += cur.result(); cur.clear() }
-        else cur += c
-        i += 1
-      }
-    }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   // --- DDL type mapping (reference src/datafusion/utils.rs:47-178) --------
 
   private[sql] def sqlType(t: String): DataType = {
@@ -243,17 +206,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   }
 
   private def parseColumns(colDefs: String): StructType = {
-    // split on top-level commas (decimal(10,2) has nested ones)
-    val parts = Seq.newBuilder[String]
-    var depth = 0; val cur = new StringBuilder
-    colDefs.foreach {
-      case '(' => depth += 1; cur += '('
-      case ')' => depth -= 1; cur += ')'
-      case ',' if depth == 0 => parts += cur.result(); cur.clear()
-      case c => cur += c
-    }
-    parts += cur.result()
-    StructType(parts.result().map(_.trim).filter(_.nonEmpty).map { cd =>
+    // top-level commas only: decimal(10,2) has nested ones
+    StructType(SqlText.splitTop(colDefs, ",").map { cd =>
       val m = """^"?([\w ]+?)"?\s+(.+?)(\s+NOT\s+NULL)?$""".r
       cd match {
         case m(name, tpe, notNull) =>
@@ -497,7 +451,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         (sch.name, t.name)
       }
     }
-    val rewritten = mapOutsideLiterals(sql) { seg0 =>
+    val rewritten = SqlText.mapCode(sql) { seg0 =>
       var seg = seg0
       registered.foreach { case (sch, t) =>
         seg = seg.replaceAll(s"(?i)(?<![`\\w])$sch\\.$t(?![`\\w])", s"${sch}__$t")
@@ -508,52 +462,55 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   }
 
   /** Backtick-quote qualified names of known non-public tables + rewrite
-    * time travel `t('<ts>')` to a version-pinned view registered on
-    * `session`, against the snapshot's catalog `state`. */
+    * time travel `t('<ts>')` and the change feed `table_changes('t', n)`
+    * to version-pinned views registered on `session`, against the
+    * snapshot's catalog `state`. Both are matched as calls (a name, `(`,
+    * literals, `)`), so their spelling inside a string literal or a
+    * comment stays text. */
   private[sql] def rewriteQuery(sql0: String, session: SparkSession, db: String,
                                 state: Catalog.State): String = {
-    var sql = sql0
-    // change data feed: table_changes('<table>', <from>[, <to>]) — the
-    // version-diff table function (GraftTable.changes). Rewritten to a
-    // version-pinned view like time travel; registration is idempotent.
-    val tc = """(?i)\btable_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
-    sql = tc.replaceAllIn(sql, m => {
-      val (sch, name) = splitName(m.group(1))
-      val uuid = state.table(db, sch, name).getOrElse(
-        throw new IllegalArgumentException(s"table_changes: unknown table ${m.group(1)}"))
-      val root = catalog.tableRoot(uuid)
-      val from = m.group(2).toLong
-      val to = Option(m.group(3)).map(_.toLong)
-        .orElse(Manifest.latestVersion(root))
-        .getOrElse(throw new IllegalArgumentException(s"table_changes: $name has no versions"))
-      val viewName = s"__changes__${sch}__${name}__${from}_$to"
-      new GraftTable(session, root).changes(from, to).createOrReplaceTempView(viewName)
-      java.util.regex.Matcher.quoteReplacement(viewName)
-    })
-    // time travel: <table>('<ISO timestamp>')
-    val tt = """(\b[\w."]+)\s*\(\s*'([^']+)'\s*\)""".r
-    sql = tt.replaceAllIn(sql, m => {
-      val (sch, name) = splitName(m.group(1))
-      // only rewrite when the argument actually parses as an ISO instant —
-      // otherwise a builtin call like date('2020-01-01') whose name
-      // collides with a table would be hijacked and fail
-      val instant = scala.util.Try(Instant.parse(m.group(2))).toOption
-      (state.table(db, sch, name), instant) match {
-        case (Some(uuid), Some(ts)) =>
-          val tsMs = ts.toEpochMilli
+    val sql = SqlText.mapCalls(sql0) { (name, args) =>
+      (name.map(_.toLowerCase), args) match {
+        // change data feed: table_changes('<table>', <from>[, <to>]) — the
+        // version-diff table function (GraftTable.changes). Registration
+        // is idempotent.
+        case (Seq("table_changes"), t +: bounds)
+            if t.quoted && (bounds.size == 1 || bounds.size == 2) && bounds.forall(!_.quoted) =>
+          val (sch, tbl) = splitName(t.value)
+          val uuid = state.table(db, sch, tbl).getOrElse(
+            throw new IllegalArgumentException(s"table_changes: unknown table ${t.value}"))
           val root = catalog.tableRoot(uuid)
-          val v = Manifest.versionAsOf(root, tsMs).getOrElse(
-            throw new IllegalArgumentException(s"no version of $sch.$name at or before ${m.group(2)}"))
-          val viewName = if (sch == "public") s"${name}__v$v" else s"${sch}__${name}__v$v"
-          // version-pinned by name, so concurrent registration is idempotent
-          new GraftTable(session, root).read(Some(v)).createOrReplaceTempView(viewName)
-          java.util.regex.Matcher.quoteReplacement(viewName)
-        case _ => java.util.regex.Matcher.quoteReplacement(m.group(0))
+          val from = bounds.head.value.toLong
+          val to = bounds.lift(1).map(_.value.toLong)
+            .orElse(Manifest.latestVersion(root))
+            .getOrElse(throw new IllegalArgumentException(s"table_changes: $tbl has no versions"))
+          val viewName = s"__changes__${sch}__${tbl}__${from}_$to"
+          new GraftTable(session, root).changes(from, to).createOrReplaceTempView(viewName)
+          Some(viewName)
+        // time travel: <table>('<ISO timestamp>'). Only a cataloged table
+        // called with an ISO instant is rewritten, so a builtin like
+        // date('2020-01-01') whose name collides with a table keeps its
+        // meaning.
+        case (_, Seq(ts)) if ts.quoted =>
+          val (sch, tbl) = splitName(name.mkString("."))
+          for {
+            uuid <- state.table(db, sch, tbl)
+            instant <- scala.util.Try(Instant.parse(ts.value)).toOption
+          } yield {
+            val root = catalog.tableRoot(uuid)
+            val v = Manifest.versionAsOf(root, instant.toEpochMilli).getOrElse(
+              throw new IllegalArgumentException(s"no version of $sch.$tbl at or before ${ts.value}"))
+            val viewName = if (sch == "public") s"${tbl}__v$v" else s"${sch}__${tbl}__v$v"
+            // version-pinned by name, so concurrent registration is idempotent
+            new GraftTable(session, root).read(Some(v)).createOrReplaceTempView(viewName)
+            viewName
+          }
+        case _ => None
       }
-    })
+    }
     // qualified non-public names -> backticked flat view names. Applied
-    // OUTSIDE string literals only: a literal mentioning
-    // 'system.table_versions' is content, not a table reference.
+    // to code only: a literal mentioning 'system.table_versions' is
+    // content, not a table reference.
     val nonPublic = state.tables(db).filter(_._1 != "public") ++
       Seq(("system", "table_versions", ""), ("system", "dropped_tables", ""),
         ("information_schema", "tables", ""), ("information_schema", "columns", ""),
@@ -563,7 +520,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         ("information_schema", "table_constraints", ""),
         ("information_schema", "check_constraints", ""),
         ("staging", "", ""))
-    mapOutsideLiterals(sql) { seg0 =>
+    SqlText.mapCode(sql) { seg0 =>
       var seg = seg0
       nonPublic.foreach { case (sch, name, _) =>
         if (name.nonEmpty)
@@ -572,22 +529,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // staging external tables are registered on creation with flat names
       seg.replaceAll("(?i)(?<![`\\w])staging\\.(\\w+)(?![`\\w])", "staging__$1")
     }
-  }
-
-  /** Apply `f` to the spans of `sql` OUTSIDE single-quoted string
-    * literals, preserving the literals verbatim. Doubled quotes ('') form
-    * adjacent literals, so escaped content never leaks into `f`. */
-  private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var inS = false
-    sql.foreach { c =>
-      if (!inS && c == '\'') { out.append(f(seg.result())); seg.clear(); inS = true; out.append(c) }
-      else if (inS) { if (c == '\'') inS = false; out.append(c) }
-      else seg.append(c)
-    }
-    out.append(f(seg.result()))
-    out.result()
   }
 
   // --- dispatcher ---------------------------------------------------------
@@ -812,8 +753,12 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // split SET assignments from WHERE at the first TOP-LEVEL keyword —
       // a regex split would bite on WHERE inside a string literal or a
       // subquery in an assignment expression
-      val (setClause, where) = splitAtTopLevelWhere(setAndWhere)
-      val assigns = splitTop(setClause).map { a =>
+      val (setClause, where) = SqlText.topLevel(setAndWhere, "WHERE").headOption match {
+        case Some(i) =>
+          (setAndWhere.substring(0, i), Some(setAndWhere.substring(i + "WHERE".length).trim))
+        case None => (setAndWhere, None)
+      }
+      val assigns = SqlText.splitTop(setClause, ",").map { a =>
         val i = a.indexOf('=')
         require(i > 0, s"bad assignment: $a")
         (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
@@ -997,7 +942,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   /** Multi-statement execution (all run sequentially; results of the last
     * statement are returned — reference `src/frontend/http.rs:174-218`). */
   def executeAll(sql: String): DataFrame = {
-    val stmts = splitStatements(sql)
+    val stmts = SqlText.statements(sql)
     require(stmts.nonEmpty, "empty statement")
     stmts.map(execute).last
   }
@@ -1079,41 +1024,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   private def requireNotStaging(sch: String): Unit =
     require(sch != "staging",
       "The staging schema can only be referenced via CREATE EXTERNAL TABLE")
-
-  /** Split "assignments [WHERE pred]" at the first top-level (outside
-    * quotes/parens) WHERE keyword. */
-  private def splitAtTopLevelWhere(s: String): (String, Option[String]) = {
-    var depth = 0; var inS = false; var i = 0
-    val up = s.toUpperCase
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inS = !inS
-        case '(' if !inS => depth += 1
-        case ')' if !inS => depth -= 1
-        case _ =>
-      }
-      if (!inS && depth == 0 && up.startsWith("WHERE", i) &&
-        (i == 0 || s.charAt(i - 1).isWhitespace) &&
-        (i + 5 >= s.length || s.charAt(i + 5).isWhitespace))
-        return (s.substring(0, i).trim, Some(s.substring(i + 5).trim))
-      i += 1
-    }
-    (s.trim, None)
-  }
-
-  private def splitTop(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0; var inS = false; val cur = new StringBuilder
-    s.foreach {
-      case '\'' => inS = !inS; cur += '\''
-      case '(' if !inS => depth += 1; cur += '('
-      case ')' if !inS => depth -= 1; cur += ')'
-      case ',' if depth == 0 && !inS => parts += cur.result(); cur.clear()
-      case c => cur += c
-    }
-    parts += cur.result()
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
 }
 
 /** Inline-metastore request model (reference `clade/proto/schema.proto`:

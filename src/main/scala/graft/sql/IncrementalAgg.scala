@@ -100,7 +100,7 @@ object IncrementalAgg {
     ctx.execute(
       s"""MERGE INTO ${qname(tSch, tName)} AS t USING (
          |  SELECT ${ks.mkString(", ")}, ${(dSums :+ dN).mkString(", ")}
-         |  FROM table_changes('${qname(st.sourceSchema, st.sourceName)}', ${st.lastVersion}, $now)
+         |  FROM table_changes(${SqlText.quote(qname(st.sourceSchema, st.sourceName))}, ${st.lastVersion}, $now)
          |  GROUP BY ${ks.mkString(", ")}
          |) AS s ON ${ks.map(k => s"t.$k <=> s.$k").mkString(" AND ")}
          |WHEN MATCHED AND t._n + s.d_n = 0 THEN DELETE

@@ -48,74 +48,6 @@ object MergeInto {
 
   // ---------------------------------------------------------------- parse
 
-  /** Index of the first top-level (outside parens/quotes, and outside any
-    * CASE…END expression — a CASE's WHEN must not read as a MERGE clause
-    * boundary) occurrence of word `kw` at or after `from`, or -1. */
-  private def topIndex(s: String, kw: String, from: Int = 0): Int = {
-    val u = s.toUpperCase; val k = kw.toUpperCase
-    var i = from; var depth = 0; var caseDepth = 0; var inS = false; var inD = false
-    def wordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    def wordAt(w: String): Boolean =
-      u.startsWith(w, i) &&
-        (i == 0 || !wordChar(s.charAt(i - 1))) &&
-        (i + w.length >= s.length || !wordChar(s.charAt(i + w.length)))
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inD) { if (c == '"') inD = false }
-      else c match {
-        case '\'' => inS = true
-        case '"' => inD = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0) {
-            if (wordAt("CASE")) caseDepth += 1
-            else if (caseDepth > 0 && wordAt("END")) caseDepth -= 1
-            else if (caseDepth == 0 && wordAt(k)) return i
-          }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split on top-level occurrences of word `kw`; returns segments
-    * WITHOUT the keyword. */
-  private def topSplit(s: String, kw: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = topIndex(s, kw)
-    while (i >= 0) {
-      out += s.substring(start, i)
-      start = i + kw.length
-      i = topIndex(s, kw, start)
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
-  /** Split a comma-separated list at top level. */
-  private def splitTopCommas(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0; var inS = false; var inD = false
-    s.foreach { c =>
-      if (inS) { if (c == '\'') inS = false; cur += c }
-      else if (inD) { if (c == '"') inD = false; cur += c }
-      else c match {
-        case '\'' => inS = true; cur += c
-        case '"' => inD = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.result(); cur.clear()
-        case _ => cur += c
-      }
-    }
-    out += cur.result()
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   private val reUpd =
     """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+)$""".r
   private val reDel =
@@ -130,9 +62,13 @@ object MergeInto {
   def parse(sql: String): Parsed = {
     val s = sql.trim.stripSuffix(";")
     require(s.toUpperCase.startsWith("MERGE"), "not a MERGE statement")
-    val iUsing = topIndex(s, "USING")
-    val iOn = topIndex(s, "ON", math.max(iUsing, 0))
-    val iWhen = topIndex(s, "WHEN", math.max(iOn, 0))
+    // clause keywords count at the top level only: not inside parentheses,
+    // literals or a CASE … END, whose WHEN is not a MERGE clause
+    def topIndex(kw: String, from: Int): Int =
+      SqlText.topLevel(s, kw).find(_ >= from).getOrElse(-1)
+    val iUsing = topIndex("USING", 0)
+    val iOn = topIndex("ON", math.max(iUsing, 0))
+    val iWhen = topIndex("WHEN", math.max(iOn, 0))
     require(iUsing > 0 && iOn > iUsing && iWhen > iOn,
       "expected MERGE INTO <table> [AS a] USING <source> [AS b] ON <cond> WHEN ...")
 
@@ -153,18 +89,9 @@ object MergeInto {
     val srcSeg = s.substring(iUsing + "USING".length, iOn).trim
     val (source, sAlias) =
       if (srcSeg.startsWith("(")) {
-        // balanced subquery then optional alias
-        var depth = 0; var end = -1; var i = 0
-        var inS = false
-        while (i < srcSeg.length && end < 0) {
-          srcSeg.charAt(i) match {
-            case '\'' => inS = !inS
-            case '(' if !inS => depth += 1
-            case ')' if !inS => depth -= 1; if (depth == 0) end = i
-            case _ =>
-          }
-          i += 1
-        }
+        // balanced subquery then optional alias: the subquery ends at the
+        // first `)` at the top level of the text after its `(`
+        val end = SqlText.topLevel(srcSeg.substring(1), ")").headOption.fold(-1)(_ + 1)
         require(end > 0, "unbalanced parens in USING subquery")
         val rest = srcSeg.substring(end + 1).trim
         val alias = rest.replaceFirst("(?is)^AS\\s+", "").replace("\"", "").trim
@@ -175,26 +102,24 @@ object MergeInto {
     val onCond = s.substring(iOn + "ON".length, iWhen).trim
     require(onCond.nonEmpty, "empty ON condition")
 
-    val clauses = topSplit(s.substring(iWhen), "WHEN").filter(_.trim.nonEmpty).map { c =>
-      c.trim match {
-        case reUpd(cond, sets) =>
-          val assigns =
-            if (sets.trim == "*") None
-            else Some(splitTopCommas(sets).map { a =>
-              val i = a.indexOf('=')
-              require(i > 0, s"bad SET assignment: $a")
-              (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
-            })
-          UpdateClause(Option(cond).map(_.trim), assigns)
-        case reDel(cond) => DeleteClause(Option(cond).map(_.trim))
-        case reInsVals(cond, cols, vals) =>
-          InsertClause(Option(cond).map(_.trim),
-            Some(cols.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty).toSeq),
-            Some(splitTopCommas(vals)))
-        case reInsStar(cond) => InsertClause(Option(cond).map(_.trim), None, None)
-        case other => throw new IllegalArgumentException(
-          s"unsupported MERGE clause: WHEN $other")
-      }
+    val clauses = SqlText.splitTop(s.substring(iWhen), "WHEN").map {
+      case reUpd(cond, sets) =>
+        val assigns =
+          if (sets.trim == "*") None
+          else Some(SqlText.splitTop(sets, ",").map { a =>
+            val i = a.indexOf('=')
+            require(i > 0, s"bad SET assignment: $a")
+            (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
+          })
+        UpdateClause(Option(cond).map(_.trim), assigns)
+      case reDel(cond) => DeleteClause(Option(cond).map(_.trim))
+      case reInsVals(cond, cols, vals) =>
+        InsertClause(Option(cond).map(_.trim),
+          Some(cols.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty).toSeq),
+          Some(SqlText.splitTop(vals, ",")))
+      case reInsStar(cond) => InsertClause(Option(cond).map(_.trim), None, None)
+      case other => throw new IllegalArgumentException(
+        s"unsupported MERGE clause: WHEN $other")
     }
     require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
     require(clauses.count(_.isInstanceOf[UpdateClause]) <= 1 &&
@@ -206,13 +131,6 @@ object MergeInto {
 
   // -------------------------------------------------------------- execute
 
-  private def sqlLit(v: Any): String = v match {
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case ts: java.sql.Timestamp => s"TIMESTAMP '$ts'"
-    case d: java.sql.Date => s"DATE '$d'"
-    case other => String.valueOf(other)
-  }
-
   /** Equi-conjunct extraction for stats pruning: top-level AND conjuncts
     * of the form `<tAlias>.<col> = <expr>` (either side) where the other
     * side never references the target alias. */
@@ -223,14 +141,12 @@ object MergeInto {
     val eq = s"""(?is)^\\s*$tAlias\\.([\\w"]+)\\s*(?<![<>!=])=(?!=)\\s*(.+)$$""".r
     val eqR = s"""(?is)^(.+?)\\s*(?<![<>!=])=(?!=)\\s*$tAlias\\.([\\w"]+)\\s*$$""".r
     val tRef = s"""(?i)(?<![\\w"])$tAlias\\.""".r
-    topSplit(onCond, "AND").flatMap { c =>
-      c.trim match {
-        case eq(col0, rhs) if tRef.findFirstIn(rhs).isEmpty =>
-          Some((col0.replace("\"", ""), rhs.trim))
-        case eqR(lhs, col0) if tRef.findFirstIn(lhs).isEmpty =>
-          Some((col0.replace("\"", ""), lhs.trim))
-        case _ => None
-      }
+    SqlText.splitTop(onCond, "AND").flatMap {
+      case eq(col0, rhs) if tRef.findFirstIn(rhs).isEmpty =>
+        Some((col0.replace("\"", ""), rhs.trim))
+      case eqR(lhs, col0) if tRef.findFirstIn(lhs).isEmpty =>
+        Some((col0.replace("\"", ""), lhs.trim))
+      case _ => None
     }
   }
 
@@ -278,7 +194,7 @@ object MergeInto {
           sourceHasNoKeys = keys.indices.exists(i => r.isNullAt(2 * i))
           keys.zipWithIndex.filterNot { case (_, i) => r.isNullAt(2 * i) }
             .map { case ((c, _), i) =>
-              s"$c >= ${sqlLit(r.get(2 * i))} AND $c <= ${sqlLit(r.get(2 * i + 1))}"
+              s"$c >= ${SqlText.literal(r.get(2 * i))} AND $c <= ${SqlText.literal(r.get(2 * i + 1))}"
             }
         }
       val (affected0, untouched) =

@@ -1,6 +1,7 @@
 package graft.sync
 
 import graft.lake.{GraftTable, Manifest, Pruning}
+import graft.sql.SqlText
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,7 +137,7 @@ object SyncMerge {
     val rangePred = pkCols.zipWithIndex
       .filterNot { case (_, i) => range.isNullAt(2 * i) }
       .map { case (c, i) =>
-        s"$c >= ${sqlLit(range.get(2 * i))} AND $c <= ${sqlLit(range.get(2 * i + 1))}"
+        s"$c >= ${SqlText.literal(range.get(2 * i))} AND $c <= ${SqlText.literal(range.get(2 * i + 1))}"
       }
     val (affected, untouched) =
       if (rangePred.isEmpty) (m.files, Seq.empty[Manifest.FileEntry])
@@ -173,11 +174,5 @@ object SyncMerge {
     val result = keptBase.unionByName(resolved, allowMissingColumns = false)
     squashed.unpersist()
     table.replaceFiles(m, affected, untouched, result, syncSeqUpdate = seqUpdate)
-  }
-
-  private def sqlLit(v: Any): String = v match {
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case ts: java.sql.Timestamp => s"TIMESTAMP '$ts'"
-    case other => String.valueOf(other)
   }
 }

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.lake.Manifest.jstr
+
 /** One writer of the cross-process CATALOG concurrency differential
   * (scripts/catalog_fuzz.py): two instances — separate JVMs, roles a/b —
   * race seeded CATALOG DDL (CREATE/DROP/RENAME TABLE, CREATE SCHEMA)
@@ -50,7 +52,6 @@ object CatalogRaceRun {
     def mark(name: String) = barrier.resolve(name)
 
     val log = new java.io.PrintWriter(new java.io.FileWriter(s"$shared/log_$role.jsonl"), true)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
 
     import graft.lake.Manifest.Json
     var harnessFailures = 0
@@ -67,20 +68,20 @@ object CatalogRaceRun {
           val ctx = new graft.sql.GraftContext(spark, dataDir)
           stmts("setup").foreach(ctx.execute)
           touch(mark(s"A_ready_$seq")); await(mark(s"B_ready_$seq"))
-          runOps(ctx, stmts("a"), seq, role, log, esc)
+          runOps(ctx, stmts("a"), seq, role, log)
           touch(mark(s"A_done_$seq")); await(mark(s"B_done_$seq"))
           touch(mark(s"complete_$seq"))
         } else {
           await(mark(s"A_ready_$seq"))
           val ctx = new graft.sql.GraftContext(spark, dataDir)
           touch(mark(s"B_ready_$seq"))
-          runOps(ctx, stmts("b"), seq, role, log, esc)
+          runOps(ctx, stmts("b"), seq, role, log)
           touch(mark(s"B_done_$seq")); await(mark(s"complete_$seq"))
         }
       } catch {
         case e: Throwable =>
           harnessFailures += 1
-          log.println(s"""{"seq":$seq,"error":"${esc(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(800)}")}"}""")
+          log.println(s"""{"seq":$seq,"error":${jstr(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(800)}")}}""")
           if (role == "a") { touch(mark(s"A_ready_$seq")); touch(mark(s"A_done_$seq")); touch(mark(s"complete_$seq")) }
           else { touch(mark(s"B_ready_$seq")); touch(mark(s"B_done_$seq")) }
       }
@@ -94,14 +95,13 @@ object CatalogRaceRun {
   /** Execute ops free-running; an op failing is an OUTCOME (the checker
     * decides if it was legitimate), never aborts the sequence. */
   private def runOps(ctx: graft.sql.GraftContext, ops: Seq[String], seq: Int,
-                     role: String, log: java.io.PrintWriter,
-                     esc: String => String): Unit =
+                     role: String, log: java.io.PrintWriter): Unit =
     ops.zipWithIndex.foreach { case (s, i) =>
       val outcome =
         try { ctx.execute(s); """"ok":true""" }
         catch { case e: Throwable =>
-          s""""ok":false,"err":"${esc(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")}""""
+          s""""ok":false,"err":${jstr(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")}"""
         }
-      log.println(s"""{"seq":$seq,"role":"$role","i":$i,"sql":"${esc(s)}",$outcome}""")
+      log.println(s"""{"seq":$seq,"role":"$role","i":$i,"sql":${jstr(s)},$outcome}""")
     }
 }

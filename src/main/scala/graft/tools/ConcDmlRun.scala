@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.lake.Manifest.jstr
+
 /** One writer of the CONCURRENT DML-sequence differential test
   * (scripts/conc_dml_fuzz.py): two instances of this main — separate
   * JVMs, role "a" and role "b" — interleave seeded statement sequences
@@ -65,11 +67,10 @@ object ConcDmlRun {
     }
 
     val log = new java.io.PrintWriter(new java.io.FileWriter(s"$shared/log_$role.jsonl"), true)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     def record(seq: Int, kind: String, idx: Int, sql: String): Unit = {
       val vs = captured.synchronized { val r = captured.toList; captured.clear(); r }
-      log.println(s"""{"seq":$seq,"kind":"$kind","i":$idx,"sql":"${esc(sql)}","commits":[""" +
-        vs.map { case (r, v) => s"""{"root":"${esc(r)}","v":$v}""" }.mkString(",") + "]}")
+      log.println(s"""{"seq":$seq,"kind":"$kind","i":$idx,"sql":${jstr(sql)},"commits":[""" +
+        vs.map { case (r, v) => s"""{"root":${jstr(r)},"v":$v}""" }.mkString(",") + "]}")
     }
 
     import graft.lake.Manifest.Json
@@ -110,7 +111,7 @@ object ConcDmlRun {
       } catch {
         case e: Throwable =>
           failures += 1
-          log.println(s"""{"seq":$seq,"error":"${esc(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(800)}")}"}""")
+          log.println(s"""{"seq":$seq,"error":${jstr(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(800)}")}}""")
           // release the other side rather than deadlocking the run
           if (role == "a") { touch(mark(s"A_ready_$seq")); touch(mark(s"A_done_$seq")); touch(mark(s"complete_$seq")) }
           else { touch(mark(s"B_ready_$seq")); touch(mark(s"B_done_$seq")) }

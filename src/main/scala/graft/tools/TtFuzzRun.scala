@@ -5,6 +5,8 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import graft.sql.SqlText
+
 /** Graft half of the time-travel / RESTORE / VACUUM differential fuzz
   * (scripts/gen_tt_fuzz.py → scripts/tt_fuzz_compare.py): drives each
   * program through GraftContext, and
@@ -61,7 +63,7 @@ object TtFuzzRun {
               recordTs(str(e, "t"))
             case "tt" =>
               val t = str(e, "t")
-              ctx.executeRead(s"SELECT * FROM $t('${iso(t, num(e, "v"))}')")
+              ctx.executeRead(s"SELECT * FROM $t(${SqlText.quote(iso(t, num(e, "v")))})")
                 .coalesce(1).write.mode("overwrite")
                 .parquet(s"$outDir/${name}_c$idx")
             case "vacuum" =>
@@ -71,13 +73,13 @@ object TtFuzzRun {
                 case Some(n: Json.N) =>
                   // reading a vacuumed version must FAIL loudly
                   try { ctx.executeRead(
-                    s"SELECT * FROM $t('${iso(t, n.n.toLong)}')").count(); false }
+                    s"SELECT * FROM $t(${SqlText.quote(iso(t, n.n.toLong))})").count(); false }
                   catch { case scala.util.control.NonFatal(_) => true }
                 case _ => true // nothing fell out of the window
               }
               val liveOk =
                 try { ctx.executeRead(
-                  s"SELECT * FROM $t('${iso(t, num(e, "probe_live"))}')").count(); true }
+                  s"SELECT * FROM $t(${SqlText.quote(iso(t, num(e, "probe_live")))})").count(); true }
                 catch { case scala.util.control.NonFatal(_) => false }
               checks.println(s"""{"seq":$seq,"idx":$idx,"dead_ok":$deadOk,"live_ok":$liveOk}""")
               if (!deadOk || !liveOk) failed += 1

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sql.GraftContext
+import graft.sql.{GraftContext, SqlText}
 
 /** Statement-layer semantics, mirroring the reference's statements suite
   * (`tests/statements/{ddl,dml,query,time_travel}.rs`): the canonical
@@ -591,6 +591,31 @@ class ContextSpec extends SparkSpec {
     assert(r2.getString(0) === "system.table_versions" && r2.getLong(1) === 2L)
   }
 
+  test("a backslash-escaped quote keeps qualified names inside the literal") {
+    val c = ctx()
+    def one(sql: String) = c.execute(sql).collect().head.getString(0)
+    assert(one("SELECT 'it\\'s in system.table_versions' AS note") === "it's in system.table_versions")
+    assert(one("SELECT 'it\\'s staging.x' AS note") === "it's staging.x")
+  }
+
+  test("time travel and table_changes spelled inside a string literal stay text") {
+    val c = ctx()
+    c.execute("CREATE TABLE orders (id BIGINT)")
+    c.execute("INSERT INTO orders VALUES (1)")
+    val ts = java.time.Instant.now.toString
+    def one(sql: String) = c.execute(sql).collect().head.getString(0)
+    assert(one(s"SELECT \"orders('$ts')\" AS s") === s"orders('$ts')")
+    assert(one("SELECT \"table_changes('orders', 0)\" AS s") === "table_changes('orders', 0)")
+    // and neither registered a version-pinned view on the snapshot
+    val views = c.execute("SHOW VIEWS").collect().map(_.getString(1)).toSeq
+    assert(!views.exists(v => v.startsWith("orders__v") || v.startsWith("__changes__")), views)
+  }
+
+  test("a semicolon after a backslash-escaped quote does not split the statement") {
+    val c = ctx()
+    assert(c.executeAll("SELECT 'a\\'b; c' AS x").collect().head.getString(0) === "a'b; c")
+  }
+
   test("comments: semicolons inside comments don't split; leading comments dispatch") {
     val c = ctx()
     // leading block comment before CREATE, line comment with a semicolon,
@@ -603,7 +628,7 @@ class ContextSpec extends SparkSpec {
     val rows = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(rows === Seq((1L, "semi; -- not a comment"), (2L, "/* literal */")))
     // a commented statement splits to nothing
-    assert(c.splitStatements("-- just a note; nothing to run").isEmpty)
+    assert(SqlText.statements("-- just a note; nothing to run").isEmpty)
     // dispatch: leading comment on a graft-owned statement still matches
     c.executeAll("/* cleanup */ DROP TABLE cmt")
     assert(c.catalog.getTable("default", "public", "cmt").isEmpty)
@@ -900,26 +925,26 @@ class ContextSpec extends SparkSpec {
   }
 
   test("shell terminator tracks quote and comment state (psql rule)") {
-    import graft.Shell.terminated
-    assert(terminated("SELECT 1;"))
-    assert(terminated("SELECT 1 ; -- trailing comment"))
-    assert(terminated("SELECT 'a;b';"))
-    assert(!terminated("SELECT 'a;"))            // ; inside an open literal
-    assert(!terminated("SELECT 1 -- comment;"))  // ; inside a comment
-    assert(!terminated("SELECT 'it''s;"))        // '' escape keeps quote open
-    assert(terminated("SELECT 'it''s';"))
-    assert(!terminated("SELECT 1"))
+    import graft.sql.SqlText.complete
+    assert(complete("SELECT 1;"))
+    assert(complete("SELECT 1 ; -- trailing comment"))
+    assert(complete("SELECT 'a;b';"))
+    assert(!complete("SELECT 'a;"))            // ; inside an open literal
+    assert(!complete("SELECT 1 -- comment;"))  // ; inside a comment
+    assert(!complete("SELECT 'it''s;"))        // '' escape keeps quote open
+    assert(complete("SELECT 'it''s';"))
+    assert(!complete("SELECT 1"))
     // block comments and double-quoted identifiers — the states
-    // splitStatements tracks must not desync from the REPL terminator
-    assert(!terminated("SELECT 1 /* block; comment */"))  // ; inside block comment
-    assert(terminated("SELECT 1; /* trailing block */"))  // trailing comment after ;
-    assert(!terminated("SELECT 1; /* unterminated"))      // open block comment
-    assert(!terminated("SELECT /* a /* nested */ ;"))     // nested stays open
-    assert(terminated("SELECT /* a /* nested */ */ 1;"))
-    assert(!terminated("SELECT \"quoted;name\""))         // ; inside quoted ident
-    assert(terminated("SELECT \"quoted;name\";"))
-    assert(!terminated("SELECT \"open;"))                 // unterminated ident
-    assert(terminated("SELECT '/*' ;"))                   // markers inside literal are content
+    // SqlText.statements tracks must not desync from the REPL terminator
+    assert(!complete("SELECT 1 /* block; comment */"))  // ; inside block comment
+    assert(complete("SELECT 1; /* trailing block */"))  // trailing comment after ;
+    assert(!complete("SELECT 1; /* unterminated"))      // open block comment
+    assert(!complete("SELECT /* a /* nested */ ;"))     // nested stays open
+    assert(complete("SELECT /* a /* nested */ */ 1;"))
+    assert(!complete("SELECT \"quoted;name\""))         // ; inside quoted ident
+    assert(complete("SELECT \"quoted;name\";"))
+    assert(!complete("SELECT \"open;"))                 // unterminated ident
+    assert(complete("SELECT '/*' ;"))                   // markers inside literal are content
   }
 
   test("q01 oracle cast pin: VARCHAR-hop DECIMAL(,6)->DOUBLE is correctly rounded past 2^53") {

@@ -195,6 +195,18 @@ class HttpSpec extends SparkSpec {
     assert(q.body() === "{\"id\":2,\"bal\":20.0,\"tag\":\"b\"}\n")
   }
 
+  test("CDC sync: an update of a backslash key replaces its row") {
+    post("/q", "CREATE TABLE bsk (k VARCHAR, v BIGINT)", auth)
+    // JSON "a\\z" is the key a\z
+    val ins = """{"old_k":null,"new_k":"a\\z","v":1,"_seq":1}"""
+    assert(post("/sync/public/bsk?pk=k&values=v", ins, auth).statusCode() === 200)
+    val upd = """{"old_k":"a\\z","new_k":"a\\z","v":2,"_seq":2}"""
+    val r = post("/sync/public/bsk?pk=k&values=v", upd, auth)
+    assert(r.statusCode() === 200, r.body())
+    val q = get("/q/" + java.net.URLEncoder.encode("SELECT k, v FROM bsk ORDER BY v", UTF_8))
+    assert(q.body() === "{\"k\":\"a\\\\z\",\"v\":2}\n")
+  }
+
   test("oversized uploads are rejected with 413") {
     val tiny = new HttpFrontend(ctx, 0, writeToken = Some("w0bble"), maxUploadBytes = 16)
     tiny.start()

@@ -298,6 +298,18 @@ class LakeSpec extends SparkSpec {
       Pruning.parsePredicate("v >= 100"), f, t.schema)))
   }
 
+  test("string stats prune in UTF-8 byte order: a read and a DELETE keep U+FF5E <= U+1F600") {
+    // Spark orders strings by UTF-8 bytes: U+FF5E is EF BD 9E, U+1F600 is
+    // F0 9F 98 80. UTF-16 puts the surrogate pair D83D DE00 first.
+    val (wide, emoji) = ("\uFF5E", "\uD83D\uDE00")
+    assert(spark.sql(s"SELECT '$wide' <= '$emoji'").head.getBoolean(0))
+    val t = GraftTable.create(spark, tmpDir("graft-lake"), StructType(Seq(StructField("k", StringType))))
+    t.append(Seq(wide).toDF("k"))
+    assert(t.read().filter(s"k <= '$emoji'").count() === 1)
+    t.delete(Some(s"k <= '$emoji'"))
+    assert(t.read().count() === 0)
+  }
+
   test("pruned scans agree with unpruned scans across many predicates") {
     import spark.implicits._
     val root = tmpDir("graft-prop")

@@ -1703,7 +1703,7 @@ class OpsSpec extends SparkSpec {
       ("\"", "q"), ("\\", "s"), ("𝕏", "𝕏"), ("e", "́"))
     val native = ops.Bpe.encodeWith(docs, "text", "doc_id", merges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val declarative = ops.Bpe.encodeWithDeclarative(docs, "text", "doc_id", merges)
+    val declarative = DeclarativeTwins.bpeEncodeWith(docs, "text", "doc_id", merges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(native.toSeq === declarative.toSeq)
   }
@@ -1726,7 +1726,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("id", "vec")
     val got = vecs.select(col("id"), ops.Embeddings.quantize(col("vec")).as("q"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Any](1)))
-    val want = vecs.select(col("id"), ops.Embeddings.quantizeDeclarative(col("vec")).as("q"))
+    val want = vecs.select(col("id"), DeclarativeTwins.quantize(col("vec")).as("q"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Any](1)))
     assert(got.toSeq === want.toSeq)
     // ARRAY<DOUBLE>: the products next to the -0.5 tie (-5e-7 scales to
@@ -1743,7 +1743,7 @@ class OpsSpec extends SparkSpec {
       dvecs.select(col("id"), f(col("vec")).as("q"))
         .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[Any](1))).toSeq
     assert(quantized(ops.Embeddings.quantize) ===
-      quantized(ops.Embeddings.quantizeDeclarative))
+      quantized(DeclarativeTwins.quantize))
   }
 
   test("bpe train learns the same merges on the coalesced and the wide vocab path") {

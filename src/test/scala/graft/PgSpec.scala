@@ -422,6 +422,19 @@ class PgSpec extends SparkSpec {
     } finally c.close()
   }
 
+  test("extended protocol: an UPDATE bound with an apostrophe changes its row") {
+    val c = new Client
+    try {
+      c.query("CREATE TABLE pgap (id BIGINT, s VARCHAR); INSERT INTO pgap VALUES (1, 'a'), (2, 'b')")
+      val (_, _, errs) = c.extendedQueryParams(
+        "UPDATE pgap SET s = $1 WHERE id = $2", Seq(25, 20), Seq(Some("O'Brien"), Some("2")))
+      assert(errs.isEmpty, errs)
+      val (_, rows, _, errs2) = c.query("SELECT id, s FROM pgap ORDER BY id")
+      assert(errs2.isEmpty, errs2)
+      assert(rows === Seq(Seq("1", "a"), Seq("2", "O'Brien")))
+    } finally c.close()
+  }
+
   test("extended protocol: binary-format binds decode by declared OID (psycopg3 default)") {
     val c = new Client
     try {
