@@ -23,6 +23,10 @@ Portability discipline (same contract as gen_fuzz.py, plus DML rules):
   subquery's NULLs and an empty scalar subquery's NULL follow SQL
   three-valued logic in both. The subquery reads the table as the
   sequence left it, so a stale catalog view shows up as a diff.
+- graft-side spellings vary on their own random stream (the DuckDB side
+  and the statement mix are what they are without them): a target table
+  is written bare, as "fa" or as public.fa, a MERGE target may carry an
+  alias with or without AS, and a statement may lead with a comment.
 
 Usage: gen_dml_fuzz.py <nseq> <seed> > sequences.jsonl
 Each line: {"seq": i, "tables": ["fa","fb"], "graft": [...], "duck": [...]}
@@ -41,9 +45,17 @@ STRPOOL = ["alpha", "beta", "gamma", "delta", "x", "yz", "longish_value", "",
            "it''s", "a;b", "x WHERE y", "-- no", "\uff5e", "\U0001f600"]
 
 
+class Plain:
+    """Canonical graft-side spellings: every choice takes its first option."""
+    @staticmethod
+    def choice(options):
+        return options[0]
+
+
 class Gen:
-    def __init__(self, rnd, seq):
+    def __init__(self, rnd, seq, sp=Plain):
         self.rnd = rnd
+        self.sp = sp  # graft-side spellings only
         self.seq = seq
         self.next_id = {"fa": 1, "fb": 1}
         self.merge_n = 0
@@ -114,6 +126,14 @@ class Gen:
 
     # --- statements (return (graft_stmts, duck_stmts)) ----------------------
 
+    def spell(self, t):
+        return self.sp.choice([t, '"%s"' % t, "public." + t])
+
+    def pair(self, fmt, t, *rest):
+        """`fmt` with target table `t` first: graft's spelling, DuckDB's."""
+        lead = self.sp.choice(["", "/* c */ "])
+        return [lead + fmt % ((self.spell(t),) + rest)], [fmt % ((t,) + rest)]
+
     def values_row(self, t):
         # ids mostly unique per table, occasional duplicate for realism
         if self.rnd.random() < 0.15 and self.next_id[t] > 1:
@@ -134,17 +154,15 @@ class Gen:
                           for _, ty in extras)
             return base[:-1] + ext + ")"
         rows = ", ".join(row() for _ in range(self.rnd.randint(1, 5)))
-        s = "INSERT INTO %s (%s) VALUES %s" % (t, cols, rows)
-        return [s], [s]
+        return self.pair("INSERT INTO %s (%s) VALUES %s", t, cols, rows)
 
     def add_column(self, t):
         self.colctr += 1
         ty = self.rnd.choice(["I", "S"])
         name = "c%d" % self.colctr
         self.extra[t].append((name, ty))
-        s = "ALTER TABLE %s ADD COLUMN %s %s" % (
-            t, name, "BIGINT" if ty == "I" else "VARCHAR")
-        return [s], [s]
+        return self.pair("ALTER TABLE %s ADD COLUMN %s %s",
+                         t, name, "BIGINT" if ty == "I" else "VARCHAR")
 
     def drop_column(self, t):
         # only ever drops ADDed columns (base columns stay referenced by
@@ -154,14 +172,12 @@ class Gen:
             return self.ins_values(t)
         i = self.rnd.randrange(len(self.extra[t]))
         name, _ = self.extra[t].pop(i)
-        s = "ALTER TABLE %s DROP COLUMN %s" % (t, name)
-        return [s], [s]
+        return self.pair("ALTER TABLE %s DROP COLUMN %s", t, name)
 
     def ins_select(self, t, o):
         off = self.rnd.randint(1000, 9000)
-        s = ("INSERT INTO %s (id, a, b, s) SELECT id + %d, %s, %s, %s FROM %s WHERE %s"
-             % (t, off, self.int_expr(), self.int_expr(), self.str_expr(), o, self.pred()))
-        return [s], [s]
+        return self.pair("INSERT INTO %s (id, a, b, s) SELECT id + %d, %s, %s, %s FROM %s WHERE %s",
+                         t, off, self.int_expr(), self.int_expr(), self.str_expr(), o, self.pred())
 
     def update(self, t):
         sets = []
@@ -172,25 +188,22 @@ class Gen:
         if self.extra[t] and self.rnd.random() < 0.5:
             name, ty = self.rnd.choice(self.extra[t])
             sets.append("%s = %s" % (name, self.int_expr() if ty == "I" else self.lit_s()))
-        s = "UPDATE %s SET %s WHERE %s" % (t, ", ".join(sets), self.pred())
-        return [s], [s]
+        return self.pair("UPDATE %s SET %s WHERE %s", t, ", ".join(sets), self.pred())
 
     def delete(self, t):
-        s = "DELETE FROM %s WHERE %s" % (t, self.pred())
-        return [s], [s]
+        return self.pair("DELETE FROM %s WHERE %s", t, self.pred())
 
     def delete_in(self, t, o):
-        s = "DELETE FROM %s WHERE id IN (SELECT id FROM %s WHERE %s)" % (t, o, self.pred())
-        return [s], [s]
+        return self.pair("DELETE FROM %s WHERE id IN (SELECT id FROM %s WHERE %s)",
+                         t, o, self.pred())
 
     def update_sub(self, t, o):
         c = self.rnd.choice(["a", "b"])
-        s = "UPDATE %s SET %s = (SELECT max(%s) FROM %s) WHERE %s" % (
-            t, c, self.rnd.choice(["a", "b"]), o, self.pred())
-        return [s], [s]
+        return self.pair("UPDATE %s SET %s = (SELECT max(%s) FROM %s) WHERE %s",
+                         t, c, self.rnd.choice(["a", "b"]), o, self.pred())
 
     def truncate(self, t):
-        return ["TRUNCATE TABLE %s" % t], ["TRUNCATE %s" % t]
+        return self.pair("TRUNCATE TABLE %s", t)[0], ["TRUNCATE %s" % t]
 
     def merge(self, t, o):
         self.merge_n += 1
@@ -208,8 +221,14 @@ class Gen:
         # below because the DELETE physically removes its rows first
         upd_cond = ("u.mb %% %d <> 1" % self.rnd.choice([3, 5])
                     if self.rnd.random() < 0.5 else None)
-        upd_set = "a = u.ma, b = %s" % self.rnd.choice(
-            ["u.mb", "%s.b + 1" % t, "u.ma + u.mb"])
+        upd_rhs = self.rnd.choice(["u.mb", "%s.b + 1", "u.ma + u.mb"])
+        upd_set = "a = u.ma, b = %s" % (upd_rhs.replace("%s", t))
+        # graft's target: its spelling, and an alias (with or without AS)
+        # that the ON condition and SET then name it by
+        alias = self.sp.choice([None, "tt"])
+        ref = alias or t
+        target = self.spell(t) + ("" if alias is None else self.sp.choice([" AS ", " "]) + alias)
+        g_set = "a = u.ma, b = %s" % (upd_rhs.replace("%s", ref))
         ins = "(id, a, b, s) VALUES (u.id, u.ma, u.mb, 'm%d')" % j
         clauses, duck = [], []
         duck.append("CREATE TEMP TABLE __src_%d AS %s" % (j, src))
@@ -222,11 +241,11 @@ class Gen:
         if kind in ("update", "upsert", "full"):
             if upd_cond:
                 clauses.append("WHEN MATCHED AND %s THEN UPDATE SET %s"
-                               % (upd_cond, upd_set))
+                               % (upd_cond, g_set))
                 duck.append("UPDATE %s SET %s FROM __src_%d u WHERE %s.id = u.id AND (%s)"
                             % (t, upd_set, j, t, upd_cond))
             else:
-                clauses.append("WHEN MATCHED THEN UPDATE SET %s" % upd_set)
+                clauses.append("WHEN MATCHED THEN UPDATE SET %s" % g_set)
                 duck.append("UPDATE %s SET %s FROM __src_%d u WHERE %s.id = u.id"
                             % (t, upd_set, j, t))
         if kind in ("upsert", "full"):
@@ -235,21 +254,21 @@ class Gen:
                         "FROM __src_%d u WHERE u.id NOT IN (SELECT id FROM __mids_%d)"
                         % (t, j, j, j))
             self.next_id[t] = max(self.next_id[t], self.next_id[o] + 1)
-        g = "MERGE INTO %s USING (%s) AS u ON %s.id = u.id %s" % (
-            t, src, t, " ".join(clauses))
+        g = self.sp.choice(["", "/* c */ "]) + "MERGE INTO %s USING (%s) AS u ON %s.id = u.id %s" % (
+            target, src, ref, " ".join(clauses))
         duck.append("DROP TABLE __src_%d" % j)
         duck.append("DROP TABLE __mids_%d" % j)
         return [g], duck
 
 
-def gen_sequence(rnd, seq):
-    g = Gen(rnd, seq)
+def gen_sequence(rnd, seq, sp):
+    g = Gen(rnd, seq, sp)
     tables = ["fa", "fb"]
     graft, duck = [], []
     for t in tables:
-        s = "CREATE TABLE %s (id BIGINT, a BIGINT, b BIGINT, s VARCHAR)" % t
-        graft.append(s)
-        duck.append(s)
+        gs, ds = g.pair("CREATE TABLE %s (id BIGINT, a BIGINT, b BIGINT, s VARCHAR)", t)
+        graft += gs
+        duck += ds
         for _ in range(rnd.randint(1, 3)):
             gs, ds = g.ins_values(t)
             graft += gs
@@ -290,7 +309,7 @@ def main():
     n, seed = int(sys.argv[1]), int(sys.argv[2])
     rnd = random.Random(seed)
     for i in range(n):
-        print(json.dumps(gen_sequence(rnd, i)))
+        print(json.dumps(gen_sequence(rnd, i, random.Random("spell-%d-%d" % (seed, i)))))
 
 
 if __name__ == "__main__":

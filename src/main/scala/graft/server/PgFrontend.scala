@@ -748,11 +748,13 @@ class PgFrontend(ctx: GraftContext, port: Int,
   }
 
   private def tagFor(stmt: String): String = {
-    val up = stmt.trim.toUpperCase
-    if (up.startsWith("INSERT")) "INSERT 0 0"
-    else if (up.startsWith("UPDATE")) "UPDATE 0"
-    else if (up.startsWith("DELETE")) "DELETE 0"
-    else up.split("\\s+").take(2).mkString(" ").take(32)
+    val words = SqlText.reader(stmt).head(2).map(_.toUpperCase)
+    words.headOption match {
+      case Some("INSERT") => "INSERT 0 0"
+      case Some("UPDATE") => "UPDATE 0"
+      case Some("DELETE") => "DELETE 0"
+      case _ => words.mkString(" ").take(32)
+    }
   }
 
   // --- wire helpers ---------------------------------------------------------

@@ -140,14 +140,18 @@ object Statements {
       }
     }, 100, TimeUnit.MILLISECONDS)
 
-  /** Upper bound on [[awaitTasksEnded]]'s wait. */
-  private val TaskDrainMs = 10000L
+  /** Upper bound on [[awaitTasksEnded]]'s wait: past any kill latency
+    * seen, so only a task that ignores its interrupt outlasts it. */
+  private val TaskDrainMs = 60000L
 
   /** Wait, up to [[TaskDrainMs]], until no stage of `groupId`'s jobs has a
     * running task. A cancelled job ends at once, but its killed tasks
-    * keep their slots until they next check for interruption — seconds,
-    * for a codegen'd nested-loop join — and a statement submitted
-    * meanwhile queues behind them and can time out too. Waiting here
+    * keep their slots until they next check for interruption — for a
+    * codegen'd nested-loop join, a range batch of streamed rows later:
+    * 1–5 s on 4 cores beside a 2-core JVM, over 10 s beside six busy
+    * processes — and a statement submitted meanwhile queues behind them
+    * and can time out too. The status store keeps up: each task's end
+    * reaches it within milliseconds of the task's finish. Waiting here
     * hands the connection back only once the slots are free; an overrun
     * is logged, not thrown, since the statement's answer is already
     * "cancelled". */

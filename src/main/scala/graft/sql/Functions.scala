@@ -60,29 +60,15 @@ object Functions {
       register(s, n, parse(j))
     }
 
-  private def sqlTypeName(t: String): String = t.toUpperCase match {
-    case "INT" | "INTEGER" | "INT4" => "INT"
-    case "BIGINT" | "INT8" => "BIGINT"
-    case "SMALLINT" | "INT2" => "SMALLINT"
-    case "REAL" | "FLOAT4" | "FLOAT" => "FLOAT"
-    case "DOUBLE" | "FLOAT8" => "DOUBLE"
-    case "TEXT" | "VARCHAR" | "CHAR" | "STRING" => "STRING"
-    case "BOOLEAN" | "BOOL" => "BOOLEAN"
-    case "DATE" => "DATE"
-    case "TIMESTAMP" => "TIMESTAMP"
-    case other => other
-  }
-
   private def register(spark: org.apache.spark.sql.SparkSession, name: String,
                        d: Details): Unit = d.language match {
     case "sql" =>
+      def sqlType(t: String) = GraftContext.sqlType(t).sql
       val params = d.inputTypes.zipWithIndex
-        .map { case (t, i) => s"p${i + 1} ${sqlTypeName(t)}" }.mkString(", ")
-      val body = (1 to d.inputTypes.size).foldLeft(d.data) { (b, i) =>
-        b.replace(s"$$$i", s"p$i")
-      }
+        .map { case (t, i) => s"p${i + 1} ${sqlType(t)}" }.mkString(", ")
+      val body = SqlText.bindParams(d.data)(i => s"p$i")
       spark.sql(
-        s"CREATE OR REPLACE TEMPORARY FUNCTION $name($params) RETURNS ${sqlTypeName(d.returnType)} RETURN $body")
+        s"CREATE OR REPLACE TEMPORARY FUNCTION $name($params) RETURNS ${sqlType(d.returnType)} RETURN $body")
     case "wasm" =>
       // the entrypoint names the module export; defaults to the SQL name
       val entry = if (d.entrypoint.nonEmpty) d.entrypoint else name

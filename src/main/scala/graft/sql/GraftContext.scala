@@ -178,48 +178,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     spark.createDataFrame(java.util.List.of[Row](),
       StructType(Seq(StructField("ok", BooleanType))))
 
-  // --- DDL type mapping (reference src/datafusion/utils.rs:47-178) --------
-
-  private[sql] def sqlType(t: String): DataType = {
-    val up = t.trim.toUpperCase
-    val dec = """(?:NUMERIC|DECIMAL)\s*\(\s*(\d+)\s*(?:,\s*(\d+))?\s*\)""".r
-    up match {
-      case "BOOLEAN" | "BOOL" => BooleanType
-      case "TINYINT" => ByteType
-      case "SMALLINT" | "INT2" => ShortType
-      case "INT" | "INTEGER" | "INT4" => IntegerType
-      case "BIGINT" | "INT8" => LongType
-      case "FLOAT" | "REAL" | "FLOAT4" => FloatType
-      case "DOUBLE" | "FLOAT8" | "DOUBLE PRECISION" => DoubleType
-      case "CHAR" | "VARCHAR" | "TEXT" | "STRING" => StringType
-      case "TIMESTAMP" => TimestampType
-      case "DATE" => DateType
-      case "BYTEA" | "BINARY" => BinaryType
-      case "NUMERIC" | "DECIMAL" => DecimalType(38, 10)
-      case dec(p, s) => DecimalType(p.toInt, Option(s).map(_.toInt).getOrElse(0))
-      case other if other.startsWith("VARCHAR") || other.startsWith("CHAR") => StringType
-      case other =>
-        // nested/JSON/UUID types are rejected for reference parity
-        // (src/datafusion/utils.rs:110-176)
-        throw new IllegalArgumentException(s"unsupported DDL type: $other")
-    }
-  }
-
-  private def parseColumns(colDefs: String): StructType = {
-    // top-level commas only: decimal(10,2) has nested ones
-    StructType(SqlText.splitTop(colDefs, ",").map { cd =>
-      val m = """^"?([\w ]+?)"?\s+(.+?)(\s+NOT\s+NULL)?$""".r
-      cd match {
-        case m(name, tpe, notNull) =>
-          StructField(name.trim, sqlType(tpe), nullable = notNull == null)
-        case _ => throw new IllegalArgumentException(s"cannot parse column def: $cd")
-      }
-    })
-  }
-
-  private def splitName(qname: String): (String, String) = {
-    val parts = qname.replace("\"", "").split('.')
-    if (parts.length == 2) (parts(0), parts(1)) else ("public", parts(0))
+  /** (schema, table) of a name written `tbl` or `sch.tbl`. */
+  private def splitName(parts: Seq[String]): (String, String) = parts match {
+    case Seq(name) => ("public", name)
+    case Seq(sch, name) => (sch, name)
+    case _ => throw new IllegalArgumentException(s"bad table name: ${parts.mkString(".")}")
   }
 
   // --- query-side registration + rewrites ---------------------------------
@@ -388,10 +351,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   private def plan(sql: String, db: String = currentDb): DataFrame = {
     val snap = snapshotSession(db)
     def query(q: String) = snap.session.sql(rewriteQuery(q, snap.session, db, snap.state))
-    sql.trim match {
-      case reExplainAnalyze(q) => explainAnalyze(query(q))
-      case q => query(q)
-    }
+    val r = SqlText.reader(sql)
+    if (r.is("EXPLAIN ANALYZE")) explainAnalyze(query(r.rest())) else query(sql)
   }
 
   /** EXPLAIN ANALYZE (reference parity: DataFusion's runs the plan and
@@ -448,21 +409,24 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         }
         df.createOrReplaceTempView(s"${sch.name}__${t.name}")
         if (sch.name == "public") df.createOrReplaceTempView(t.name)
-        (sch.name, t.name)
+        (sch.name.toLowerCase, t.name.toLowerCase)
       }
-    }
-    val rewritten = SqlText.mapCode(sql) { seg0 =>
-      var seg = seg0
-      registered.foreach { case (sch, t) =>
-        seg = seg.replaceAll(s"(?i)(?<![`\\w])$sch\\.$t(?![`\\w])", s"${sch}__$t")
-      }
-      seg
-    }
-    s.sql(rewritten)
+    }.toSet
+    s.sql(flatNames(sql)((sch, t) => registered((sch.toLowerCase, t.toLowerCase))))
   }
 
-  /** Backtick-quote qualified names of known non-public tables + rewrite
-    * time travel `t('<ts>')` and the change feed `table_changes('t', n)`
+  /** `sql` with each `sch.tbl` for which `flat(sch, tbl)` holds written as
+    * the flat view name `sch__tbl`, backquoted. Names spelled inside a
+    * literal or a comment stay text. */
+  private def flatNames(sql: String)(flat: (String, String) => Boolean): String =
+    SqlText.mapNames(sql) {
+      case sch +: name +: rest if flat(sch, name) => Some(SqlText.ident(s"${sch}__$name" +: rest: _*))
+      case _ => None
+    }
+
+  /** Flatten qualified names of non-public tables, system views and
+    * staging tables (see flatNames) + rewrite time travel `t('<ts>')`
+    * and the change feed `table_changes('t', n)`
     * to version-pinned views registered on `session`, against the
     * snapshot's catalog `state`. Both are matched as calls (a name, `(`,
     * literals, `)`), so their spelling inside a string literal or a
@@ -476,7 +440,7 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         // is idempotent.
         case (Seq("table_changes"), t +: bounds)
             if t.quoted && (bounds.size == 1 || bounds.size == 2) && bounds.forall(!_.quoted) =>
-          val (sch, tbl) = splitName(t.value)
+          val (sch, tbl) = splitName(SqlText.reader(t.value).qname())
           val uuid = state.table(db, sch, tbl).getOrElse(
             throw new IllegalArgumentException(s"table_changes: unknown table ${t.value}"))
           val root = catalog.tableRoot(uuid)
@@ -491,8 +455,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         // called with an ISO instant is rewritten, so a builtin like
         // date('2020-01-01') whose name collides with a table keeps its
         // meaning.
-        case (_, Seq(ts)) if ts.quoted =>
-          val (sch, tbl) = splitName(name.mkString("."))
+        case (_, Seq(ts)) if ts.quoted && name.size <= 2 =>
+          val (sch, tbl) = splitName(name)
           for {
             uuid <- state.table(db, sch, tbl)
             instant <- scala.util.Try(Instant.parse(ts.value)).toOption
@@ -508,114 +472,67 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         case _ => None
       }
     }
-    // qualified non-public names -> backticked flat view names. Applied
-    // to code only: a literal mentioning 'system.table_versions' is
-    // content, not a table reference.
-    val nonPublic = state.tables(db).filter(_._1 != "public") ++
-      Seq(("system", "table_versions", ""), ("system", "dropped_tables", ""),
-        ("information_schema", "tables", ""), ("information_schema", "columns", ""),
-        ("information_schema", "routines", ""), ("information_schema", "df_settings", ""),
-        ("information_schema", "parameters", ""), ("information_schema", "schemata", ""),
-        ("information_schema", "views", ""),
-        ("information_schema", "table_constraints", ""),
-        ("information_schema", "check_constraints", ""),
-        ("staging", "", ""))
-    SqlText.mapCode(sql) { seg0 =>
-      var seg = seg0
-      nonPublic.foreach { case (sch, name, _) =>
-        if (name.nonEmpty)
-          seg = seg.replaceAll(s"(?i)(?<![`\\w])$sch\\.$name(?![`\\w])", s"${sch}__$name")
-      }
-      // staging external tables are registered on creation with flat names
-      seg.replaceAll("(?i)(?<![`\\w])staging\\.(\\w+)(?![`\\w])", "staging__$1")
+    val nonPublic = state.tables(db).collect {
+      case (sch, name, _) if sch != "public" => (sch.toLowerCase, name.toLowerCase)
+    }.toSet
+    flatNames(sql) { (sch, name) =>
+      sch.equalsIgnoreCase("staging") || nonPublic((sch.toLowerCase, name.toLowerCase)) ||
+        Set("system", "information_schema")(sch.toLowerCase) &&
+          session.sessionState.catalog.getTempView(s"${sch}__$name").isDefined
     }
   }
 
   // --- dispatcher ---------------------------------------------------------
 
-  private val reUse = """(?is)^USE\s+([\w"]+)\s*$""".r
-  private val reCreateDb = """(?is)^CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w"]+)\s*$""".r
-  private val reCreateSchema = """(?is)^CREATE\s+SCHEMA\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w"]+)\s*$""".r
-  private val reCreateTableAs = """(?is)^CREATE\s+TABLE\s+([\w."]+)\s+AS\s+(.+)$""".r
-  private val reCreateTable = """(?is)^CREATE\s+TABLE\s+([\w."]+)\s*\((.+)\)\s*$""".r
-  private val reCreateExternal =
-    """(?is)^CREATE\s+EXTERNAL\s+TABLE\s+([\w."]+)\s+STORED\s+AS\s+(\w+)(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?\s+LOCATION\s+'([^']+)'(?:\s+OPTIONS\s*\(([^)]*)\))?\s*$""".r
-  private val reInsertSel = """(?is)^INSERT\s+INTO\s+([\w."]+)\s*(?:\(([^)]*)\))?\s*(SELECT.+|VALUES.+|WITH.+)$""".r
-  private val reUpdate = """(?is)^UPDATE\s+([\w."]+)\s+SET\s+(.+)$""".r
-  private val reDelete = """(?is)^DELETE\s+FROM\s+([\w."]+)(?:\s+WHERE\s+(.+))?$""".r
-  private val reTruncate = """(?is)^TRUNCATE\s+(?:TABLE\s+)?([\w."]+)\s*$""".r
-  private val reDropTable = """(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w."]+)\s*$""".r
-  private val reDropSchema = """(?is)^DROP\s+SCHEMA\s+(?:IF\s+EXISTS\s+)?([\w"]+)\s*$""".r
-  private val reRename = """(?is)^ALTER\s+TABLE\s+([\w."]+)\s+RENAME\s+TO\s+([\w."]+)\s*$""".r
-  private val reAddColumn =
-    """(?is)^ALTER\s+TABLE\s+([\w."]+)\s+ADD\s+COLUMN\s+([\w"]+)\s+([\w() ,]+?)\s*$""".r
-  private val reDropColumn =
-    """(?is)^ALTER\s+TABLE\s+([\w."]+)\s+DROP\s+COLUMN\s+([\w"]+)\s*$""".r
-  private val reAddConstraint =
-    """(?is)^ALTER\s+TABLE\s+([\w."]+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*$""".r
-  private val reDropConstraint =
-    """(?is)^ALTER\s+TABLE\s+([\w."]+)\s+DROP\s+CONSTRAINT\s+(IF\s+EXISTS\s+)?(\w+)\s*$""".r
-  private val reVacuumDb = """(?is)^VACUUM\s+DATABASE\s+([\w"]+)\s*$""".r
-  private val reVacuumTable =
-    """(?is)^VACUUM\s+TABLE\s+([\w."]+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?\s*$""".r
-  private val reOptimize = """(?is)^OPTIMIZE\s+TABLE\s+([\w."]+)\s*$""".r
-  private val reCluster =
-    """(?is)^OPTIMIZE\s+TABLE\s+([\w."]+)\s+CLUSTER\s+BY\s*\(([^)]+)\)\s*$""".r
-  private val reZorder =
-    """(?is)^OPTIMIZE\s+TABLE\s+([\w."]+)\s+ZORDER\s+BY\s*\(([^)]+)\)\s*$""".r
-  private val reBloom =
-    """(?is)^OPTIMIZE\s+TABLE\s+([\w."]+)\s+BLOOM\s+BY\s*\(([^)]+)\)\s*$""".r
-  private val reCreateIncr =
-    """(?is)^CREATE\s+INCREMENTAL\s+AGGREGATE\s+([\w."]+)\s+FROM\s+([\w."]+)\s+GROUP\s+BY\s*\(([^)]+)\)\s+SUM\s*\(([^)]+)\)\s*$""".r
-  private val reRefreshIncr = """(?is)^REFRESH\s+AGGREGATE\s+([\w."]+)\s*$""".r
-  private val reCopyTo = """(?is)^COPY\s+(.+?)\s+TO\s+'([^']+)'(?:\s+WITH\s*\(\s*FORMAT\s+(\w+)\s*\))?\s*$""".r
-  private val reCreateFn =
-    """(?is)^CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+([\w"]+)\s+AS\s+'(.+)'\s*$""".r
-  private val reDropFn = """(?is)^DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?(.+)$""".r
-  private val reConvert = """(?is)^CONVERT\s+'([^']+)'\s+TO\s+GRAFT\s+([\w."]+)\s*$""".r
-  private val reExplainAnalyze = """(?is)^EXPLAIN\s+ANALYZE\s+(.+)$""".r
-  private val reClone =
-    """(?is)^CREATE\s+TABLE\s+([\w."]+)\s+SHALLOW\s+CLONE\s+([\w."]+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*$""".r
-  private val reRestore =
-    """(?is)^RESTORE\s+TABLE\s+([\w."]+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*$""".r
-
   /** Execute one statement; returns its result (DDL/DML → empty). */
   def execute(sql: String): DataFrame = {
     pollPeerCommits() // another process's commits, TTL-bounded (reads too)
-    val res = executeInternal(sql)
-    if (!isReadOnly(sql)) markDirty() // writes invalidate registered views
+    val r = SqlText.reader(sql)
+    val read = isReadOnly(r)
+    val res = executeInternal(sql, r)
+    if (!read) markDirty() // writes invalidate registered views
     res
   }
 
-  private def executeInternal(sql: String): DataFrame = sql.trim match {
-    case reUse(db) =>
-      val d = clean(db)
-      require(catalog.listDatabases.contains(d), s"unknown database $d")
-      currentDb = d
-      emptyResult
-    case reCreateDb(db) =>
-      catalog.createDatabase(clean(db)); emptyResult
-    case reCreateSchema(sch) =>
-      catalog.createSchema(currentDb, clean(sch)); emptyResult
-    case reCreateExternal(qname, fmt, pcols, loc, opts) =>
-      val (_, name) = splitName(qname)
+  /** Graft's own statements — the ones the reference adds to its forked
+    * parser — are told apart by their leading keywords and then read
+    * whole before they act; anything else is planned by Catalyst. */
+  private def executeInternal(sql: String, r: SqlText.Reader): DataFrame = {
+    def tableName() = splitName(r.qname())
+    def names() = r.list(r.name())
+    if (r.is("USE")) {
+      val db = r.name(); r.end()
+      require(catalog.listDatabases.contains(db), s"unknown database $db")
+      currentDb = db
+    } else if (r.is("CREATE DATABASE")) {
+      r.is("IF NOT EXISTS")
+      val db = r.name(); r.end()
+      catalog.createDatabase(db)
+    } else if (r.is("CREATE SCHEMA")) {
+      r.is("IF NOT EXISTS")
+      val sch = r.name(); r.end()
+      catalog.createSchema(currentDb, sch)
+    } else if (r.is("CREATE EXTERNAL TABLE")) {
+      val (_, name) = tableName(); r.want("STORED AS")
+      val fmtUp = r.name().toUpperCase
+      // PARTITIONED BY (reference src/datafusion/parser.rs:601-745):
+      // hive-style key=value directory partitions. Spark's file sources
+      // DISCOVER them (and Catalyst prunes partitions on every filter),
+      // so the declaration is validated against the discovered partition
+      // schema — a typo'd or missing partition layout fails at CREATE,
+      // not as silent full scans later.
+      val declaredPcols = if (r.is("PARTITIONED BY")) Some(names()) else None
+      r.want("LOCATION")
+      val loc = r.string()
       // OPTIONS ('k1' 'v1', 'k2' 'v2') — reference external-table syntax
-      val options: Map[String, String] = Option(opts).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        .map { kv =>
-          val m = """'([^']*)'\s+'([^']*)'""".r
-          kv match {
-            case m(k, v) => k -> v
-            case _ => throw new IllegalArgumentException(s"bad OPTIONS entry: $kv")
-          }
-        }.toMap
+      val options = if (r.is("OPTIONS")) r.list(r.string() -> r.string()).toMap else Map.empty[String, String]
+      r.end()
       // http(s) PARQUET (and ICEBERG metadata) streams with Range requests
       // through HttpRangeFileSystem — footer + touched row groups only,
       // like the reference's object_store/http.rs. Row-oriented formats
       // (CSV/NDJSON) are read whole anyway, so those download to a local
       // temp file ONCE, under the size cap.
       // Scheme-specific: JDBC "locations" are connection URLs, not files.
-      val fmtUp = fmt.toUpperCase
       val isHttp = loc.startsWith("http://") || loc.startsWith("https://")
       val resolvedLoc =
         if (isHttp && (fmtUp == "PARQUET" || fmtUp == "ICEBERG" ||
@@ -623,16 +540,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
           graft.sources.HttpRangeFileSystem.register(spark.sparkContext.hadoopConfiguration)
           graft.sources.HttpRangeFileSystem.rewriteScheme(loc)
         } else if (isHttp && fmtUp != "JDBC")
-          downloadToTmp(loc, fmt.toLowerCase)
+          downloadToTmp(loc, fmtUp.toLowerCase)
         else loc
-      // PARTITIONED BY (reference src/datafusion/parser.rs:601-745):
-      // hive-style key=value directory partitions. Spark's file sources
-      // DISCOVER them (and Catalyst prunes partitions on every filter),
-      // so the declaration is validated against the discovered partition
-      // schema — a typo'd or missing partition layout fails at CREATE,
-      // not as silent full scans later.
-      val declaredPcols = Option(pcols).map(_.split(',').map(_.trim.replace("\"", ""))
-        .filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
       declaredPcols.foreach { _ =>
         require(Set("PARQUET", "CSV", "JSON", "NDJSON")(fmtUp),
           s"PARTITIONED BY applies to directory-listed file formats, not $fmtUp")
@@ -652,8 +561,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
                 fs.partitionSchema.fieldNames.toSeq
               case _ => Seq.empty[String]
             }
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-            r.table match {
+          case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+            v2.table match {
               case ft: org.apache.spark.sql.execution.datasources.v2.FileTable =>
                 ft.fileIndex.partitionSchema.fieldNames.toSeq
               case _ => Seq.empty[String]
@@ -672,39 +581,40 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
           "expected hive-style key=value directories for exactly the declared columns")
       }
       stagingTables(name) = Staging(fmtUp, resolvedLoc, options, df.schema)
-      emptyResult
-    case reClone(dst, src, ver) =>
-      // beyond-reference lake op: ZERO-COPY table clone (O(manifest) —
-      // the new table's v0 references the source's files by absolute
-      // path; writes diverge copy-on-write). Must dispatch before
-      // CREATE TABLE ... AS — "VERSION AS OF" contains an AS.
-      val (ds, dn) = splitName(dst)
-      val (ss, sn) = splitName(src)
-      val srcTable = table(ss, sn) // resolve source BEFORE creating dst
-      createPublishLast(ds, dn) { root =>
-        srcTable.cloneTo(root, Option(ver).map(_.toLong)); ()
+    } else if (r.is("CREATE TABLE")) {
+      val (sch, name) = tableName()
+      if (r.is("SHALLOW CLONE")) {
+        // beyond-reference lake op: ZERO-COPY table clone (O(manifest) —
+        // the new table's v0 references the source's files by absolute
+        // path; writes diverge copy-on-write). Read before CREATE TABLE
+        // ... AS — "VERSION AS OF" contains an AS.
+        val (ss, sn) = tableName()
+        val version = if (r.is("VERSION AS OF")) Some(r.int()) else None
+        r.end()
+        val srcTable = table(ss, sn) // resolve source BEFORE creating dst
+        createPublishLast(sch, name) { root => srcTable.cloneTo(root, version); () }
+      } else if (r.is("AS")) {
+        val query = r.rest()
+        requireNotStaging(sch)
+        val df = plan(query)
+        createPublishLast(sch, name)(root => GraftTable.createAs(df.sparkSession, root, df): Unit)
+      } else {
+        val schema = StructType(r.list(StructField(r.name(),
+          GraftContext.sqlType(r.upTo(",", "NOT")), nullable = !r.is("NOT NULL"))))
+        r.end()
+        requireNotStaging(sch)
+        createPublishLast(sch, name)(root => GraftTable.create(spark, root, schema): Unit)
       }
-      emptyResult
-    case reRestore(qname, ver) =>
+    } else if (r.is("RESTORE TABLE")) {
       // beyond-reference lake op: version rollback as a NEW commit
-      val (sch, name) = splitName(qname)
-      table(sch, name).restore(ver.toLong)
-      emptyResult
-    case reCreateTableAs(qname, query) =>
-      val (sch, name) = splitName(qname)
-      requireNotStaging(sch)
-      val df = plan(query)
-      createPublishLast(sch, name)(root => GraftTable.createAs(df.sparkSession, root, df): Unit)
-      emptyResult
-    case reCreateTable(qname, cols) =>
-      val (sch, name) = splitName(qname)
-      requireNotStaging(sch)
-      val schema = parseColumns(cols)
-      createPublishLast(sch, name)(root => GraftTable.create(spark, root, schema): Unit)
-      emptyResult
-    case reInsertSel(qname, colList, query) =>
-      val (sch0, name) = splitName(qname)
-      val t = table(sch0, name)
+      val (sch, name) = tableName(); r.want("TO VERSION AS OF")
+      val version = r.int(); r.end()
+      table(sch, name).restore(version)
+    } else if (r.is("INSERT INTO")) {
+      val (sch, name) = tableName()
+      val cols = if (r.peek("(")) Some(names()) else None
+      val query = r.rest()
+      val t = table(sch, name)
       // FULL serializability even when the query reads its own target
       // (INSERT INTO t SELECT … FROM t): the input frame is REBUILT
       // inside the retried closure on a snapshot that pins t no older than
@@ -717,12 +627,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       t.retryCommit {
         val m = t.latestManifest
         var df = planSource(query, t, m.version)
-        Option(colList).map(_.trim).filter(_.nonEmpty) match {
-          case Some(cl) =>
-            val names = cl.split(',').map(_.trim.replace("\"", ""))
+        cols match {
+          case Some(names) =>
             require(names.length == df.columns.length,
               s"INSERT column list has ${names.length} columns, query produces ${df.columns.length}")
-            df = df.toDF(names.toIndexedSeq: _*)
+            df = df.toDF(names: _*)
           case None =>
             // no column list: positional mapping onto the table schema
             // (cast-by-position, reference src/context/physical.rs:193-215)
@@ -736,9 +645,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         // the stale-frame window the rebuild closes)
         t.replaceFiles(m, Seq.empty, m.files, df)
       }
-      emptyResult
-    case s if MergeInto.isMerge(s) =>
-      val p = MergeInto.parse(s)
+    } else if (r.peek("MERGE")) {
+      val p = MergeInto.parse(r)
       val (sch, name) = splitName(p.target)
       val t = table(sch, name)
       // by-name source: MergeInto.execute re-evaluates it on every retry
@@ -747,33 +655,27 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       // (same full-serializability closure as INSERT … SELECT above)
       def srcDf = planSource(selectFrom(p.source), t, t.latestManifest.version)
       MergeInto.execute(t, srcDf, p)
-      emptyResult
-    case reUpdate(qname, setAndWhere) =>
-      val (sch, name) = splitName(qname)
-      // split SET assignments from WHERE at the first TOP-LEVEL keyword —
-      // a regex split would bite on WHERE inside a string literal or a
-      // subquery in an assignment expression
-      val (setClause, where) = SqlText.topLevel(setAndWhere, "WHERE").headOption match {
-        case Some(i) =>
-          (setAndWhere.substring(0, i), Some(setAndWhere.substring(i + "WHERE".length).trim))
-        case None => (setAndWhere, None)
-      }
-      val assigns = SqlText.splitTop(setClause, ",").map { a =>
-        val i = a.indexOf('=')
-        require(i > 0, s"bad assignment: $a")
-        (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
-      }
+    } else if (r.is("UPDATE")) {
+      val (sch, name) = tableName()
+      r.want("SET")
+      // assignments end at the first top-level WHERE, not one inside a
+      // string literal or a subquery of an assignment expression
+      val assigns = r.items { val col = r.name(); r.want("="); (col, r.upTo(",", "WHERE")) }
+      val where = if (r.is("WHERE")) Some(r.rest()) else { r.end(); None }
       val (t, rw) = dmlTarget(sch, name, assigns.map(_._2) ++ where)
-      t.update(assigns.map { case (c, e) => (c, rw(e)) }, where.map(rw)); emptyResult
-    case reDelete(qname, where) =>
-      val (sch, name) = splitName(qname)
-      val (t, rw) = dmlTarget(sch, name, Option(where).toSeq)
-      t.delete(Option(where).map(rw)); emptyResult
-    case reTruncate(qname) =>
-      val (sch, name) = splitName(qname)
-      table(sch, name).truncate(); emptyResult
-    case reDropTable(ifExists, qname) =>
-      val (sch, name) = splitName(qname)
+      t.update(assigns.map { case (c, e) => (c, rw(e)) }, where.map(rw))
+    } else if (r.is("DELETE FROM")) {
+      val (sch, name) = tableName()
+      val where = if (r.is("WHERE")) Some(r.rest()) else { r.end(); None }
+      val (t, rw) = dmlTarget(sch, name, where.toSeq)
+      t.delete(where.map(rw))
+    } else if (r.is("TRUNCATE")) {
+      r.is("TABLE")
+      val (sch, name) = tableName(); r.end()
+      table(sch, name).truncate()
+    } else if (r.is("DROP TABLE")) {
+      val ifExists = r.is("IF EXISTS")
+      val (sch, name) = tableName(); r.end()
       // IF EXISTS: a missing table is a no-op, not an error. Implemented
       // by attempting the drop and suppressing the unknown-table failure
       // — NOT check-then-drop, which another process could race between
@@ -782,79 +684,73 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       try catalog.dropTable(currentDb, sch, name)
       catch {
         case e: IllegalArgumentException
-            if ifExists != null && String.valueOf(e.getMessage).startsWith("unknown table") =>
+            if ifExists && String.valueOf(e.getMessage).startsWith("unknown table") =>
       }
-      emptyResult
-    case reDropSchema(schName) =>
-      requireNotStaging(clean(schName))
-      catalog.dropSchema(currentDb, clean(schName)); emptyResult
-    case reAddConstraint(qname, cname, chk) =>
-      val (sch, name) = splitName(qname)
-      table(sch, name).addConstraint(cname, chk)
-      emptyResult
-    case reDropConstraint(qname, ifEx, cname) =>
-      val (sch, name) = splitName(qname)
-      table(sch, name).dropConstraint(cname, ifEx != null)
-      emptyResult
-    case reAddColumn(qname, cname, tpe) =>
-      // beyond-reference schema evolution: O(manifest), no rewrite
-      val (sch, name) = splitName(qname)
-      table(sch, name).addColumn(clean(cname), sqlType(tpe))
-      emptyResult
-    case reDropColumn(qname, cname) =>
-      val (sch, name) = splitName(qname)
-      table(sch, name).dropColumn(clean(cname))
-      emptyResult
-    case reRename(from, to) =>
-      val (fs, fn) = splitName(from); val (ts, tn) = splitName(to)
-      catalog.renameTable(currentDb, fs, fn, ts, tn)
-      emptyResult
-    case reVacuumDb(_) =>
+    } else if (r.is("DROP SCHEMA")) {
+      r.is("IF EXISTS")
+      val sch = r.name(); r.end()
+      requireNotStaging(sch)
+      catalog.dropSchema(currentDb, sch)
+    } else if (r.is("ALTER TABLE")) {
+      val (sch, name) = tableName()
+      if (r.is("RENAME TO")) {
+        val (ts, tn) = tableName(); r.end()
+        catalog.renameTable(currentDb, sch, name, ts, tn)
+      } else if (r.is("ADD CONSTRAINT")) {
+        val cname = r.name(); r.want("CHECK")
+        val check = r.group(); r.end()
+        table(sch, name).addConstraint(cname, check)
+      } else if (r.is("DROP CONSTRAINT")) {
+        val ifExists = r.is("IF EXISTS")
+        val cname = r.name(); r.end()
+        table(sch, name).dropConstraint(cname, ifExists)
+      } else if (r.is("ADD COLUMN")) {
+        // beyond-reference schema evolution: O(manifest), no rewrite
+        table(sch, name).addColumn(r.name(), GraftContext.sqlType(r.rest()))
+      } else if (r.is("DROP COLUMN")) {
+        val cname = r.name(); r.end()
+        table(sch, name).dropColumn(cname)
+      } else r.fail("RENAME TO, ADD or DROP COLUMN, or ADD or DROP CONSTRAINT")
+    } else if (r.is("VACUUM DATABASE")) {
+      r.name(); r.end()
       // dropped-table storage + crash-orphaned unpublished dirs (the
       // same pair the background gcSweep collects)
-      catalog.gcDropped(); sweepUnpublished(); emptyResult
-    case reVacuumTable(qname, retain) =>
-      val (sch, name) = splitName(qname)
+      catalog.gcDropped(); sweepUnpublished()
+    } else if (r.is("VACUUM TABLE")) {
+      val (sch, name) = tableName()
+      val retain = if (r.is("RETAIN")) { val n = r.int().toInt; r.want("VERSIONS"); Some(n) } else None
+      r.end()
       val t = table(sch, name)
-      Option(retain).map(_.toInt) match {
+      retain match {
         // an explicit RETAIN establishes the table's standing retention
         // window (persisted — the background sweep honors it too)
         case Some(n) => t.setRetention(n); t.vacuum(n)
         case None => t.vacuum(t.retentionVersions)
       }
-      emptyResult
-    case reZorder(qname, cols) =>
-      // beyond-reference: multi-dimensional clustering (space-filling curve)
-      val (sch, name) = splitName(qname)
-      table(sch, name).zcluster(cols.split(',').map(_.trim.replace("\"", "")).toSeq)
-      emptyResult
-    case reBloom(qname, cols) =>
-      // beyond-reference: per-file Bloom indexes for point-lookup skipping
-      val (sch, name) = splitName(qname)
-      table(sch, name).bloom(cols.split(',').map(_.trim.replace("\"", "")).toSeq)
-      emptyResult
-    case reCreateIncr(tq, sq, ks, vs) =>
+    } else if (r.is("OPTIMIZE TABLE")) {
+      val (sch, name) = tableName()
+      val t = table(sch, name)
+      // beyond-reference maintenance ops: small-file compaction,
+      // range-clustering for data skipping, multi-dimensional clustering
+      // (space-filling curve) and per-file Bloom indexes for point lookups
+      if (r.atEnd) t.compact()
+      else if (r.is("CLUSTER BY")) { val cols = names(); r.end(); t.cluster(cols) }
+      else if (r.is("ZORDER BY")) { val cols = names(); r.end(); t.zcluster(cols) }
+      else if (r.is("BLOOM BY")) { val cols = names(); r.end(); t.bloom(cols) }
+      else r.fail("CLUSTER BY, ZORDER BY or BLOOM BY")
+    } else if (r.is("CREATE INCREMENTAL AGGREGATE")) {
       // beyond-reference: incrementally-maintained aggregate (CDF + MERGE)
-      val (tsch, tname) = splitName(tq)
-      val (ssch, sname) = splitName(sq)
-      def cols(s: String) = s.split(',').map(_.trim.replace("\"", "")).toSeq
-      IncrementalAgg.create(this, tsch, tname, ssch, sname, cols(ks), cols(vs))
-      emptyResult
-    case reRefreshIncr(tq) =>
-      val (tsch, tname) = splitName(tq)
+      val (tsch, tname) = tableName(); r.want("FROM")
+      val (ssch, sname) = tableName(); r.want("GROUP BY")
+      val keys = names(); r.want("SUM")
+      val sums = names(); r.end()
+      IncrementalAgg.create(this, tsch, tname, ssch, sname, keys, sums)
+    } else if (r.is("REFRESH AGGREGATE")) {
+      val (tsch, tname) = tableName(); r.end()
       IncrementalAgg.refresh(this, tsch, tname)
-      emptyResult
-    case reCluster(qname, cols) =>
-      // beyond-reference maintenance op: range-cluster for data skipping
-      val (sch, name) = splitName(qname)
-      table(sch, name).cluster(cols.split(',').map(_.trim.replace("\"", "")).toSeq)
-      emptyResult
-    case reOptimize(qname) =>
-      // beyond-reference maintenance op: small-file compaction
-      val (sch, name) = splitName(qname)
-      table(sch, name).compact(); emptyResult
-    case reConvert(loc, qname) =>
-      val (sch, name) = splitName(qname)
+    } else if (r.is("CONVERT")) {
+      val loc = r.string(); r.want("TO GRAFT")
+      val (sch, name) = tableName(); r.end()
       // register in place: copy the parquet files into the table dir, then
       // build the manifest over them (no rewrite of row data)
       def convertInto(root: String): Unit = {
@@ -871,19 +767,22 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         case Some(uuid) => convertInto(catalog.tableRoot(uuid))
         case None => createPublishLast(sch, name)(convertInto)
       }
-      emptyResult
-    case reCreateFn(orReplace, name, json) =>
+    } else if (r.is("CREATE FUNCTION") || r.peek("CREATE OR REPLACE FUNCTION")) {
+      val orReplace = r.is("CREATE OR REPLACE FUNCTION")
+      val name = r.name(); r.want("AS")
+      val json = r.string(); r.end()
       // validated on the snapshot: a body may call a function created before
-      Functions.create(catalog, snapshotSession(currentDb).session, clean(name), json,
-        orReplace != null)
-      emptyResult
-    case reDropFn(ifExists, names) =>
-      names.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty)
-        .foreach(n => catalog.dropFunction(n, ifExists != null))
-      emptyResult
-    case reCopyTo(src, path, fmt) =>
+      Functions.create(catalog, snapshotSession(currentDb).session, name, json, orReplace)
+    } else if (r.is("DROP FUNCTION")) {
+      val ifExists = r.is("IF EXISTS")
+      val fns = r.items(r.name()); r.end()
+      fns.foreach(catalog.dropFunction(_, ifExists))
+    } else if (r.is("COPY")) {
+      val src = GraftContext.source(r); r.want("TO")
+      val path = r.string()
+      val format = if (r.is("WITH")) r.list { r.want("FORMAT"); r.name().toLowerCase }.head else "parquet"
+      r.end()
       val df = plan(selectFrom(src))
-      val format = Option(fmt).map(_.toLowerCase).getOrElse("parquet")
       format match {
         case "parquet" => df.write.mode("overwrite").parquet(path)
         case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
@@ -892,8 +791,8 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
         case "delta" => graft.sources.DeltaScan.write(df, path)
         case other => throw new IllegalArgumentException(s"unsupported COPY format $other")
       }
-      emptyResult
-    case other => plan(other)
+    } else return plan(sql)
+    emptyResult
   }
 
   /** Plan a write's source query on a snapshot that pins the target at
@@ -914,11 +813,11 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     if (stale) { markDirty(); snapshotSession(currentDb) } else snap
   }
 
-  /** `SELECT * FROM <table>`, or the query of a `(query)` source. */
-  private def selectFrom(src: String): String = {
-    val body = src.trim
-    if (body.startsWith("(")) body.stripPrefix("(").stripSuffix(")") else s"SELECT * FROM $body"
-  }
+  /** The query of a source read by [[GraftContext.source]]. */
+  private def selectFrom(src: Either[Seq[String], String]): String = src.fold({ parts =>
+    val (sch, name) = splitName(parts)
+    s"SELECT * FROM ${SqlText.ident(SystemTables.viewName(sch, name))}"
+  }, identity)
 
   /** An UPDATE/DELETE target and the rewrite its SET/WHERE expressions get.
     * Only a subquery or a persisted function reaches the catalog; then the
@@ -948,13 +847,13 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
   }
 
   /** True if the single statement is read-only (cacheable GET path). */
-  def isReadOnly(sql: String): Boolean = {
-    val up = sql.trim.toUpperCase
-    Seq("SELECT", "WITH", "VALUES", "SHOW", "EXPLAIN", "DESCRIBE").exists(up.startsWith)
-  }
+  def isReadOnly(sql: String): Boolean = isReadOnly(SqlText.reader(sql))
+
+  private def isReadOnly(r: SqlText.Reader): Boolean =
+    Seq("SELECT", "WITH", "VALUES", "TABLE", "(", "SHOW", "EXPLAIN", "DESCRIBE", "DESC").exists(r.peek)
 
   /** True if the statement is EXPLAIN ANALYZE: a read that runs its query. */
-  def isExplainAnalyze(sql: String): Boolean = reExplainAnalyze.matches(sql.trim)
+  def isExplainAnalyze(sql: String): Boolean = SqlText.reader(sql).peek("EXPLAIN ANALYZE")
 
   /** (table uuid, version) pairs for every graft table the query's
     * ANALYZED plan actually scans — the ETag input (reference
@@ -1016,8 +915,6 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     tmp.toString
   }
 
-  private def clean(s: String) = s.replace("\"", "")
-
   /** The transient staging schema holds external tables only (reference
     * `src/context/mod.rs:124-148`, error text parity with
     * `tests/statements/ddl.rs:496`). */
@@ -1038,6 +935,46 @@ object GraftContext {
     * sized so the slowest realistic CTAS build (a large query writing
     * into its reserved dir) finishes well inside the window. */
   val UnpublishedGraceMs: Long = 60L * 60 * 1000
+
+  /** A DDL type name as Spark's type (reference src/datafusion/utils.rs:47-178). */
+  private[sql] def sqlType(t: String): DataType = {
+    val r = SqlText.reader(t)
+    def size() = if (r.peek("(")) r.list(r.int().toInt) else Nil
+    val dt = r.name().toUpperCase match {
+      case "BOOLEAN" | "BOOL" => BooleanType
+      case "TINYINT" => ByteType
+      case "SMALLINT" | "INT2" => ShortType
+      case "INT" | "INTEGER" | "INT4" => IntegerType
+      case "BIGINT" | "INT8" => LongType
+      case "FLOAT" | "REAL" | "FLOAT4" => FloatType
+      case "DOUBLE" | "FLOAT8" => r.is("PRECISION"); DoubleType
+      case "CHAR" | "CHARACTER" | "VARCHAR" | "TEXT" | "STRING" => r.is("VARYING"); size(); StringType
+      case "TIMESTAMP" => TimestampType
+      case "DATE" => DateType
+      case "BYTEA" | "BINARY" => BinaryType
+      case "NUMERIC" | "DECIMAL" => size() match {
+        case Seq() => DecimalType(38, 10)
+        case Seq(p) => DecimalType(p, 0)
+        case Seq(p, s) => DecimalType(p, s)
+        case _ => r.fail("DECIMAL(precision[, scale])")
+      }
+      case _ =>
+        // nested/JSON/UUID types are rejected for reference parity
+        // (src/datafusion/utils.rs:110-176)
+        throw new IllegalArgumentException(s"unsupported DDL type: ${t.trim.toUpperCase}")
+    }
+    r.end()
+    dt
+  }
+
+  /** A statement's source: a table name, a time-travel call of one, or
+    * the query of `( query )`. */
+  private[sql] def source(r: SqlText.Reader): Either[Seq[String], String] =
+    if (r.peek("(")) Right(r.group())
+    else {
+      val name = r.qname()
+      if (r.peek("(")) Right(s"SELECT * FROM ${SqlText.ident(name: _*)}(${r.group()})") else Left(name)
+    }
 
   case class InlineTable(name: String, path: String, store: Option[String], format: String)
   case class InlineSchema(name: String, tables: Seq[InlineTable])

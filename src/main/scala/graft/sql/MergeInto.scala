@@ -2,6 +2,8 @@ package graft.sql
 
 import graft.lake.{GraftTable, Manifest, Pruning}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,112 +43,94 @@ object MergeInto {
   case class DeleteClause(cond: Option[String]) extends Clause
   case class InsertClause(cond: Option[String], cols: Option[Seq[String]], vals: Option[Seq[String]]) extends Clause // None/None = INSERT *
 
-  case class Parsed(target: String, tAlias: String, source: String, sAlias: String,
-                    onCond: String, clauses: Seq[Clause])
-
-  def isMerge(sql: String): Boolean = sql.trim.toUpperCase.startsWith("MERGE")
+  /** A MERGE read whole: the target's name parts and alias, the source
+    * (see [[GraftContext.source]]) and its alias, ON, the WHEN clauses. */
+  case class Parsed(target: Seq[String], tAlias: String, source: Either[Seq[String], String],
+                    sAlias: String, onCond: String, clauses: Seq[Clause])
 
   // ---------------------------------------------------------------- parse
 
-  private val reUpd =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+)$""".r
-  private val reDel =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*$""".r
-  private val reInsVals =
-    """(?is)^NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*$""".r
-  private val reInsStar =
-    """(?is)^NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT\s+\*\s*$""".r
-
-  /** Parse a MERGE statement; throws IllegalArgumentException with the
-    * expected shape on malformed input. */
-  def parse(sql: String): Parsed = {
-    val s = sql.trim.stripSuffix(";")
-    require(s.toUpperCase.startsWith("MERGE"), "not a MERGE statement")
-    // clause keywords count at the top level only: not inside parentheses,
-    // literals or a CASE … END, whose WHEN is not a MERGE clause
-    def topIndex(kw: String, from: Int): Int =
-      SqlText.topLevel(s, kw).find(_ >= from).getOrElse(-1)
-    val iUsing = topIndex("USING", 0)
-    val iOn = topIndex("ON", math.max(iUsing, 0))
-    val iWhen = topIndex("WHEN", math.max(iOn, 0))
-    require(iUsing > 0 && iOn > iUsing && iWhen > iOn,
-      "expected MERGE INTO <table> [AS a] USING <source> [AS b] ON <cond> WHEN ...")
-
-    def nameAndAlias(seg: String, defaultAlias: String => String): (String, String) = {
-      val parts = seg.trim.split("""(?is)\s+AS\s+|\s+""").filter(_.nonEmpty)
-      parts.length match {
-        case 1 => (parts(0), defaultAlias(parts(0)))
-        case 2 => (parts(0), parts(1).replace("\"", ""))
-        case _ => throw new IllegalArgumentException(s"cannot parse name/alias: $seg")
-      }
-    }
-
-    val intoSeg = s.substring("MERGE".length, iUsing).trim
-    require(intoSeg.toUpperCase.startsWith("INTO"), "expected MERGE INTO")
-    val (target, tAlias) =
-      nameAndAlias(intoSeg.substring(4).trim, n => n.split('.').last.replace("\"", ""))
-
-    val srcSeg = s.substring(iUsing + "USING".length, iOn).trim
-    val (source, sAlias) =
-      if (srcSeg.startsWith("(")) {
-        // balanced subquery then optional alias: the subquery ends at the
-        // first `)` at the top level of the text after its `(`
-        val end = SqlText.topLevel(srcSeg.substring(1), ")").headOption.fold(-1)(_ + 1)
-        require(end > 0, "unbalanced parens in USING subquery")
-        val rest = srcSeg.substring(end + 1).trim
-        val alias = rest.replaceFirst("(?is)^AS\\s+", "").replace("\"", "").trim
-        require(alias.nonEmpty, "USING (subquery) requires an alias")
-        (srcSeg.substring(0, end + 1), alias)
-      } else nameAndAlias(srcSeg, n => n.split('.').last.replace("\"", ""))
-
-    val onCond = s.substring(iOn + "ON".length, iWhen).trim
+  /** Read a MERGE statement; throws IllegalArgumentException saying what
+    * was expected on malformed input. Clause keywords count at the top
+    * level only: not inside parentheses, literals or a CASE … END, whose
+    * WHEN is not a MERGE clause. */
+  def parse(r: SqlText.Reader): Parsed = {
+    r.want("MERGE INTO")
+    val target = r.qname()
+    val tAlias = alias(r, "USING").getOrElse(target.last)
+    r.want("USING")
+    val source = GraftContext.source(r)
+    val sAlias = alias(r, "ON").orElse(source.swap.toOption.map(_.last))
+      .getOrElse(throw new IllegalArgumentException("USING (subquery) requires an alias"))
+    r.want("ON")
+    val onCond = r.upTo("WHEN")
     require(onCond.nonEmpty, "empty ON condition")
-
-    val clauses = SqlText.splitTop(s.substring(iWhen), "WHEN").map {
-      case reUpd(cond, sets) =>
-        val assigns =
-          if (sets.trim == "*") None
-          else Some(SqlText.splitTop(sets, ",").map { a =>
-            val i = a.indexOf('=')
-            require(i > 0, s"bad SET assignment: $a")
-            (a.substring(0, i).trim.replace("\"", ""), a.substring(i + 1).trim)
-          })
-        UpdateClause(Option(cond).map(_.trim), assigns)
-      case reDel(cond) => DeleteClause(Option(cond).map(_.trim))
-      case reInsVals(cond, cols, vals) =>
-        InsertClause(Option(cond).map(_.trim),
-          Some(cols.split(',').map(_.trim.replace("\"", "")).filter(_.nonEmpty).toSeq),
-          Some(SqlText.splitTop(vals, ",")))
-      case reInsStar(cond) => InsertClause(Option(cond).map(_.trim), None, None)
-      case other => throw new IllegalArgumentException(
-        s"unsupported MERGE clause: WHEN $other")
-    }
-    require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
-    require(clauses.count(_.isInstanceOf[UpdateClause]) <= 1 &&
-      clauses.count(_.isInstanceOf[DeleteClause]) <= 1 &&
-      clauses.count(_.isInstanceOf[InsertClause]) <= 1,
+    val clauses = Seq.newBuilder[Clause]
+    while (r.is("WHEN")) clauses += clause(r, tAlias)
+    r.end()
+    val cs = clauses.result()
+    require(cs.nonEmpty, "MERGE needs at least one WHEN clause")
+    require(cs.count(_.isInstanceOf[UpdateClause]) <= 1 &&
+      cs.count(_.isInstanceOf[DeleteClause]) <= 1 &&
+      cs.count(_.isInstanceOf[InsertClause]) <= 1,
       "at most one WHEN MATCHED UPDATE, one WHEN MATCHED DELETE, and one WHEN NOT MATCHED INSERT clause is supported")
-    Parsed(target, tAlias, source, sAlias, onCond, clauses)
+    Parsed(target, tAlias, source, sAlias, onCond, cs)
+  }
+
+  /** `[AS] alias` before the keyword `next`, if there is one. */
+  private def alias(r: SqlText.Reader, next: String): Option[String] =
+    if (r.is("AS") || !r.peek(next)) Some(r.name()) else None
+
+  /** One clause after its WHEN. */
+  private def clause(r: SqlText.Reader, tAlias: String): Clause = {
+    val matched = !r.is("NOT")
+    r.want("MATCHED")
+    val cond = if (r.is("AND")) Some(r.upTo("THEN")) else None
+    r.want("THEN")
+    if (matched && r.is("UPDATE SET"))
+      UpdateClause(cond, if (r.is("*")) None else Some(r.items {
+        // a target-qualified column stands for the column itself
+        val c = r.qname() match {
+          case Seq(a, c) if a.equalsIgnoreCase(tAlias) => c
+          case parts => parts.mkString(".")
+        }
+        r.want("=")
+        (c, r.upTo(",", "WHEN"))
+      }))
+    else if (matched && r.is("DELETE")) DeleteClause(cond)
+    else if (!matched && r.is("INSERT")) {
+      if (r.is("*")) InsertClause(cond, None, None)
+      else {
+        val cols = r.list(r.name())
+        r.want("VALUES")
+        InsertClause(cond, Some(cols), Some(r.list(r.upTo(","))))
+      }
+    } else r.fail(if (matched) "UPDATE SET or DELETE" else "INSERT")
   }
 
   // -------------------------------------------------------------- execute
 
   /** Equi-conjunct extraction for stats pruning: top-level AND conjuncts
     * of the form `<tAlias>.<col> = <expr>` (either side) where the other
-    * side never references the target alias. */
+    * side never references the target alias. Each side is read by Spark's
+    * expression parser; `=` is a lexeme of its own, so `>=`, `<=`, `!=`,
+    * `==` and `<=>` never split a conjunct. */
   private[graft] def pruneKeys(onCond: String, tAlias: String): Seq[(String, String)] = {
-    // the `=` must not be the tail of a two-char operator (>=, <=, !=,
-    // <>): a lookbehind keeps `expr >= t.col` from parsing as an
-    // equi-conjunct with an unparseable "expr >" source side
-    val eq = s"""(?is)^\\s*$tAlias\\.([\\w"]+)\\s*(?<![<>!=])=(?!=)\\s*(.+)$$""".r
-    val eqR = s"""(?is)^(.+?)\\s*(?<![<>!=])=(?!=)\\s*$tAlias\\.([\\w"]+)\\s*$$""".r
-    val tRef = s"""(?i)(?<![\\w"])$tAlias\\.""".r
-    SqlText.splitTop(onCond, "AND").flatMap {
-      case eq(col0, rhs) if tRef.findFirstIn(rhs).isEmpty =>
-        Some((col0.replace("\"", ""), rhs.trim))
-      case eqR(lhs, col0) if tRef.findFirstIn(lhs).isEmpty =>
-        Some((col0.replace("\"", ""), lhs.trim))
-      case _ => None
+    def parsed(e: String) = scala.util.Try(CatalystSqlParser.parseExpression(e)).toOption
+    def targetCol(e: String) = parsed(e).collect {
+      case UnresolvedAttribute(Seq(a, c)) if a.equalsIgnoreCase(tAlias) => c
+    }
+    def refsTarget(e: String) = parsed(e).forall(_.exists {
+      case a: UnresolvedAttribute => a.nameParts.size > 1 && a.nameParts.head.equalsIgnoreCase(tAlias)
+      case _ => false
+    })
+    val conjuncts = SqlText.reader(onCond)
+    conjuncts.items(conjuncts.upTo("AND"), "AND").flatMap { conj =>
+      val sides = SqlText.reader(conj)
+      val (l, r) = (sides.upTo("="), if (sides.is("=")) sides.upTo("=") else "")
+      if (r.isEmpty || !sides.atEnd) None
+      else targetCol(l).filterNot(_ => refsTarget(r)).map((_, r))
+        .orElse(targetCol(r).filterNot(_ => refsTarget(l)).map((_, l)))
     }
   }
 
@@ -194,7 +178,8 @@ object MergeInto {
           sourceHasNoKeys = keys.indices.exists(i => r.isNullAt(2 * i))
           keys.zipWithIndex.filterNot { case (_, i) => r.isNullAt(2 * i) }
             .map { case ((c, _), i) =>
-              s"$c >= ${SqlText.literal(r.get(2 * i))} AND $c <= ${SqlText.literal(r.get(2 * i + 1))}"
+              s"${SqlText.ident(c)} >= ${SqlText.literal(r.get(2 * i))} AND " +
+                s"${SqlText.ident(c)} <= ${SqlText.literal(r.get(2 * i + 1))}"
             }
         }
       val (affected0, untouched) =
@@ -212,7 +197,8 @@ object MergeInto {
 
       def cond3(c: Option[String]): Column = // NULL reads as false
         c.map(e => coalesce(expr(e), lit(false))).getOrElse(lit(true))
-      def tCol(f: String): Column = col(s"${p.tAlias}.$f")
+      def tCol(f: String): Column = col(SqlText.ident(p.tAlias, f))
+      def sCol(f: String): Column = col(SqlText.ident(p.sAlias, f))
 
       // 2. rewrite matched region
       val rewritten: Option[DataFrame] =
@@ -244,15 +230,13 @@ object MergeInto {
           }.getOrElse(lit(false))
           val sets: Map[String, Column] = updC match {
             case Some(UpdateClause(_, Some(as))) =>
-              as.map { case (c0, e) =>
-                // allow t-qualified assignment targets
-                val c = c0.stripPrefix(p.tAlias + ".")
+              as.map { case (c, e) =>
                 require(sch.fieldNames.exists(_.equalsIgnoreCase(c)),
-                  s"MERGE SET references unknown column $c0")
+                  s"MERGE SET references unknown column $c")
                 c.toLowerCase -> expr(e)
               }.toMap
             case Some(UpdateClause(_, None)) => // SET *
-              sch.fields.map(f => f.name.toLowerCase -> col(s"${p.sAlias}.${f.name}")).toMap
+              sch.fields.map(f => f.name.toLowerCase -> sCol(f.name)).toMap
             case None => Map.empty
           }
           Some(guarded
@@ -281,7 +265,7 @@ object MergeInto {
               c0.toLowerCase -> expr(v)
             }.toMap
           case _ => // INSERT *: by name from the source
-            sch.fields.map(f => f.name.toLowerCase -> col(s"${p.sAlias}.${f.name}")).toMap
+            sch.fields.map(f => f.name.toLowerCase -> sCol(f.name)).toMap
         }
         srcOnly.select(sch.fields.map { f =>
           vals.get(f.name.toLowerCase)

@@ -28,9 +28,12 @@ object SystemTables {
     * `system.table_versions` never shows a version its data views can't
     * see, even when a commit lands between registration and the query. */
   case class Pinned(schema: String, name: String, uuid: String, manifest: Manifest.TableManifest) {
-    /** The data view's name: bare for `public`, `sch__tbl` otherwise. */
-    def view: String = if (schema == "public") name else s"${schema}__$name"
+    def view: String = viewName(schema, name)
   }
+
+  /** A table's view name: bare for `public`, `sch__tbl` otherwise. */
+  def viewName(schema: String, name: String): String =
+    if (schema == "public") name else s"${schema}__$name"
 
   private def fields(cols: (String, DataType)*): StructType =
     // primitive columns are non-nullable: the layout the Seq-of-tuples

@@ -47,6 +47,23 @@ class ContextSpec extends SparkSpec {
     c.execute("CREATE TABLE extra.t2 (a BIGINT)")
     c.execute("INSERT INTO extra.t2 VALUES (5)")
     assert(c.execute("SELECT a FROM extra.t2").collect().head.getLong(0) === 5L)
+    // a quoted name is one name: a space or a dot inside it neither
+    // splits it nor is refused, on every statement that names a table
+    Seq("\"my t\"" -> "`my t`", "`a.b`" -> "`a.b`").foreach { case (name, ref) =>
+      c.execute(s"CREATE TABLE $name (id BIGINT, v BIGINT)")
+      c.execute(s"INSERT INTO $name (v, id) VALUES (10, 1), (20, 2)")
+      c.execute(s"UPDATE $name SET v = v + 1 WHERE id = 1")
+      c.execute(s"DELETE FROM $name WHERE id = 2")
+      c.execute(s"MERGE INTO $name USING (SELECT 2 AS id, 5 AS v) AS s ON $ref.id = s.id " +
+        "WHEN NOT MATCHED THEN INSERT *")
+      c.execute(s"MERGE INTO $name AS x USING (SELECT 2 AS id, 6 AS v) s ON x.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v")
+      c.execute(s"OPTIMIZE TABLE $name ZORDER BY (id, v)")
+      assert(c.execute(s"SELECT id, v FROM $ref ORDER BY id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 11L), (2L, 6L)), name)
+      c.execute(s"DROP TABLE $name")
+    }
+    assert(c.catalog.listTables("default").map(_._2).filter(Set("my t", "a.b")).isEmpty)
   }
 
   test("update and delete through SQL with pruning semantics") {
@@ -229,6 +246,15 @@ class ContextSpec extends SparkSpec {
     c.execute(
       """CREATE OR REPLACE FUNCTION addtwo AS '{"language":"sql","input_types":["bigint","bigint"],"return_type":"bigint","data":"$1 + $2 + 1"}'""")
     assert(c.execute("SELECT addtwo(2, 3) AS r").collect().head.getLong(0) === 6L)
+    // DDL type names map as in CREATE TABLE; `$n` binds in code only, and
+    // the JSON is the literal's value, so `''` in it is one quote
+    c.execute(
+      """CREATE FUNCTION blen AS '{"language":"sql","input_types":["BYTEA"],"return_type":"BIGINT","data":"length($1)"}'""")
+    assert(c.execute("SELECT blen(X'0102') AS r").collect().head.getLong(0) === 2L)
+    c.execute(
+      """CREATE FUNCTION tag AS '{"language":"sql","input_types":["TEXT"],"return_type":"TEXT","data":"concat($1, ''$1'')"}'""")
+    assert(c.execute("SELECT tag('a') AS r").collect().head.getString(0) === "a$1")
+    c.execute("DROP FUNCTION blen, tag")
     c.execute("DROP FUNCTION addtwo")
     assert(c.catalog.functions.isEmpty)
   }
@@ -318,6 +344,15 @@ class ContextSpec extends SparkSpec {
     c.execute(s"COPY src TO '$out'")
     c.execute(s"CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '$out'")
     assert(c.execute("SELECT COUNT(*) AS n FROM staging.ext").collect().head.getLong(0) === 2L)
+    // the path is the literal's value: `\\` in the text is one backslash
+    c.execute(s"COPY src TO '$out\\\\x'")
+    assert(new java.io.File(out + "\\x").isDirectory)
+    // a time-travel source reads the version as of its instant
+    val ts = java.time.Instant.ofEpochMilli(c.table("public", "src").latestManifest.timestampMs)
+    Thread.sleep(5) // the next version's timestamp is a later millisecond
+    c.execute("INSERT INTO src VALUES (3, 'z')")
+    c.execute(s"COPY src('$ts') TO '$out-tt'")
+    assert(spark.read.parquet(out + "-tt").count() === 2L)
   }
 
   test("partitioned external tables: declared cols validate against the layout and prune") {
@@ -475,6 +510,11 @@ class ContextSpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual"),
       s"expected JDBC filter pushdown in plan:\n$plan")
+    // an OPTIONS value is the literal's value: `''` in it is one quote
+    c.execute(
+      s"CREATE EXTERNAL TABLE rq STORED AS JDBC LOCATION 'jdbc:derby:$dbDir' " +
+        "OPTIONS ('query' 'SELECT name FROM remote_items WHERE name = ''beta''')")
+    assert(c.execute("SELECT name FROM staging.rq").collect().map(_.getString(0)).toSeq === Seq("beta"))
   }
 
   test("JDBC remote table for an absent vendor driver fails with a clear error") {
@@ -643,6 +683,7 @@ class ContextSpec extends SparkSpec {
     assert(df.collect().head.getLong(0) === 3L)
     assert(c.isReadOnly("SELECT 1"))
     assert(!c.isReadOnly("INSERT INTO m VALUES (3)"))
+    assert(c.isReadOnly("TABLE m") && c.isReadOnly("DESC m"))
   }
 
   test("incremental aggregate: refresh applies only the change feed") {

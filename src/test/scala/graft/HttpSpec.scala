@@ -76,6 +76,15 @@ class HttpSpec extends SparkSpec {
   test("GET /q is read-only") {
     val r = get("/q/" + java.net.URLEncoder.encode("DROP TABLE t", UTF_8))
     assert(r.statusCode() === 405)
+    // a read that starts with `(` is a read: cacheable on GET, and a
+    // POST of it takes no write path (the catalog trigger is untouched)
+    val union = "(SELECT 1 AS a) UNION ALL (SELECT 2 AS a)"
+    val g = get("/q/" + java.net.URLEncoder.encode(union, UTF_8))
+    assert(g.statusCode() === 200 && g.headers().firstValue("ETag").isPresent, g.statusCode())
+    val gen = ctx.catalog.readDataGen()
+    val p = post("/q", union, auth)
+    assert(p.statusCode() === 200 && p.body() === "{\"a\":1}\n{\"a\":2}\n", p.body())
+    assert(ctx.catalog.readDataGen() === gen)
   }
 
   test("ETag: stable across reads, 304 on If-None-Match, changes on write") {

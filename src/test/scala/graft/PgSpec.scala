@@ -322,6 +322,10 @@ class PgSpec extends SparkSpec {
       assert(cols === Seq("i", "l", "d", "s", "b", "n", "dt"))
       assert(rows === Seq(Seq("1", "2", "2.5", "hi", "t", null, "2023-05-01")))
       assert(tags === Seq("SELECT 1"))
+      // a read that starts with `(` returns its rows
+      val (_, rows2, tags2, errs2) = c.query("(SELECT 1 AS a) UNION ALL (SELECT 2 AS a)")
+      assert(errs2.isEmpty && rows2 === Seq(Seq("1"), Seq("2")) && tags2 === Seq("SELECT 2"),
+        (rows2, tags2, errs2))
     } finally c.close()
   }
 
@@ -372,6 +376,8 @@ class PgSpec extends SparkSpec {
       // ParseComplete, BindComplete, RowDescription, DataRow, CommandComplete, CloseComplete, ReadyForQuery
       assert(types.containsSlice(Seq('1', '2', 'T', 'D', 'C', '3', 'Z')), types)
       assert(rows === Seq(Seq("7", "y")))
+      val (_, urows, uerrs) = c.extendedQuery("(SELECT 1 AS a) UNION ALL (SELECT 2 AS a)")
+      assert(uerrs.isEmpty && urows === Seq(Seq("1"), Seq("2")), (urows, uerrs))
       // bound parameters are rejected with a clear error, and the
       // connection recovers after Sync
       val (_, _, errs2) = c.extendedQuery("SELECT 1 AS one") // still usable

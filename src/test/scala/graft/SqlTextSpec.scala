@@ -40,15 +40,31 @@ class SqlTextSpec extends SparkSpec {
     assert(up === "SELECT 'a\\'b' X, \"c\" -- d\n, `e`, F /* g */")
   }
 
-  test("topLevel and splitTop skip parentheses, CASE … END, literals and comments") {
-    val set = "a = 'x WHERE y', b = CASE WHEN c THEN (1, 2) END -- WHERE\n WHERE id = 2"
-    assert(SqlText.topLevel(set, "WHERE") === Seq(set.lastIndexOf("WHERE")))
-    assert(SqlText.splitTop("a = 'x,y', b = f(1, 2) , c = CASE WHEN d THEN 1 END", ",") ===
+  test("Reader.upTo skips parentheses, CASE … END, literals and comments") {
+    val set = SqlText.reader("a = 'x WHERE y', b = CASE WHEN c THEN (1, 2) END -- WHERE\n WHERE id = 2")
+    assert(set.upTo("WHERE") === "a = 'x WHERE y', b = CASE WHEN c THEN (1, 2) END")
+    assert(set.is("WHERE") && set.rest() === "id = 2")
+    def items(sql: String, sep: String) = { val r = SqlText.reader(sql); r.items(r.upTo(sep), sep) }
+    assert(items("a = 'x,y', b = f(1, 2) , c = CASE WHEN d THEN 1 END", ",") ===
       Seq("a = 'x,y'", "b = f(1, 2)", "c = CASE WHEN d THEN 1 END"))
-    assert(SqlText.splitTop("t.k = s.k and t.s = 'a\\' AND b' AND x", "AND") ===
+    assert(items("t.k = s.k and t.s = 'a\\' AND b' AND x", "AND") ===
       Seq("t.k = s.k", "t.s = 'a\\' AND b'", "x"))
     // the `)` closing a leading `(`
-    assert(SqlText.topLevel("SELECT ')' FROM (t)) AS u", ")").head === 19)
+    val src = SqlText.reader("(SELECT ')' FROM (t)) AS u")
+    assert(src.group() === "SELECT ')' FROM (t)" && src.is("AS") && src.name() === "u" && src.atEnd)
+  }
+
+  test("Reader reads names by Spark's quoting rules and literals as Spark reads them") {
+    val r = SqlText.reader("/* c */ Copy \"my \"\"t\"\"\".`a.b``c` TO 'o\\\\x' WITH (FORMAT csv, 'it''s' 'r')")
+    assert(r.peek("COPY") && !r.peek("TO") && r.is("copy"))
+    assert(r.qname() === Seq("my \"t\"", "a.b`c"))
+    r.want("TO")
+    assert(r.string() === "o\\x")
+    assert(r.is("WITH") && r.list(if (r.is("FORMAT")) r.name() else r.string() + r.string()) === Seq("csv", "it'sr"))
+    assert(r.atEnd)
+    // a read that misses says what it expected where
+    val e = intercept[IllegalArgumentException](SqlText.reader("DROP TABLE 'x'").want("DROP TABLE IF"))
+    assert(e.getMessage === "expected DROP TABLE IF at 'DROP' of: DROP TABLE 'x'")
   }
 
   test("$n binds in code only") {
