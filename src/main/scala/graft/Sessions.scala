@@ -135,11 +135,23 @@ object Sessions {
     *    input `ScalePath.small` admits runs in one task, with no
     *    range-sampling job re-running its input stage
     *    (`graft.forceScalePaths=true` restores range partitioning);
+    *  - [[graft.plan.BindLiterals]] in `extraStrategies`: a file scan's
+    *    filter and projection read their numeric, date and timestamp
+    *    comparison literals from the stage's references, so a template
+    *    served with a new key reuses its generated classes;
     *  - [[graft.plan.HoistKernels]] in `extraOptimizations`: a filter
     *    computes each total graft kernel once per row, in a projection
     *    under it, instead of once per inlined spelling.
+    * It also turns off `spark.sql.artifact.isolation.enabled`. With it
+    * on, every session's jobs carry the session's UUID and the executor
+    * builds one class loader per UUID; Spark caches generated classes by
+    * (class loader, source), so the first run of each stage on a new
+    * snapshot session (one after every write) compiled it again. graft
+    * adds no session artifacts (jars, files, classes), so the isolation
+    * protects nothing. Each session's `ArtifactManager` reads the value
+    * on its first job, so it is set here, before the session runs one.
     * Sessions cloned from a tuned one (the per-generation snapshots)
-    * inherit the planner changes.
+    * inherit the planner changes and the isolation setting.
     *
     * INTERACTION NOTE — the raised fallback threshold is session-global,
     * so it also governs Spark's UNBOUNDED-buffer object aggregates
@@ -156,9 +168,11 @@ object Sessions {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (spark.conf.getOption(key).forall(_ == "128"))
       spark.conf.set(key, ObjectAggFallbackGroups.toString)
+    spark.conf.set(org.apache.spark.sql.internal.SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
     val x = spark.experimental
-    if (!x.extraStrategies.contains(graft.plan.SmallSort))
-      x.extraStrategies = graft.plan.SmallSort +: x.extraStrategies
+    Seq(graft.plan.SmallSort, graft.plan.BindLiterals).foreach { s =>
+      if (!x.extraStrategies.contains(s)) x.extraStrategies = s +: x.extraStrategies
+    }
     if (!x.extraOptimizations.contains(graft.plan.HoistKernels))
       x.extraOptimizations = x.extraOptimizations :+ graft.plan.HoistKernels
     spark

@@ -498,6 +498,17 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     * parser — are told apart by their leading keywords and then read
     * whole before they act; anything else is planned by Catalyst. */
   private def executeInternal(sql: String, r: SqlText.Reader): DataFrame = {
+    // IF [NOT] EXISTS: a missing (or, for CREATE, an existing) target is
+    // a no-op, not an error. Implemented by attempting the change and,
+    // when the clause was given, suppressing the catalog failure that
+    // names it — NOT check-then-act, which another process could race
+    // between the two steps (ctx.locked is per-process; the catalog file
+    // is shared) and resurface the very error the clause promises away.
+    def unless(clause: Boolean, failure: String)(change: => Any): Unit =
+      try change
+      catch {
+        case e: IllegalArgumentException if clause && String.valueOf(e.getMessage).contains(failure) =>
+      }
     def tableName() = splitName(r.qname())
     def names() = r.list(r.name())
     if (r.is("USE")) {
@@ -505,13 +516,13 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
       require(catalog.listDatabases.contains(db), s"unknown database $db")
       currentDb = db
     } else if (r.is("CREATE DATABASE")) {
-      r.is("IF NOT EXISTS")
+      val ifNotExists = r.is("IF NOT EXISTS")
       val db = r.name(); r.end()
-      catalog.createDatabase(db)
+      unless(ifNotExists, s"database $db already exists")(catalog.createDatabase(db))
     } else if (r.is("CREATE SCHEMA")) {
-      r.is("IF NOT EXISTS")
+      val ifNotExists = r.is("IF NOT EXISTS")
       val sch = r.name(); r.end()
-      catalog.createSchema(currentDb, sch)
+      unless(ifNotExists, s"schema $sch already exists")(catalog.createSchema(currentDb, sch))
     } else if (r.is("CREATE EXTERNAL TABLE")) {
       val (_, name) = tableName(); r.want("STORED AS")
       val fmtUp = r.name().toUpperCase
@@ -676,21 +687,12 @@ class GraftContext(val spark: SparkSession, val dataDir: String) {
     } else if (r.is("DROP TABLE")) {
       val ifExists = r.is("IF EXISTS")
       val (sch, name) = tableName(); r.end()
-      // IF EXISTS: a missing table is a no-op, not an error. Implemented
-      // by attempting the drop and suppressing the unknown-table failure
-      // — NOT check-then-drop, which another process could race between
-      // the two steps (ctx.locked is per-process; the catalog file is
-      // shared) and resurface the very error IF EXISTS promises away.
-      try catalog.dropTable(currentDb, sch, name)
-      catch {
-        case e: IllegalArgumentException
-            if ifExists && String.valueOf(e.getMessage).startsWith("unknown table") =>
-      }
+      unless(ifExists, "unknown table")(catalog.dropTable(currentDb, sch, name))
     } else if (r.is("DROP SCHEMA")) {
-      r.is("IF EXISTS")
+      val ifExists = r.is("IF EXISTS")
       val sch = r.name(); r.end()
       requireNotStaging(sch)
-      catalog.dropSchema(currentDb, sch)
+      unless(ifExists, s"unknown schema $sch")(catalog.dropSchema(currentDb, sch))
     } else if (r.is("ALTER TABLE")) {
       val (sch, name) = tableName()
       if (r.is("RENAME TO")) {

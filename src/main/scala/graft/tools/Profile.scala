@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.GraftSessions
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -19,6 +21,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    triggers (broadcast builds and collect subqueries included);
   *  - jobs, stages and tasks; task, deserialize and GC time;
   *  - shuffle read/write, memory and disk spill, peak execution memory;
+  *  - generated classes Janino compiled (`CodegenMetrics`) and the time
+  *    it took, in the reported run and in the warm-up run (`cold`): a
+  *    warm query whose plan text is stable compiles nothing;
   *  - one indented line per stage.
   *
   *   scripts/run.sh graft.tools.Profile <sfDir> <query|substr,...> [reps=3]
@@ -43,6 +48,7 @@ object Profile {
     val phasesMs = new ConcurrentHashMap[String, java.lang.Long]()
     @volatile var jobs, executions = 0
     var wall, build = 0.0
+    var compiles, compileNs = 0L
     def stage(id: Int): Stage = stages.computeIfAbsent(id, new Stage(_))
     def all: Seq[Stage] = stages.values.asScala.toSeq.sortBy(_.id)
     def sum(f: Stage => Long): Long = all.map(f).sum
@@ -99,12 +105,16 @@ object Profile {
       GraftSessions.drainListeners(spark)
       run = new Run
       val r = run
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val cNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.mode("overwrite").format("noop").save()
       r.wall = (System.nanoTime() - t0) / 1e9
       r.build = (t1 - t0) / 1e9
+      r.compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      r.compileNs = CodeGenerator.compileTime - cNs0
       GraftSessions.drainListeners(spark)
       r
     }
@@ -117,10 +127,11 @@ object Profile {
       s"width=${spark.conf.get("spark.sql.shuffle.partitions")} reps=$reps heap=${heapMb}M")
     println(f"${"query"}%-28s ${"wall"}%7s ${"build"}%7s ${"qe"}%3s ${"jobs"}%4s ${"stg"}%4s " +
       f"${"tasks"}%5s ${"taskSec"}%8s ${"deser"}%6s ${"gc"}%6s ${"shufR"}%8s ${"shufW"}%8s " +
-      f"${"memSpill"}%8s ${"dskSpill"}%8s ${"peakExec"}%8s  phases(s)")
+      f"${"memSpill"}%8s ${"dskSpill"}%8s ${"peakExec"}%8s ${"cg"}%3s ${"cgMs"}%7s " +
+      f"${"coldCg"}%6s ${"coldMs"}%7s  phases(s)")
     names.foreach { case (name, fn) =>
       try {
-        once(fn) // warm-up: codegen, footers, JIT
+        val cold = once(fn) // warm-up: codegen, footers, JIT
         val r = (1 to reps).map(_ => once(fn)).minBy(_.wall)
         val ph = r.phasesMs.asScala.toSeq.sortBy(_._1)
           .map { case (k, v) => s"$k=${s(v)}" }.mkString(" ")
@@ -128,7 +139,8 @@ object Profile {
           f"${r.all.size}%4d ${r.sum(_.tasks)}%5d ${s(r.sum(_.taskMs))}%8s " +
           f"${s(r.sum(_.deserMs))}%6s ${s(r.sum(_.gcMs))}%6s ${mb(r.sum(_.shuffleRead))}%8s " +
           f"${mb(r.sum(_.shuffleWrite))}%8s ${mb(r.sum(_.memSpill))}%8s " +
-          f"${mb(r.sum(_.diskSpill))}%8s ${mb(r.all.map(_.peakExec).maxOption.getOrElse(0L))}%8s  $ph")
+          f"${mb(r.sum(_.diskSpill))}%8s ${mb(r.all.map(_.peakExec).maxOption.getOrElse(0L))}%8s " +
+          f"${r.compiles}%3d ${r.compileNs / 1e6}%7.1f ${cold.compiles}%6d ${cold.compileNs / 1e6}%7.1f  $ph")
         r.all.foreach { st =>
           println(f"  stage ${st.id}%4d ${s(st.wallMs)}%7s tasks=${st.tasks}%-4d " +
             f"task=${s(st.taskMs)} deser=${s(st.deserMs)} gc=${s(st.gcMs)} " +

@@ -47,6 +47,13 @@ class ContextSpec extends SparkSpec {
     c.execute("CREATE TABLE extra.t2 (a BIGINT)")
     c.execute("INSERT INTO extra.t2 VALUES (5)")
     assert(c.execute("SELECT a FROM extra.t2").collect().head.getLong(0) === 5L)
+    // IF NOT EXISTS on an existing schema and IF EXISTS on a missing one
+    // are no-ops; without the clause both still fail
+    c.execute("CREATE SCHEMA IF NOT EXISTS extra")
+    c.execute("DROP SCHEMA IF EXISTS nope")
+    assert(c.execute("SELECT a FROM extra.t2").collect().head.getLong(0) === 5L)
+    assert(intercept[Exception](c.execute("CREATE SCHEMA extra")).getMessage.contains("schema extra already exists"))
+    assert(intercept[Exception](c.execute("DROP SCHEMA nope")).getMessage.contains("unknown schema nope"))
     // a quoted name is one name: a space or a dot inside it neither
     // splits it nor is refused, on every statement that names a table
     Seq("\"my t\"" -> "`my t`", "`a.b`" -> "`a.b`").foreach { case (name, ref) =>
@@ -64,6 +71,41 @@ class ContextSpec extends SparkSpec {
       c.execute(s"DROP TABLE $name")
     }
     assert(c.catalog.listTables("default").map(_._2).filter(Set("my t", "a.b")).isEmpty)
+  }
+
+  test("a tuned session compiles a template once across keys, UPDATE/DELETE keys and snapshots, and still prunes its scan") {
+    val c = new GraftContext(tuned, tmpDir("graft-bind"))
+    c.execute("CREATE TABLE kv (k BIGINT, d DATE, v VARCHAR)")
+    c.execute("INSERT INTO kv SELECT id, date_add(DATE'1995-01-01', CAST(id AS INT)), CAST(id AS STRING) FROM range(2000)")
+    def read(sql: String) = c.executeRead(sql).collect().map(_.toSeq).toSeq
+    def point(k: Long) = s"SELECT v FROM kv WHERE k = $k"
+    def range(a: Long) = s"SELECT count(*), sum(k) FROM kv WHERE k BETWEEN $a AND ${a + 99} AND d < DATE'2000-01-01'"
+    read(point(5)); read(range(100))
+    assert(compiles(assert(read(point(6)) === Seq(Seq("6")))) === 0)
+    assert(compiles(assert(read(range(300)) === Seq(Seq(100L, (300L to 399L).sum)))) === 0)
+    c.execute("UPDATE kv SET v = 'x' WHERE k = 10")
+    assert(compiles(c.execute("UPDATE kv SET v = 'y' WHERE k = 11")) === 0)
+    c.execute("DELETE FROM kv WHERE k = 12")
+    assert(compiles(c.execute("DELETE FROM kv WHERE k = 13")) === 0)
+    // the same template and key on the snapshot rebuilt after an INSERT
+    read(point(11))
+    c.execute("INSERT INTO kv VALUES (5000, DATE'2001-01-01', 'new')")
+    assert(compiles(assert(read(point(11)) === Seq(Seq("y")))) === 0)
+    assert(read(point(5000)) === Seq(Seq("new")))
+    assert(read(point(13)).isEmpty && read(point(10)) === Seq(Seq("x")))
+    // the scan still prunes and pushes down on the real value: a stock
+    // session over the same lake reads the same files
+    (0 until 4).foreach(i => c.execute(s"INSERT INTO kv SELECT ${10000 + 1000 * i} + id, NULL, 'f' FROM range(1000)"))
+    val stock = new GraftContext(spark, c.dataDir)
+    def scan(ctx: GraftContext) = {
+      val df = ctx.executeRead("SELECT v FROM kv WHERE k = 12345")
+      assert(df.collect().map(_.getString(0)).toSeq === Seq("f"))
+      df.queryExecution.executedPlan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.head
+    }
+    val (bound, unbound) = (scan(c), scan(stock))
+    assert(bound.metadata("PushedFilters").contains("EqualTo(k,12345)"), bound.metadata)
+    assert(bound.metrics("numFiles").value === 1L)
+    assert(bound.metrics("numFiles").value === unbound.metrics("numFiles").value)
   }
 
   test("update and delete through SQL with pruning semantics") {
@@ -481,6 +523,10 @@ class ContextSpec extends SparkSpec {
     c.execute("CREATE TABLE shared_name (a BIGINT)")
     c.execute("INSERT INTO shared_name VALUES (42), (43)")
     assert(c.execute("SELECT COUNT(*) AS n FROM shared_name").collect().head.getLong(0) === 2L)
+    // an existing database: a no-op with IF NOT EXISTS, an error without
+    c.execute("CREATE DATABASE IF NOT EXISTS db2")
+    assert(c.execute("SELECT COUNT(*) AS n FROM shared_name").collect().head.getLong(0) === 2L)
+    assert(intercept[Exception](c.execute("CREATE DATABASE db2")).getMessage.contains("database db2 already exists"))
     c.execute("USE default")
     assert(c.execute("SELECT COUNT(*) AS n FROM shared_name").collect().head.getLong(0) === 1L)
     intercept[Exception](c.execute("USE no_such_db"))

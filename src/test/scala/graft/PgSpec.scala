@@ -428,6 +428,23 @@ class PgSpec extends SparkSpec {
     } finally c.close()
   }
 
+  test("extended protocol: a statement executed with a second bound value compiles nothing") {
+    val tctx = new GraftContext(tuned, tmpDir("graft-pg-bind"))
+    val tfe = new PgFrontend(tctx, 0)
+    tfe.start()
+    val c = new Client(tfe.boundPort)
+    try {
+      c.query("CREATE TABLE pgb (a BIGINT, s VARCHAR); INSERT INTO pgb VALUES (1, 'x'), (2, 'y'), (3, 'z')")
+      val sql = "SELECT s FROM pgb WHERE a >= $1 AND a < $2 ORDER BY a"
+      val (_, rows, errs) = c.extendedQueryParams(sql, Seq(20, 20), Seq(Some("1"), Some("3")))
+      assert(errs.isEmpty && rows === Seq(Seq("x"), Seq("y")), (rows, errs))
+      assert(compiles {
+        val (_, rows2, errs2) = c.extendedQueryParams(sql, Seq(20, 20), Seq(Some("2"), Some("9")))
+        assert(errs2.isEmpty && rows2 === Seq(Seq("y"), Seq("z")), (rows2, errs2))
+      } === 0)
+    } finally { c.close(); tfe.stop() }
+  }
+
   test("extended protocol: an UPDATE bound with an apostrophe changes its row") {
     val c = new Client
     try {

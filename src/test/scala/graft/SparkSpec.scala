@@ -68,6 +68,14 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Classes Janino compiled while `f` ran (Spark's process-wide codegen
+    * metric: the driver's compiles and the tasks' alike). */
+  def compiles(f: => Any): Long = {
+    val before = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
